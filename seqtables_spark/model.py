@@ -219,8 +219,11 @@ class SeqTable:
             raise ValueError("table has no quality data")
         if not as_num:
             return self.reads.select("read_id", "qual")
+        # an empty qual splits to one "" char: a null score, as in cells()
         return explode_chars(self.reads, seq_col="qual", qual_col=None).select(
-            "read_id", "position", (F.ascii("base") - F.lit(self.phred_adjust)).alias("qual")
+            "read_id",
+            "position",
+            F.when(F.col("base") != "", F.ascii("base") - F.lit(self.phred_adjust)).alias("qual"),
         )
 
     # -- simple transforms (thin wrappers; heavy ops live in operators/)
@@ -335,7 +338,9 @@ class SeqTable:
         """Reference get_quality_dist (seqtables.py:1328-1377)."""
         from .operators.quality import quality_dist
 
-        cells = self.cells()
+        # only qual is scored: exploding seq too adds nothing that
+        # survives quality_dist's non-null qual filter
+        cells = self.get_quality()
         if positions is not None:
             cells = cells.filter(F.col("position").isin(list(positions)))
         return quality_dist(

@@ -7,24 +7,38 @@ Parity targets (file:line in /root/reference):
   - quality_filter:    seqtables/core/seqtables.py:1223-1258
   - convert_low_bases_to_null: seqtables/core/seqtables.py:1260-1303
 
-Scale notes. quality_dist joins cells against a tiny broadcast bins
-table on a BETWEEN range condition (broadcast nested loop over ~60
-bins - cheap, no shuffle of the big side). Percentiles are EXACT but
-computed from a (bin x qual) histogram rather than a sort-based
-percentile() over the raw cells: phred is a small integer domain
-(~0..45), so one partial+final hash aggregate collapses each map
-partition to at most |bins| x 46 rows before the exchange, and the
-interpolation runs on that tiny table with window functions. At
-100 TB the shuffle carries kilobytes. quality_filter computes the
-per-read pass predicate with a single groupBy(read_id) and applies
-it with LEFT SEMI joins; no data is collected to the driver.
+Scale notes. Both operators are one lazy pass over the reads; building
+either plan runs no Spark job.
+
+quality_dist aggregates the scored cells once into a (position x qual)
+count histogram. Partial aggregation collapses each map partition
+before the exchange, so the shuffle carries at most P x |phred| rows
+per partition, never cells. Everything else derives from that
+histogram:
+  - preset bins ("even", "fastqc") take min/max position from an
+    unpartitioned window over the histogram (one single-partition
+    task over <= P x |phred| rows) and assign bins by arithmetic;
+  - an explicit bin list is attached to the histogram rows by
+    _attach_bins (a literal-array lookup, or a broadcast range join
+    when bins overlap);
+  - counts are summed by (bin, qual), and the EXACT percentiles are
+    interpolated on that tiny table with window functions (phred is a
+    small integer domain, ~0..45), not by a sort-based percentile()
+    over the raw cells.
+At 100 TB the shuffles carry kilobytes.
+
+quality_filter is a row-local predicate on reads: it counts the
+considered and passing phred values of each qual string in place. No
+explode, no shuffle, no join on reads; only the insertion table is
+semi-joined to the surviving read ids.
 """
 
 from __future__ import annotations
 
+import math
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from ..model import SeqTable
 
@@ -56,9 +70,9 @@ _BIN_LOOKUP_MAX_SPAN = 8192
 
 
 def _attach_bins(spark, qcells: DataFrame, bin_list) -> DataFrame:
-    """Attach (bin_name, bin_lo, bin_hi) to each cell row and drop
-    rows covered by no bin (inner-join semantics, e.g. the fastqc
-    (75,79) gap).
+    """Attach (bin_name, bin_lo, bin_hi) to each row of ``qcells``
+    (cells or (position, qual) histogram rows) and drop rows covered
+    by no bin (inner-join semantics, e.g. the fastqc (75,79) gap).
 
     Fast path (round 12, guide §3): when the bins are non-overlapping
     and span a bounded position domain — always true for the
@@ -126,6 +140,50 @@ def _attach_bins(spark, qcells: DataFrame, bin_list) -> DataFrame:
     )
 
 
+def _preset_bins(hist: DataFrame, preset: str) -> DataFrame:
+    """Attach (bin_name, bin_lo, bin_hi) to each histogram row by
+    arithmetic on its position, with the presets' min/max taken from
+    an unpartitioned window over the histogram (at most P x |phred|
+    rows). Rows covered by no bin are dropped, as in _attach_bins.
+
+    ``even`` is even_bins(min, max): lo + floor((p-lo)/size)*size,
+    capped at max. ``fastqc`` is fastqc_bins(max) restricted to
+    min <= bin_lo <= max: singletons below 10, width 5 below 300 with
+    no (75,79) bin, width 10 from 300 on, where range(300, max, 10)
+    keeps only tails with bin_lo < max."""
+    whole = Window.partitionBy()
+    hist = hist.withColumns(
+        {"_lo": F.min("position").over(whole), "_hi": F.max("position").over(whole)}
+    )
+    lo, hi = F.col("_lo"), F.col("_hi")
+    p = F.col("position")
+    if preset == "fastqc":
+        step = F.when(p < 10, 1).when(p < 300, 5).otherwise(10)
+        b_lo = p - p % step
+        b_hi = b_lo + step - 1
+        keep = (
+            (p >= 1)
+            & ~p.between(75, 79)
+            & (b_lo >= lo)
+            & ((p < 300) | (b_lo < hi))
+        )
+    else:
+        size = F.greatest(F.floor((hi - lo + 1) / 10), F.lit(1))
+        b_lo = p - (p - lo) % size
+        b_hi = F.least(b_lo + size - 1, hi)
+        keep = F.lit(True)
+    name = F.when(b_lo == b_hi, b_lo.cast("string")).otherwise(
+        F.concat(b_lo.cast("string"), F.lit("-"), b_hi.cast("string"))
+    )
+    return hist.filter(keep).select(
+        name.alias("bin_name"),
+        b_lo.cast("long").alias("bin_lo"),
+        b_hi.cast("long").alias("bin_hi"),
+        "qual",
+        "c",
+    )
+
+
 def quality_dist(
     cells: DataFrame,
     bins: str | Sequence[tuple[int, int]] = "even",
@@ -143,6 +201,8 @@ def quality_dist(
     linear interpolation (numpy/Spark `percentile` semantics:
     rank = p*(n-1), v = v[floor] + frac*(v[ceil] - v[floor])), computed
     from the per-bin quality histogram - see module docstring.
+    Building the plan runs no Spark job; a table with no scored cells
+    gives an empty result.
     """
     qcells = cells.filter(F.col("qual").isNotNull())
     if exclude_null_quality:
@@ -150,22 +210,18 @@ def quality_dist(
     if sample_fraction:
         qcells = qcells.sample(fraction=sample_fraction, seed=seed)
 
-    if isinstance(bins, str):
-        lohi = qcells.agg(F.min("position"), F.max("position")).first()
-        min_pos, max_pos = int(lohi[0]), int(lohi[1])
-        bin_list = fastqc_bins(max_pos) if bins == "fastqc" else even_bins(min_pos, max_pos)
-        bin_list = [b for b in bin_list if b[0] >= min_pos and b[0] <= max_pos]
-    else:
-        bin_list = [(int(lo), int(hi)) for lo, hi in bins]
-
+    # (position x qual) histogram: the ONLY aggregation that sees the
+    # raw cells; partial aggregation bounds its shuffle at P*|phred|
+    hist = qcells.groupBy("position", "qual").agg(F.count(F.lit(1)).alias("c"))
     spark = SparkSession.getActiveSession()
-    joined = _attach_bins(spark, qcells, bin_list)
+    if isinstance(bins, str):
+        binned = _preset_bins(hist, bins)
+    else:
+        binned = _attach_bins(spark, hist, [(int(lo), int(hi)) for lo, hi in bins])
     pset = sorted(set(int(p) for p in percentiles) | {0, 10, 25, 50, 75, 90, 100})
 
-    # (bin x qual) histogram: the ONLY aggregation that sees the raw
-    # cells; partial aggregation bounds the shuffle at |bins|*|phred|.
-    hist = joined.groupBy("bin_name", "bin_lo", "bin_hi", "qual").agg(
-        F.count(F.lit(1)).alias("c")
+    hist = binned.groupBy("bin_name", "bin_lo", "bin_hi", "qual").agg(
+        F.sum("c").alias("c")
     )
     bywin = Window.partitionBy("bin_name")
     cumwin = bywin.orderBy("qual").rowsBetween(Window.unboundedPreceding, 0)
@@ -218,6 +274,14 @@ def quality_dist(
     return out
 
 
+def _n_codes_at_least(qual: Column, code: int) -> Column:
+    """Number of characters of ``qual`` whose code point is >= code:
+    a codegen'd string scan, no split into an array."""
+    if code <= 0:
+        return F.length(qual)
+    return F.length(F.regexp_replace(qual, f"[\\x{{0}}-\\x{{{code - 1:x}}}]", ""))
+
+
 def quality_filter(
     st: SeqTable,
     q: int,
@@ -226,17 +290,28 @@ def quality_filter(
 ) -> SeqTable:
     """Keep reads where >= p% of (non-null-quality) bases have
     phred >= q; the insertion table is filtered to survivors too
-    (reference seqtables.py:1223-1258)."""
-    cells = st.cells()
-    considered = cells.filter(F.col("qual") > 0) if ignore_null_qual else cells
-    good = (
-        considered.groupBy("read_id")
-        .agg((F.avg((F.col("qual") >= q).cast("double")) * 100).alias("pct"))
-        .filter(F.col("pct") >= p)
-        .select("read_id")
+    (reference seqtables.py:1223-1258).
+
+    A row-local predicate on ``reads``: each read is judged on its own
+    qual string, so ``read_id`` is the row key and must be unique.
+    A base's phred is its qual character's code point minus
+    phred_adjust; bases past the end of qual, and an empty or null
+    qual, score null and are never considered, and a read with nothing
+    considered is dropped. ``n_good / n_considered * 100`` is the
+    double arithmetic of an avg over 0/1 flags, so the cut is exact."""
+    qual = F.coalesce(F.col("qual"), F.lit(""))
+    # lowest considered code point: phred > 0, or any scored base
+    lowest = st.phred_adjust + 1 if ignore_null_qual else 0
+    n_considered = _n_codes_at_least(qual, lowest)
+    n_good = _n_codes_at_least(qual, max(math.ceil(q) + st.phred_adjust, lowest))
+    reads = st.reads.filter(
+        F.when(n_considered > 0, n_good / n_considered * 100 >= p)
     )
-    reads = st.reads.join(good, "read_id", "left_semi")
-    ins = st.insertions.join(good, "read_id", "left_semi") if st._insertions is not None else None
+    ins = (
+        st.insertions.join(reads.select("read_id"), "read_id", "left_semi")
+        if st._insertions is not None
+        else None
+    )
     return SeqTable(reads, ins, st.seq_type, st.phred_adjust, st.fillna_val)
 
 

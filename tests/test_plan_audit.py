@@ -106,3 +106,32 @@ def test_planaudit_artifact_invariants():
     # round 11: join-strategy invariance across the audited sf dirs
     # (sf0.01 + sf1 = four decades when run per the round protocol)
     assert art.get("strategy_deltas", []) == []
+
+
+def test_single_part_window_census(spark):
+    """The census counts Window nodes with no PARTITION BY, ordered or
+    not, and ignores partitioned ones; the quality_dist presets carry
+    exactly one (the min/max over the position histogram)."""
+    from pyspark.sql import Window, functions as F
+
+    from seqtables_spark.operators.quality import quality_dist
+    from tools.plan_audit import SINGLE_PART_WINDOW_BOUNDED, audit_plan
+
+    def census(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return audit_plan(plan)["single_part_window"]
+
+    df = spark.range(50).withColumn("g", F.col("id") % 3)
+    assert census(df.withColumn("m", F.max("id").over(Window.partitionBy()))) == 1
+    assert census(df.withColumn("r", F.row_number().over(Window.orderBy(F.col("id") % 7)))) == 1
+    assert census(df.withColumn("m", F.max("id").over(Window.partitionBy("g")))) == 0
+    assert census(df.withColumn("r", F.row_number().over(Window.partitionBy("g").orderBy("id")))) == 0
+
+    cells = spark.createDataFrame(
+        [(f"r{i}", i % 9 + 1, i % 30 + 1) for i in range(60)],
+        "read_id string, position long, qual long",
+    )
+    assert census(quality_dist(cells, bins="fastqc")) == 1
+    assert census(quality_dist(cells, bins="even")) == 1
+    assert census(quality_dist(cells, bins=[(1, 4), (5, 9)])) == 0
+    assert "quality_dist_fastqc" in SINGLE_PART_WINDOW_BOUNDED

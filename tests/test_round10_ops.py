@@ -391,6 +391,24 @@ class TestPlanBuildPurity:
         out = interval_overlap_join(stream, batch, "s", "e", 10)
         assert out.isStreaming  # lazy form composes into a stream plan
 
+    def _quality_table(self, spark):
+        from seqtables_spark.model import SeqTable
+
+        return SeqTable(spark.createDataFrame(
+            [(f"r{i}", "ACGT" * 5, "".join(chr(34 + (i + j) % 40) for j in range(20)), 1 + i % 3)
+             for i in range(30)],
+            "read_id string, seq string, qual string, pos_start int",
+        ))
+
+    @pytest.mark.parametrize("preset", ["even", "fastqc"])
+    def test_get_quality_dist_preset_is_pure(self, spark, preset):
+        st = self._quality_table(spark)
+        self._assert_no_jobs(spark, lambda: st.get_quality_dist(bins=preset))
+
+    def test_quality_filter_is_pure(self, spark):
+        st = self._quality_table(spark)
+        self._assert_no_jobs(spark, lambda: st.quality_filter(20, 90).reads)
+
 
 class TestAutoBinWidthSkewClamp:
     def test_zero_length_skew_bounds_replication(self, spark):

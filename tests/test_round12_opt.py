@@ -400,10 +400,12 @@ def test_curate_funnel_counts_need_no_join(monkeypatch, spark):
 
 
 def test_quality_dist_lookup_matches_range_join(spark):
-    """The element_at literal-array bin assignment must be
-    row-identical to the broadcast range join it replaced, including
-    the fastqc (75,79) coverage gap (rows there are DROPPED, the
-    inner-join semantics)."""
+    """The fastqc preset's arithmetic bins must be row-identical to
+    the explicit bin list the preset stands for (fastqc_bins(max)
+    restricted to min <= lo <= max), through both the element_at
+    literal-array lookup and the broadcast range join, including the
+    (75,79) coverage gap (rows there are DROPPED, the inner-join
+    semantics)."""
     from seqtables_spark.operators import quality as Q
 
     rows = [
@@ -414,28 +416,31 @@ def test_quality_dist_lookup_matches_range_join(spark):
     cells = spark.createDataFrame(
         rows, "read_id string, position long, qual long"
     )
+    explicit = [(lo, hi) for lo, hi in Q.fastqc_bins(95) if 1 <= lo <= 95]
     got = {
         tuple(r) for r in Q.quality_dist(cells, bins="fastqc").collect()
     }
+    want = {tuple(r) for r in Q.quality_dist(cells, bins=explicit).collect()}
     # force the fallback path by monkeying the span guard to 0
     orig = Q._BIN_LOOKUP_MAX_SPAN
     try:
         Q._BIN_LOOKUP_MAX_SPAN = 0
-        want = {
-            tuple(r) for r in Q.quality_dist(cells, bins="fastqc").collect()
+        joined = {
+            tuple(r) for r in Q.quality_dist(cells, bins=explicit).collect()
         }
     finally:
         Q._BIN_LOOKUP_MAX_SPAN = orig
-    assert got == want
+    assert got == want == joined
     # the (75,79) gap: no bin named for those positions in the output
     for r in got:
         assert not any(str(p) in r[0].split("-") for p in (76, 77, 78))
 
 
 def test_quality_dist_lookup_plan_has_single_cross(spark):
-    """Plan pin: with preset bins the only nested-loop node left is
-    the tiny hist x percentile cross — the cells-side range join is
-    a row-local projection now."""
+    """Plan pin: with preset bins the only nested-loop node is the
+    tiny hist x percentile cross (the bins are arithmetic on the
+    position histogram); an explicit non-overlapping bin list is a
+    row-local element_at lookup, not a range join."""
     from seqtables_spark.operators.quality import quality_dist
 
     cells = spark.createDataFrame(
@@ -449,7 +454,10 @@ def test_quality_dist_lookup_plan_has_single_cross(spark):
     # hist x pct cross
     exec_plan = df._jdf.queryExecution().executedPlan().toString()
     assert exec_plan.count("BroadcastNestedLoopJoin") == 1
-    assert "element_at" in _plan(df)
+    listed = quality_dist(cells, bins=[(1, 3), (4, 6), (7, 9)])
+    exec_plan = listed._jdf.queryExecution().executedPlan().toString()
+    assert exec_plan.count("BroadcastNestedLoopJoin") == 1
+    assert "element_at" in _plan(listed)
 
 
 def test_quality_dist_overlapping_bins_fall_back_to_join(spark):

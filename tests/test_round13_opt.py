@@ -168,6 +168,27 @@ def test_quality_dist_empty_bins_returns_empty(spark):
     assert {"bin_name", "bin_lo", "bin_hi"} <= set(out.columns)
 
 
+def test_quality_dist_preset_without_scored_cells_returns_empty(spark):
+    """Preset bins over a table with no scored cells (every qual '!',
+    or a filtered-empty table) raised TypeError on the eager min/max;
+    the lazy preset returns an empty frame with the usual schema."""
+    from seqtables_spark.model import SeqTable
+    from seqtables_spark.operators.quality import quality_dist
+
+    st = SeqTable(
+        spark.createDataFrame(
+            [("r1", "ACGT", "!!!!", 1), ("r2", "AC", None, 1)],
+            "read_id string, seq string, qual string, pos_start int",
+        )
+    )
+    for preset in ("even", "fastqc"):
+        out = st.get_quality_dist(bins=preset)
+        assert out.collect() == []
+        assert {"bin_name", "bin_lo", "bin_hi", "mean", "p50"} <= set(out.columns)
+        filtered = st.quality_filter(20, 50.0).cells()
+        assert quality_dist(filtered, bins=preset).collect() == []
+
+
 def test_bucketed_join_database_is_pid_scoped(spark):
     """A persistent metastore in the calling session's cwd must never
     resolve the bucket database to a stale location from a dead
