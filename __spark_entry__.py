@@ -2062,9 +2062,7 @@ def q_fastq_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     sources/fastq_datasource). The result is value-checked against the
     direct SQL derivation, so the FASTQ source/sink pair carries a
     full oracle even though the driver testdata ships no FASTQ."""
-    import hashlib
     import os
-    import tempfile
 
     from seqtables_spark.sources.fastq import write_fastq
     from seqtables_spark.sources.fastq_datasource import register_fastq_source
@@ -2087,9 +2085,7 @@ def q_sam_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     '@', optional-tag extraction), value-checked against the direct
     SQL derivation. flag/pos/mapq exercise the typed casts; XM the
     tag-map path."""
-    import hashlib
     import os
-    import tempfile
 
     from seqtables_spark.sources.sam import read_sam
 
@@ -2131,6 +2127,39 @@ def _acgt24():
             ),
         ),
     )
+
+
+def _acgt_rows(spark: SparkSession, sf_dir: str) -> list:
+    """The capped, read_id-ordered (read_id, seq, qual) rows of the
+    doc-derived reads with the ACGT projection as `seq`, collected to
+    the driver: the fixture source of the driver-side BAM region and
+    bowtie queries (capped exactly like the BAM roundtrip fixture)."""
+    rid = F.col("read_id").cast("long")
+    return (
+        _doc_reads(spark, sf_dir)
+        .filter(rid < _BAM_RT_CAP)
+        .select("read_id", _acgt24().alias("seq"), "qual")
+        .orderBy(rid)
+        .limit(_BAM_RT_CAP)
+        .collect()
+    )
+
+
+def _write_sorted_bam(spark: SparkSession, sf_dir: str, prefix: str) -> str:
+    """Write the coordinate-sorted region fixture BAM (read i at
+    pos0 = 3*i on ref1, one all-M CIGAR each) to this query's own temp
+    path and return the path."""
+    from seqtables_spark.sources.bam import encode_bam
+
+    records = [
+        (r["read_id"], 0, "ref1", 3 * int(r["read_id"]) + 1, 60,
+         f"{len(r['seq'])}M", r["seq"], r["qual"])
+        for r in _acgt_rows(spark, sf_dir)
+    ]
+    path = _rt_tmp(prefix, sf_dir, ".bam")
+    with open(path, "wb") as fh:
+        fh.write(encode_bam(records, [("ref1", 3 * len(records) + 30)]))
+    return path
 
 
 def q_bam_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2194,26 +2223,9 @@ def q_bam_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     strictly fewer BGZF members than a scan is pinned in
     tests/test_bam.py::test_region_fetch_reads_fewer_bytes_than_full_scan.
     Oracle replays the overlap predicate on the same derived reads."""
-    from seqtables_spark.sources.bam import encode_bam, read_bam_region
+    from seqtables_spark.sources.bam import read_bam_region
 
-    reads = _doc_reads(spark, sf_dir)
-    rid = F.col("read_id").cast("long")
-    nt = _acgt24()
-    rows = (
-        reads.filter(rid < _BAM_RT_CAP)
-        .select("read_id", nt.alias("seq"), "qual")
-        .orderBy(rid)
-        .limit(_BAM_RT_CAP)
-        .collect()
-    )
-    records = [
-        (r["read_id"], 0, "ref1", 3 * int(r["read_id"]) + 1, 60,
-         f"{len(r['seq'])}M", r["seq"], r["qual"])
-        for r in rows
-    ]
-    path = _rt_tmp("seqtables_bam_region", sf_dir, ".bam")
-    with open(path, "wb") as fh:
-        fh.write(encode_bam(records, [("ref1", 3 * len(records) + 30)]))
+    path = _write_sorted_bam(spark, sf_dir, "seqtables_bam_region")
     df = read_bam_region(
         spark, path, "ref1", BAM_REGION_START, BAM_REGION_END,
         records_per_chunk=64,
@@ -2230,26 +2242,8 @@ def q_bam_region_bai(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same window, same oracle, same result as bam_region — the two
     index paths are pinned equal in tests/test_bai.py as well."""
     from seqtables_spark.sources.bai import read_bam_region_bai, write_bai
-    from seqtables_spark.sources.bam import encode_bam
 
-    reads = _doc_reads(spark, sf_dir)
-    rid = F.col("read_id").cast("long")
-    nt = _acgt24()
-    rows = (
-        reads.filter(rid < _BAM_RT_CAP)
-        .select("read_id", nt.alias("seq"), "qual")
-        .orderBy(rid)
-        .limit(_BAM_RT_CAP)
-        .collect()
-    )
-    records = [
-        (r["read_id"], 0, "ref1", 3 * int(r["read_id"]) + 1, 60,
-         f"{len(r['seq'])}M", r["seq"], r["qual"])
-        for r in rows
-    ]
-    path = _rt_tmp("seqtables_bam_region_bai", sf_dir, ".bam")
-    with open(path, "wb") as fh:
-        fh.write(encode_bam(records, [("ref1", 3 * len(records) + 30)]))
+    path = _write_sorted_bam(spark, sf_dir, "seqtables_bam_region_bai")
     write_bai(path)
     df = read_bam_region_bai(
         spark, path, "ref1", BAM_REGION_START, BAM_REGION_END
@@ -2264,27 +2258,9 @@ def q_bam_region_csi(spark: SparkSession, sf_dir: str) -> DataFrame:
     the BGZF-wrapped CSI writer at the default (min_shift=14,
     depth=5) geometry, and fetch the same window as bam_region /
     bam_region_bai — three index paths, one oracle, one result."""
-    from seqtables_spark.sources.bam import encode_bam
     from seqtables_spark.sources.csi import read_bam_region_csi, write_csi
 
-    reads = _doc_reads(spark, sf_dir)
-    rid = F.col("read_id").cast("long")
-    nt = _acgt24()
-    rows = (
-        reads.filter(rid < _BAM_RT_CAP)
-        .select("read_id", nt.alias("seq"), "qual")
-        .orderBy(rid)
-        .limit(_BAM_RT_CAP)
-        .collect()
-    )
-    records = [
-        (r["read_id"], 0, "ref1", 3 * int(r["read_id"]) + 1, 60,
-         f"{len(r['seq'])}M", r["seq"], r["qual"])
-        for r in rows
-    ]
-    path = _rt_tmp("seqtables_bam_region_csi", sf_dir, ".bam")
-    with open(path, "wb") as fh:
-        fh.write(encode_bam(records, [("ref1", 3 * len(records) + 30)]))
+    path = _write_sorted_bam(spark, sf_dir, "seqtables_bam_region_csi")
     write_csi(path)
     df = read_bam_region_csi(
         spark, path, "ref1", BAM_REGION_START, BAM_REGION_END
@@ -2359,17 +2335,9 @@ def q_bowtie_align(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from seqtables_spark.sources.bowtie import bowtie2_align, install_stub_aligner
 
-    reads = _doc_reads(spark, sf_dir)
-    rid = F.col("read_id").cast("long")
-    # fixture staging is driver-side and capped exactly like the BAM
-    # roundtrip fixture (fastq is a local-file aligner input)
-    rows = (
-        reads.filter(rid < _BAM_RT_CAP)
-        .select("read_id", _acgt24().alias("seq"), "qual")
-        .orderBy(rid)
-        .limit(_BAM_RT_CAP)
-        .collect()
-    )
+    # fixture staging is driver-side (fastq is a local-file aligner
+    # input)
+    rows = _acgt_rows(spark, sf_dir)
     ref_seq = "".join(
         r["seq"] for r in rows if int(r["read_id"]) < BOWTIE_REF_DOCS
     )
@@ -2413,15 +2381,7 @@ def q_bowtie_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
         bowtie2_align_distributed, install_stub_aligner,
     )
 
-    reads = _doc_reads(spark, sf_dir)
-    rid = F.col("read_id").cast("long")
-    rows = (
-        reads.filter(rid < _BAM_RT_CAP)
-        .select("read_id", _acgt24().alias("seq"), "qual")
-        .orderBy(rid)
-        .limit(_BAM_RT_CAP)
-        .collect()
-    )
+    rows = _acgt_rows(spark, sf_dir)
     ref_seq = "".join(
         r["seq"] for r in rows if int(r["read_id"]) < BOWTIE_REF_DOCS
     )

@@ -1,25 +1,26 @@
 """BAI (BAM index) format support — SAM spec section 5.2 (public).
 
-Round 7 shipped the RELATIONAL region index (bam.index_bam_region_chunks
-/ bam_region_manifest): coordinate-bounded virtual-offset chunks as a
-parquet manifest Spark can partition-prune. This module adds the
-BINARY interop format on top, for files that arrive with a samtools
+The binary interop index for files that arrive with a samtools
 `.bai` next to them (reference from_pysam fetch_args,
 /root/reference/seqtables/core/seqtables.py:226-283 — pysam consumes
-exactly this index):
+exactly this index). This module holds only the BAI container and
+its binning scheme; the BGZF reader, header read, record-span walk
+and Spark region fetch it builds on are the shared record core in
+bam.py (the relational region index, bam.index_bam_region_chunks,
+lives there too):
 
+- ``reg2bin``/``reg2bins``: the spec's fixed 6-level binning
+- ``build_bai``      : one streaming pass (bam._record_spans) ->
+                       spec-conforming .bai bytes (so the engine can
+                       INDEX ONCE at land time and any pysam/samtools
+                       user can reuse it)
 - ``parse_bai``      : .bai bytes -> per-reference {bin: chunks} +
                        16 kb linear index (the structure pysam reads)
 - ``bai_candidate_ranges``: (ref, start, end) -> merged virtual-offset
-                       ranges via the spec's reg2bins binning walk,
-                       lower-bounded by the linear index
-- ``build_bai``      : one streaming pass over a BAM -> spec-conforming
-                       .bai bytes (so the engine can INDEX ONCE at land
-                       time and any pysam/samtools user can reuse it)
-- ``read_bam_region_bai``: the Spark fetch driven by a .bai — candidate
-                       ranges become a one-range-per-task relation;
-                       each task seeks, inflates only its members, and
-                       decodes to the exact overlap predicate.
+                       ranges via reg2bins, lower-bounded by the
+                       linear index
+- ``write_bai`` / ``read_bam_region_bai``: the on-disk writer and the
+                       Spark fetch, through bam's index-kind table.
 
 Layout per the spec: magic 'BAI\\x01', n_ref; per ref: n_bin x
 [bin u32, n_chunk i32, n_chunk x (chunk_beg u64, chunk_end u64)],
@@ -31,20 +32,14 @@ are < 64 KiB uncompressed, so uoffset always fits.
 from __future__ import annotations
 
 import struct
-import zlib
 
 from pyspark.sql import DataFrame, SparkSession
 
 from .bam import (
-    BAM_COLUMNS,
-    BAM_SCHEMA,
     _BgzfIndexStream,
-    _local_path,
-    _member_size,
-    _parse_header,
-    _parse_record,
-    _read_at,
-    _REF_CONSUMING,
+    _read_bam_region_indexed,
+    _record_spans,
+    _write_index,
 )
 
 BAI_MAGIC = b"BAI\x01"  # linear index windows are 16 kb (the >> 14 shifts)
@@ -83,12 +78,12 @@ def reg2bins(beg: int, end: int) -> list[int]:
 
 def build_bai(data) -> bytes:
     """One streaming pass over a BAM (bytes or seekable file) ->
-    spec-conforming .bai bytes. Reuses the rolling-buffer BGZF walker
-    (constant memory); per record it reads the fixed fields + CIGAR
-    ops to compute [pos0, end0) and the record's virtual-offset span.
-    Adjacent records in the same bin merge into one chunk (the
-    standard samtools compaction); the linear index stores the lowest
-    record voffset touching each 16 kb window."""
+    spec-conforming .bai bytes. Walks bam._record_spans over the
+    rolling-buffer BGZF stream (constant memory) for each record's
+    [pos0, end0) and virtual-offset span. Adjacent records in the
+    same bin merge into one chunk (the standard samtools compaction);
+    the linear index stores the lowest record voffset touching each
+    16 kb window."""
     st = _BgzfIndexStream(data)
     refs, off = st.read_header()
     n_ref = len(refs)
@@ -96,36 +91,12 @@ def build_bai(data) -> bytes:
     linear: list[dict[int, int]] = [dict() for _ in range(n_ref)]
     n_no_coor = 0
 
-    def _voff(u: int) -> int:
-        c, uo = st.voffset(u)
-        return (c << 16) | uo
-
-    o = off
-    while True:
-        while st.total_u < o + 4:
-            if not st.more():
-                break
-        if st.total_u < o + 4:
-            break
-        (block_size,) = struct.unpack_from("<i", st.buf, o - st.base_u)
-        while st.total_u < o + 4 + block_size:
-            if not st.more():
-                raise ValueError("truncated BAM: record body incomplete")
-        r = o - st.base_u + 4
-        ref_id, pos0 = struct.unpack_from("<ii", st.buf, r)
-        l_read_name = st.buf[r + 8]
-        (n_cigar,) = struct.unpack_from("<H", st.buf, r + 12)
-        v_beg = _voff(o)
-        v_end = _voff(o + 4 + block_size)
-        if ref_id < 0:
+    for o, block_size, ref_id, pos0, end0 in _record_spans(st, off):
+        o_next = o + 4 + block_size
+        v_beg, v_end = st.vpack(o), st.vpack(o_next)
+        if end0 is None:
             n_no_coor += 1
         else:
-            co = r + 32 + l_read_name
-            ops = struct.unpack_from(f"<{n_cigar}I", st.buf, co)
-            ref_len = sum(
-                op >> 4 for op in ops if (op & 0xF) in _REF_CONSUMING
-            )
-            end0 = pos0 + max(ref_len, 1)
             b = reg2bin(pos0, end0)
             chunks = bins[ref_id].setdefault(b, [])
             if chunks and chunks[-1][1] == v_beg:  # adjacent: extend
@@ -136,8 +107,7 @@ def build_bai(data) -> bytes:
                 prev = linear[ref_id].get(w)
                 if prev is None or v_beg < prev:
                     linear[ref_id][w] = v_beg
-        o += 4 + block_size
-        st.trim(o)
+        st.trim(o_next)
 
     out = bytearray(BAI_MAGIC)
     out += struct.pack("<i", n_ref)
@@ -170,13 +140,9 @@ def build_bai(data) -> bytes:
 
 
 def write_bai(bam_path: str, bai_path: str | None = None) -> str:
-    """Index a BAM file on disk: writes ``<bam>.bai`` (or bai_path)."""
-    bai_path = bai_path or bam_path + ".bai"
-    with open(bam_path, "rb") as f:
-        data = build_bai(f)
-    with open(bai_path, "wb") as f:
-        f.write(data)
-    return bai_path
+    """Index a BAM file on disk (local path or file: URI): writes
+    ``<bam>.bai`` (or bai_path) and returns its path."""
+    return _write_index("bai", bam_path, bai_path)
 
 
 # ------------------------------------------------------ parse (reader)
@@ -243,164 +209,7 @@ def bai_candidate_ranges(
     return [(cb, ce) for cb, ce in merged]
 
 
-# --------------------------------------------------- voffset decoding
-
-def decode_bam_voffset_range(
-    f, v_beg: int, v_end: int, refs: list[str]
-) -> list[tuple]:
-    """Decode records whose START virtual offset lies in
-    [v_beg, v_end): seek to the range's member, inflate forward,
-    track each record's voffset via the inflated member table, stop
-    at v_end. The granularity a .bai chunk prescribes."""
-    comp0 = v_beg >> 16
-    uoff0 = v_beg & 0xFFFF
-    f.seek(comp0)
-    buf = bytearray()
-    members: list[tuple[int, int]] = []  # (ustart_rel, comp_abs)
-    comp_abs = comp0
-    total = 0
-
-    def _more() -> bool:
-        nonlocal comp_abs, total
-        hdr = f.read(12)
-        if len(hdr) < 12:
-            return False
-        from .bam import _bc_bsize, _validate_member_header
-
-        _validate_member_header(hdr)
-        (xlen,) = struct.unpack_from("<H", hdr, 10)
-        extra = f.read(xlen)
-        bsize = _bc_bsize(extra, 0, xlen)
-        rest = f.read(bsize - 12 - xlen)
-        inflated = zlib.decompress(hdr + extra + rest, 31)
-        members.append((total, comp_abs))
-        comp_abs += bsize
-        total += len(inflated)
-        buf.extend(inflated)
-        return True
-
-    import bisect
-
-    def _voff(o_rel: int) -> int:
-        j = bisect.bisect_right(members, (o_rel, 1 << 62)) - 1
-        return (members[j][1] << 16) | (o_rel - members[j][0])
-
-    rows: list[tuple] = []
-    o = uoff0
-    while True:
-        while total < o + 4:
-            if not _more():
-                return rows
-        if _voff(o) >= v_end:
-            return rows
-        (block_size,) = struct.unpack_from("<i", buf, o)
-        while total < o + 4 + block_size:
-            if not _more():
-                return rows
-        row, o = _parse_record(buf, o, refs)
-        rows.append(row)
-    return rows
-
-
-def read_bam_refs(path: str) -> list[str]:
-    """Driver-side BAM header read: the reference name list (tiny —
-    inflates members only until the header parses)."""
-    with open(_local_path(path), "rb") as fh:
-        head = bytearray()
-        off = 0
-        while True:
-            probe = _read_at(fh, off, 65536)
-            if not probe:
-                # file exhausted before the header parsed: truncated
-                # or not a BAM - fail HERE, not later with an
-                # AttributeError in some refs consumer
-                raise ValueError(
-                    f"could not parse BAM header from {path!r} "
-                    "(truncated or not a BAM file)"
-                )
-            size = _member_size(probe, 0)
-            head.extend(zlib.decompress(probe[:size], 31))
-            off += size
-            try:
-                refs, _ = _parse_header(bytes(head))
-                return refs
-            except (IndexError, struct.error):
-                continue
-
-
-def fetch_voffset_ranges(
-    spark: SparkSession,
-    path: str,
-    ranges: list[tuple[int, int]],
-    refs: list[str],
-    contig: str,
-    start: int,
-    end: int,
-) -> DataFrame:
-    """The shared back half of every index-driven region fetch (.bai,
-    .csi, manifest): candidate voffset ranges become a one-range-per-
-    task relation; each task seeks, inflates only its members, decodes,
-    and the exact half-open overlap predicate trims stragglers."""
-    return fetch_voffset_triples(
-        spark, [(path, cb, ce) for cb, ce in ranges], refs, contig,
-        start, end,
-    )
-
-
-def fetch_voffset_triples(
-    spark: SparkSession,
-    triples: list[tuple[str, int, int]],
-    refs: list[str],
-    contig: str,
-    start: int,
-    end: int,
-) -> DataFrame:
-    """Multi-file back half: (path, v_beg, v_end) triples — the shape
-    the sharded-BAM region dispatch produces, where candidate ranges
-    from MANY per-shard indexes union into one fetch relation. The
-    single-file fetch_voffset_ranges delegates here."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    if not triples:
-        return spark.createDataFrame([], BAM_SCHEMA)
-    # JVM-born VALUES relation with the path quote-escaped (the warc
-    # reader's pattern; round-8 ADVICE fix): a quote in the path can
-    # no longer break or inject into the SQL, and the relation stays
-    # a LocalRelation — createDataFrame was tried and REVERTED, its
-    # python-RDD scan pays a python-worker roundtrip per action
-    # (SCALING.md round-6 trap #1; measured 0.25 s -> 0.79 s on
-    # bam_region_bai).
-    rows = ", ".join(
-        "('{}', CAST({} AS BIGINT), CAST({} AS BIGINT))".format(
-            p.replace("'", "''"), int(cb), int(ce)
-        )
-        for p, cb, ce in triples
-    )
-    rel = spark.sql(
-        f"SELECT * FROM VALUES {rows} AS t(path, v_beg, v_end)"
-    ).repartition(min(len(triples), spark.sparkContext.defaultParallelism))
-
-    def _decode(batches):
-        for pdf in batches:
-            for p, vb, ve in zip(pdf["path"], pdf["v_beg"], pdf["v_end"]):
-                with open(_local_path(p), "rb") as f:
-                    rows_ = decode_bam_voffset_range(
-                        f, int(vb), int(ve), refs
-                    )
-                yield pd.DataFrame(rows_, columns=BAM_COLUMNS)
-
-    decoded = rel.mapInPandas(_decode, BAM_SCHEMA)
-    ref_len = F.expr(
-        r"aggregate(regexp_extract_all(cigar, '(\\d+)([MDN=X])', 1), "
-        r"0L, (acc, x) -> acc + cast(x as long))"
-    )
-    pos0 = F.col("pos") - 1
-    end0 = pos0 + F.greatest(ref_len, F.lit(1))
-    return decoded.filter(
-        (F.col("rname") == contig) & (pos0 < int(end)) & (end0 > int(start))
-    )
-
+# --------------------------------------------------------- Spark fetch
 
 def read_bam_region_bai(
     spark: SparkSession,
@@ -412,20 +221,11 @@ def read_bam_region_bai(
 ) -> DataFrame:
     """Indexed region fetch driven by a REAL .bai (defaults to
     ``<path>.bai``): candidate voffset ranges from the binning +
-    linear index, then the shared fetch_voffset_ranges back half.
+    linear index, then the shared bam.fetch_voffset_triples back half.
     Same result contract as bam.read_bam_region (pinned equal in
     tests); use this path when the index already exists
     (samtools-indexed lakes), the manifest path when you control the
     land step."""
-    bai_path = bai_path or path + ".bai"
-    with open(_local_path(bai_path), "rb") as fh:
-        per_ref, _ = parse_bai(fh.read())
-    refs = read_bam_refs(path)
-    try:
-        ref_id = refs.index(contig)
-    except ValueError:
-        ref_id = -1
-    ranges = bai_candidate_ranges(per_ref, ref_id, int(start), int(end))
-    return fetch_voffset_ranges(
-        spark, path, ranges, refs, contig, int(start), int(end)
+    return _read_bam_region_indexed(
+        spark, "bai", path, contig, start, end, bai_path
     )

@@ -8,6 +8,27 @@ conforming gzip members (RFC1952 with a BC extra subfield carrying
 the block size), so stdlib gzip/zlib decompresses it directly; the
 record layout is fixed-width little-endian (SAM spec section 4.2).
 
+This module is the one BAM record core every reader and index writer
+in the package shares (bai.py and csi.py hold only their container
+formats and binning schemes):
+
+* ``_BgzfIndexStream`` - the one BGZF member reader: member-by-member
+  inflate from any compressed offset, the (ustart, comp_off) member
+  table for virtual offsets, the header read and the rolling trim.
+* ``read_bam_refs`` - the one header read (the reference name list).
+* ``_record_spans`` - the one record-span walk: each record's offset,
+  length, ref_id and 0-based half-open reference span, from the fixed
+  fields and CIGAR ops. ``build_bai``, ``build_csi`` and
+  ``index_bam_region_chunks`` are built on it.
+* the region-fetch back half - ``decode_bam_voffset_range``,
+  ``fetch_voffset_triples`` and ``_overlap_filter`` (pysam fetch
+  semantics) - behind the manifest, .bai, .csi and sharded fetches,
+  and the ``_index_kinds`` table that maps "bai"/"csi" to their build
+  and candidate-range functions.
+
+``decode_bam`` stays an independent whole-stream decoder: it is the
+brute-force reference the fetch tests compare against.
+
 Scale design. Decoding distributes at TWO grains:
 
 * across files (default): binaryFile source -> mapInPandas, one
@@ -32,6 +53,7 @@ from __future__ import annotations
 
 import bisect
 import gzip
+import itertools
 import os
 import struct
 import zlib
@@ -205,32 +227,31 @@ def decode_bam(data: bytes) -> tuple[list[str], Iterator[tuple]]:
     return refs, records()
 
 
-# --------------------------------------------------- sub-file splitting
+# --------------------------------------------------- the BGZF stream
 
 class _BgzfIndexStream:
-    """Shared streaming machinery of the two chunk-index passes
-    (round-7 review fix: this logic used to exist twice): member-by-
-    member BGZF inflate with the (ustart, comp_off) member table,
-    header-completion loop, virtual-offset lookup, and the rolling
-    4 MB buffer trim that keeps a 50 GB BAM indexable in constant
-    memory. The index passes differ only in what they read per record
-    and when they close a chunk."""
+    """The one BGZF member reader: member-by-member inflate starting at
+    compressed offset `start`, the (ustart, comp_off) member table for
+    virtual-offset lookup, the header-completion loop, and the rolling
+    TRIM_AT buffer trim that keeps a 50 GB BAM indexable in constant
+    memory. Uncompressed offsets count from `start`'s member; buf[0]
+    sits at base_u. The index passes trim; the range decoders never
+    do (their buffer spans one chunk)."""
 
     TRIM_AT = 4 << 20
 
-    def __init__(self, data):
+    def __init__(self, data, start: int = 0):
         if isinstance(data, (bytes, bytearray)):
             import io
 
-            self.f = io.BytesIO(data)
-        else:
-            self.f = data
-            self.f.seek(0)
+            data = io.BytesIO(data)
+        self.f = data
+        self.f.seek(start)
         self.members: list[tuple[int, int]] = []  # (ustart, comp_off)
         self.buf = bytearray()
-        self.base_u = 0    # uncompressed offset of buf[0]
-        self.comp_off = 0  # compressed offset of next unread member
-        self.total_u = 0   # uncompressed bytes inflated so far
+        self.base_u = 0        # uncompressed offset of buf[0]
+        self.comp_off = start  # compressed offset of next unread member
+        self.total_u = 0       # uncompressed bytes inflated so far
 
     def more(self) -> bool:
         hdr = self.f.read(12)
@@ -248,9 +269,21 @@ class _BgzfIndexStream:
         self.buf.extend(inflated)
         return True
 
+    def fill(self, u: int) -> bool:
+        """Inflate until offset `u` is buffered; False at end of file."""
+        while self.total_u < u:
+            if not self.more():
+                return False
+        return True
+
     def voffset(self, u: int) -> tuple[int, int]:
         j = bisect.bisect_right(self.members, (u, 1 << 62)) - 1
         return (self.members[j][1], u - self.members[j][0])
+
+    def vpack(self, u: int) -> int:
+        """voffset packed the .bai/.csi way: coffset << 16 | uoffset."""
+        c, uo = self.voffset(u)
+        return (c << 16) | uo
 
     def read_header(self) -> tuple[list[str], int]:
         """Inflate until the BAM header parses -> (refs, record_off)."""
@@ -261,7 +294,11 @@ class _BgzfIndexStream:
                 except (IndexError, struct.error):
                     pass  # truncated mid-header: inflate more
             if not self.more():
-                raise ValueError("truncated BAM: header never completed")
+                name = getattr(self.f, "name", "stream")
+                raise ValueError(
+                    f"could not parse BAM header from {name!r} "
+                    "(truncated or not a BAM file)"
+                )
 
     def trim(self, keep_from: int) -> None:
         """Drop buffered bytes before `keep_from` (absolute offset)
@@ -271,6 +308,51 @@ class _BgzfIndexStream:
             del self.buf[: keep_from - self.base_u]
             self.base_u = keep_from
 
+
+def read_bam_refs(path: str) -> list[str]:
+    """Driver-side BAM header read: the reference name list (tiny —
+    inflates members only until the header parses)."""
+    with open(_local_path(path), "rb") as fh:
+        return _BgzfIndexStream(fh).read_header()[0]
+
+
+# the CIGAR ops that consume reference positions: M, D, N, =, X
+_REF_CONSUMING = frozenset((0, 2, 3, 7, 8))
+
+
+def _record_spans(
+    st: _BgzfIndexStream, o: int
+) -> Iterator[tuple[int, int, int, int, int | None]]:
+    """The one record-span walk: from uncompressed offset `o` yield
+    (offset, block_size, ref_id, pos0, end0) per record, end0 being
+    the 0-based half-open end of the reference span (pos0 + the
+    M/D/N/=/X lengths, floored to 1 so zero-span reads occupy pos0)
+    and None for unmapped (ref_id < 0) records. Struct reads of the
+    fixed fields + CIGAR ops only - none of the per-base string work.
+    Each record is fully buffered when yielded, so st.voffset/vpack
+    of its start and end are valid; the caller trims between yields."""
+    while st.fill(o + 4):
+        (block_size,) = struct.unpack_from("<i", st.buf, o - st.base_u)
+        if not st.fill(o + 4 + block_size):
+            raise ValueError("truncated BAM: record body incomplete")
+        r = o - st.base_u + 4
+        ref_id, pos0 = struct.unpack_from("<ii", st.buf, r)
+        end0 = None
+        if ref_id >= 0:
+            l_read_name = st.buf[r + 8]
+            (n_cigar,) = struct.unpack_from("<H", st.buf, r + 12)
+            ops = struct.unpack_from(
+                f"<{n_cigar}I", st.buf, r + 32 + l_read_name
+            )
+            ref_len = sum(
+                op >> 4 for op in ops if (op & 0xF) in _REF_CONSUMING
+            )
+            end0 = pos0 + max(ref_len, 1)
+        yield o, block_size, ref_id, pos0, end0
+        o += 4 + block_size
+
+
+# --------------------------------------------------- sub-file splitting
 
 def index_bam_chunks(
     data, records_per_chunk: int
@@ -285,8 +367,8 @@ def index_bam_chunks(
     (_BgzfIndexStream): peak memory is O(max member + spanned
     record), never the whole uncompressed stream — a 50 GB BAM
     indexes in constant memory. Records are touched only with 4-byte
-    length reads — none of the per-base string work the decode stage
-    pays."""
+    length reads (deliberately not _record_spans, which also reads
+    each record's fixed fields and CIGAR)."""
     st = _BgzfIndexStream(data)
     _, off = st.read_header()
 
@@ -294,12 +376,7 @@ def index_bam_chunks(
     o = off  # absolute uncompressed offset
     count = 0
     chunk_start = o
-    while True:
-        while st.total_u < o + 4:
-            if not st.more():
-                break
-        if st.total_u < o + 4:
-            break
+    while st.fill(o + 4):
         if count == records_per_chunk:
             specs.append((*st.voffset(chunk_start), count))
             chunk_start, count = o, 0
@@ -312,8 +389,6 @@ def index_bam_chunks(
     return specs
 
 
-# the CIGAR ops that consume reference positions: M, D, N, =, X
-_REF_CONSUMING = frozenset((0, 2, 3, 7, 8))
 _REGION_CHUNK_SCHEMA = (
     "path string, comp_off long, uoff long, n_records long, "
     "rname string, min_pos long, max_end long"
@@ -328,8 +403,7 @@ def index_bam_region_chunks(
     /root/reference/seqtables/core/seqtables.py:226-283): one light
     pass emits [(comp_off, uoff, n_records, rname, min_pos0,
     max_end0)], where min/max bound the reference span of every
-    record in the chunk (pos .. pos + CIGAR-ref-consumed length,
-    0-based half-open; M/D/N/=/X consume reference). A region fetch
+    record in the chunk (from _record_spans). A region fetch
     then decodes ONLY chunks whose bounds intersect the query window
     — the same pruning a .bai's binning index drives, stored as a
     relational manifest instead of the binary bin tree so Spark can
@@ -340,20 +414,13 @@ def index_bam_region_chunks(
     land in rname='*' chunks with NULL bounds (a region fetch never
     touches them, matching pysam fetch(contig,...) semantics).
 
-    Same rolling-buffer memory contract as index_bam_chunks (shared
-    _BgzfIndexStream); this pass additionally reads each record's
-    fixed fields + CIGAR ops (struct reads — still none of the
-    per-base string work)."""
+    Same rolling-buffer memory contract as index_bam_chunks."""
     st = _BgzfIndexStream(data)
     refs, off = st.read_header()
 
-    def _name(ref_id: int) -> str:
-        return refs[ref_id] if 0 <= ref_id < len(refs) else "*"
-
     specs: list[tuple] = []
-    o = off
     count = 0
-    chunk_start = o
+    chunk_start = off
     cur_ref: int | None = None
     lo: int | None = None
     hi: int | None = None
@@ -361,46 +428,41 @@ def index_bam_region_chunks(
     def _close() -> None:
         nonlocal count, lo, hi
         c, uo = st.voffset(chunk_start)
-        specs.append((c, uo, count, _name(cur_ref), lo, hi))
+        name = refs[cur_ref] if 0 <= cur_ref < len(refs) else "*"
+        specs.append((c, uo, count, name, lo, hi))
         count, lo, hi = 0, None, None
 
-    while True:
-        while st.total_u < o + 4:
-            if not st.more():
-                break
-        if st.total_u < o + 4:
-            break
-        (block_size,) = struct.unpack_from("<i", st.buf, o - st.base_u)
-        # bounds need the fixed fields + cigar ops: inflate the record
-        while st.total_u < o + 4 + block_size:
-            if not st.more():
-                raise ValueError("truncated BAM: record body incomplete")
-        r = o - st.base_u + 4
-        ref_id, pos0 = struct.unpack_from("<ii", st.buf, r)
-        l_read_name = st.buf[r + 8]
-        (n_cigar,) = struct.unpack_from("<H", st.buf, r + 12)
+    for o, _, ref_id, pos0, end0 in _record_spans(st, off):
         if cur_ref is not None and (
             ref_id != cur_ref or count == records_per_chunk
         ):
             _close()
             chunk_start = o
         cur_ref = ref_id
-        if ref_id >= 0:
-            co = r + 32 + l_read_name
-            ops = struct.unpack_from(f"<{n_cigar}I", st.buf, co)
-            ref_len = sum(
-                op >> 4 for op in ops if (op & 0xF) in _REF_CONSUMING
-            )
-            end0 = pos0 + max(ref_len, 1)  # zero-span reads occupy pos
+        if end0 is not None:
             lo = pos0 if lo is None else min(lo, pos0)
             hi = end0 if hi is None else max(hi, end0)
-        o += 4 + block_size
         count += 1
         st.trim(chunk_start)
     if count:
         _close()
     return specs
 
+
+def _decode_records(
+    st: _BgzfIndexStream, o: int, refs: list[str], v_end: int | None = None
+) -> Iterator[tuple]:
+    """Decode records from offset `o` of an untrimmed stream until it
+    ends or (with v_end) the next record starts at voffset >= v_end."""
+    while st.fill(o + 4) and (v_end is None or st.vpack(o) < v_end):
+        (block_size,) = struct.unpack_from("<i", st.buf, o)
+        if not st.fill(o + 4 + block_size):
+            return
+        # parse straight from the bytearray: a bytes(buf) copy here is
+        # O(records x chunk_bytes) of memcpy (struct.unpack_from and
+        # slicing both read bytearrays directly)
+        row, o = _parse_record(st.buf, o, refs)
+        yield row
 
 
 def decode_bam_range(
@@ -410,37 +472,19 @@ def decode_bam_range(
     (comp_off, uoff) from the seekable binary file `f`, inflating only
     the members the records span (reads forward past the chunk's last
     member boundary only when its final record straddles it)."""
-    f.seek(comp_off)
-    buf = bytearray()
-    rows: list[tuple] = []
-    o = uoff
+    st = _BgzfIndexStream(f, comp_off)
+    return list(itertools.islice(_decode_records(st, uoff, refs), n_records))
 
-    def _more() -> bool:
-        hdr = f.read(12)
-        if len(hdr) < 12:
-            return False
-        _validate_member_header(hdr)  # shared magic/FEXTRA checks
-        (xlen,) = struct.unpack_from("<H", hdr, 10)
-        extra = f.read(xlen)
-        bsize = _bc_bsize(extra, 0, xlen)
-        rest = f.read(bsize - 12 - xlen)
-        buf.extend(zlib.decompress(hdr + extra + rest, 31))
-        return True
 
-    while len(rows) < n_records:
-        while len(buf) < o + 4:
-            if not _more():
-                return rows
-        (block_size,) = struct.unpack_from("<i", buf, o)
-        while len(buf) < o + 4 + block_size:
-            if not _more():
-                return rows
-        # parse straight from the bytearray: a bytes(buf) copy here is
-        # O(records x chunk_bytes) of memcpy (struct.unpack_from and
-        # slicing both read bytearrays directly)
-        row, o = _parse_record(buf, o, refs)
-        rows.append(row)
-    return rows
+def decode_bam_voffset_range(
+    f, v_beg: int, v_end: int, refs: list[str]
+) -> list[tuple]:
+    """Decode records whose START virtual offset lies in
+    [v_beg, v_end): seek to the range's member, inflate forward,
+    track each record's voffset via the member table, stop at v_end.
+    The granularity a .bai/.csi chunk prescribes."""
+    st = _BgzfIndexStream(f, v_beg >> 16)
+    return list(_decode_records(st, v_beg & 0xFFFF, refs, v_end))
 
 
 def _local_path(uri: str) -> str:
@@ -456,6 +500,55 @@ def _local_path(uri: str) -> str:
             "first"
         )
     return uri
+
+
+def _index_files(files: DataFrame, index_fn, records_per_chunk: int,
+                 schema: str) -> DataFrame:
+    """One indexing task per file: rows (path, *spec) for every spec
+    index_fn(f, records_per_chunk) emits, streamed from the open file
+    (constant memory even for one huge BAM)."""
+    import pandas as pd
+
+    columns = [c.split()[0] for c in schema.split(", ")]
+
+    def _index(batches):
+        for pdf in batches:
+            rows = []
+            for uri in pdf["path"]:
+                with open(_local_path(uri), "rb") as f:
+                    rows.extend(
+                        (uri, *spec) for spec in index_fn(f, records_per_chunk)
+                    )
+            yield pd.DataFrame(rows, columns=columns)
+
+    return files.mapInPandas(_index, schema)
+
+
+def _decode_chunk_specs(
+    chunks: DataFrame, min_mapping_quality: int | None
+) -> DataFrame:
+    """Decode (path, comp_off, uoff, n_records) chunk specs, one
+    decode_bam_range per spec; each task reads a file's header once."""
+    import pandas as pd
+
+    def _decode_chunks(batches):
+        refs_cache: dict[str, list[str]] = {}
+        for pdf in batches:
+            for uri, comp_off, uoff, n in zip(
+                pdf["path"], pdf["comp_off"], pdf["uoff"], pdf["n_records"]
+            ):
+                p = _local_path(uri)
+                if p not in refs_cache:
+                    refs_cache[p] = read_bam_refs(p)
+                with open(p, "rb") as f:
+                    rows = decode_bam_range(
+                        f, int(comp_off), int(uoff), int(n), refs_cache[p]
+                    )
+                if min_mapping_quality is not None:
+                    rows = [r for r in rows if r[4] >= min_mapping_quality]
+                yield pd.DataFrame(rows, columns=BAM_COLUMNS)
+
+    return chunks.mapInPandas(_decode_chunks, BAM_SCHEMA)
 
 
 def read_bam(
@@ -503,60 +596,13 @@ def read_bam(
         return files.select("content").mapInPandas(_decode, BAM_SCHEMA)
 
     # sub-file path: index (per file) -> decode (per chunk)
-    files = reader.load(path).select("path")
-
-    def _index(batches):
-        for pdf in batches:
-            rows = []
-            for uri in pdf["path"]:
-                # stream the index pass: constant memory even for one
-                # huge BAM (see index_bam_chunks)
-                with open(_local_path(uri), "rb") as f:
-                    for comp_off, uoff, n in index_bam_chunks(
-                        f, records_per_chunk
-                    ):
-                        rows.append((uri, comp_off, uoff, n))
-            yield pd.DataFrame(
-                rows, columns=["path", "comp_off", "uoff", "n_records"]
-            )
-
-    chunks = files.mapInPandas(_index, _CHUNK_SCHEMA)
+    chunks = _index_files(
+        reader.load(path).select("path"), index_bam_chunks,
+        records_per_chunk, _CHUNK_SCHEMA,
+    )
     # one task per chunk: the decode stage is the CPU cost, spread it
     chunks = chunks.repartition(spark.sparkContext.defaultParallelism)
-
-    def _decode_chunks(batches):
-        refs_cache: dict[str, list[str]] = {}
-        for pdf in batches:
-            for uri, comp_off, uoff, n in zip(
-                pdf["path"], pdf["comp_off"], pdf["uoff"], pdf["n_records"]
-            ):
-                p = _local_path(uri)
-                refs = refs_cache.get(p)
-                with open(p, "rb") as f:
-                    if refs is None:
-                        # header lives in the leading members; inflate
-                        # until it parses (one member in practice)
-                        head = bytearray()
-                        off = 0
-                        while True:
-                            probe = _read_at(f, off, 65536)  # >= max member
-                            size = _member_size(probe, 0)
-                            head.extend(zlib.decompress(probe[:size], 31))
-                            off += size
-                            try:
-                                refs, _ = _parse_header(bytes(head))
-                                break
-                            except (IndexError, struct.error):
-                                continue
-                        refs_cache[p] = refs
-                    rows = decode_bam_range(
-                        f, int(comp_off), int(uoff), int(n), refs
-                    )
-                if min_mapping_quality is not None:
-                    rows = [r for r in rows if r[4] >= min_mapping_quality]
-                yield pd.DataFrame(rows, columns=BAM_COLUMNS)
-
-    return chunks.mapInPandas(_decode_chunks, BAM_SCHEMA)
+    return _decode_chunk_specs(chunks, min_mapping_quality)
 
 
 BAM_COLUMNS = [
@@ -575,28 +621,32 @@ def bam_region_manifest(
     write/land time and persist as parquet (partitionBy('rname') for
     partition-pruned probes); every later region fetch is then a
     manifest filter + targeted chunk decode with no indexing pass."""
-    import pandas as pd
-
     files = spark.read.format("binaryFile").load(path).select("path")
+    return _index_files(
+        files, index_bam_region_chunks, records_per_chunk,
+        _REGION_CHUNK_SCHEMA,
+    )
 
-    def _index(batches):
-        for pdf in batches:
-            rows = []
-            for uri in pdf["path"]:
-                with open(_local_path(uri), "rb") as f:
-                    for spec in index_bam_region_chunks(
-                        f, records_per_chunk
-                    ):
-                        rows.append((uri, *spec))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "path", "comp_off", "uoff", "n_records",
-                    "rname", "min_pos", "max_end",
-                ],
-            )
 
-    return files.mapInPandas(_index, _REGION_CHUNK_SCHEMA)
+def _overlap_filter(
+    df: DataFrame, contig: str, start: int, end: int
+) -> DataFrame:
+    """The exact pysam fetch(contig, start, end) predicate on decoded
+    rows, all built-ins: reference span [pos0, pos0 + ref_len) from
+    the CIGAR string's M/D/N/=/X lengths (floored to 1) overlaps the
+    0-based half-open window on `contig`. Trims the chunk-boundary
+    stragglers every index-driven fetch decodes."""
+    from pyspark.sql import functions as F
+
+    ref_len = F.expr(
+        r"aggregate(regexp_extract_all(cigar, '(\\d+)([MDN=X])', 1), "
+        r"0L, (acc, x) -> acc + cast(x as long))"
+    )
+    pos0 = F.col("pos") - 1
+    end0 = pos0 + F.greatest(ref_len, F.lit(1))
+    return df.filter(
+        (F.col("rname") == contig) & (pos0 < int(end)) & (end0 > int(start))
+    )
 
 
 def read_bam_region(
@@ -628,8 +678,6 @@ def read_bam_region(
     `manifest`: pass the persisted manifest (DataFrame or parquet
     path) from bam_region_manifest to skip the indexing pass
     entirely; default builds it inline (one light pass per file)."""
-    import pandas as pd
-
     if manifest is None:
         chunks = bam_region_manifest(spark, path, records_per_chunk)
     elif isinstance(manifest, str):
@@ -648,56 +696,123 @@ def read_bam_region(
         "path", "comp_off", "uoff", "n_records"
     )
     pruned = pruned.repartition(spark.sparkContext.defaultParallelism)
+    decoded = _decode_chunk_specs(pruned, min_mapping_quality)
+    return _overlap_filter(decoded, contig, start, end)
 
-    def _decode_chunks(batches):
-        refs_cache: dict[str, list[str]] = {}
+
+def fetch_voffset_triples(
+    spark: SparkSession,
+    triples: list[tuple[str, int, int]],
+    refs: list[str],
+    contig: str,
+    start: int,
+    end: int,
+) -> DataFrame:
+    """The back half of every index-driven region fetch (.bai, .csi,
+    sharded): (path, v_beg, v_end) candidate ranges - from one index
+    or unioned from many per-shard indexes - become a one-range-per-
+    task relation; each task seeks, inflates only its members,
+    decodes, and _overlap_filter trims stragglers."""
+    import pandas as pd
+
+    if not triples:
+        return spark.createDataFrame([], BAM_SCHEMA)
+    # JVM-born VALUES relation with the path quote-escaped (the warc
+    # reader's pattern; round-8 ADVICE fix): a quote in the path can
+    # no longer break or inject into the SQL, and the relation stays
+    # a LocalRelation — createDataFrame was tried and REVERTED, its
+    # python-RDD scan pays a python-worker roundtrip per action
+    # (SCALING.md round-6 trap #1; measured 0.25 s -> 0.79 s on
+    # bam_region_bai).
+    rows = ", ".join(
+        "('{}', CAST({} AS BIGINT), CAST({} AS BIGINT))".format(
+            p.replace("'", "''"), int(cb), int(ce)
+        )
+        for p, cb, ce in triples
+    )
+    rel = spark.sql(
+        f"SELECT * FROM VALUES {rows} AS t(path, v_beg, v_end)"
+    ).repartition(min(len(triples), spark.sparkContext.defaultParallelism))
+
+    def _decode(batches):
         for pdf in batches:
-            for uri, comp_off, uoff, n in zip(
-                pdf["path"], pdf["comp_off"], pdf["uoff"], pdf["n_records"]
-            ):
-                p = _local_path(uri)
-                refs = refs_cache.get(p)
-                with open(p, "rb") as f:
-                    if refs is None:
-                        head = bytearray()
-                        off = 0
-                        while True:
-                            probe = _read_at(f, off, 65536)
-                            size = _member_size(probe, 0)
-                            head.extend(zlib.decompress(probe[:size], 31))
-                            off += size
-                            try:
-                                refs, _ = _parse_header(bytes(head))
-                                break
-                            except (IndexError, struct.error):
-                                continue
-                        refs_cache[p] = refs
-                    rows = decode_bam_range(
-                        f, int(comp_off), int(uoff), int(n), refs
+            for p, vb, ve in zip(pdf["path"], pdf["v_beg"], pdf["v_end"]):
+                with open(_local_path(p), "rb") as f:
+                    rows_ = decode_bam_voffset_range(
+                        f, int(vb), int(ve), refs
                     )
-                if min_mapping_quality is not None:
-                    rows = [r for r in rows if r[4] >= min_mapping_quality]
-                yield pd.DataFrame(rows, columns=BAM_COLUMNS)
+                yield pd.DataFrame(rows_, columns=BAM_COLUMNS)
 
-    decoded = pruned.mapInPandas(_decode_chunks, BAM_SCHEMA)
-    # exact overlap trim, all built-ins: ref-consumed length from the
-    # CIGAR string (M/D/N/=/X), 1-based pos -> 0-based half-open span
-    ref_len = F.expr(
-        r"aggregate(regexp_extract_all(cigar, '(\\d+)([MDN=X])', 1), "
-        r"0L, (acc, x) -> acc + cast(x as long))"
+    decoded = rel.mapInPandas(_decode, BAM_SCHEMA)
+    return _overlap_filter(decoded, contig, start, end)
+
+
+# ------------------------------------------------------ index kinds
+
+def _index_kinds() -> dict:
+    """kind -> (build(f, **kw) -> index bytes, ranges(index bytes,
+    ref_id, start, end) -> merged candidate voffset ranges). Resolved
+    on call: bai.py and csi.py import this module."""
+    from . import bai, csi
+
+    return {
+        "bai": (
+            bai.build_bai,
+            lambda raw, *q: bai.bai_candidate_ranges(bai.parse_bai(raw)[0], *q),
+        ),
+        "csi": (
+            csi.build_csi,
+            lambda raw, *q: csi.csi_candidate_ranges(*csi.parse_csi(raw)[:3], *q),
+        ),
+    }
+
+
+def _write_index(
+    kind: str, bam_path: str, index_path: str | None = None,
+    attempt: int | None = None, **build_kw,
+) -> str:
+    """Index the BAM at `bam_path` (local path or file: URI) as
+    `kind` into `index_path` (default ``<bam>.<kind>``). Bytes go to
+    ``<index>.attempt-<attempt>`` first and are os.replace()d into
+    place, so a reader never sees a partial index and a retried
+    task's twin never interleaves bytes with it."""
+    bam_path = _local_path(bam_path)
+    index_path = index_path or f"{bam_path}.{kind}"
+    with open(bam_path, "rb") as f:
+        data = _index_kinds()[kind][0](f, **build_kw)
+    tmp = f"{index_path}.attempt-{os.getpid() if attempt is None else attempt}"
+    with open(tmp, "wb") as f:
+        f.write(data)
+    os.replace(tmp, index_path)
+    return index_path
+
+
+def _index_triples(
+    kind: str, bam_path: str, index_path: str, ref_id: int, start: int,
+    end: int,
+) -> list[tuple[str, int, int]]:
+    """(bam_path, v_beg, v_end) candidate ranges from one index file."""
+    with open(_local_path(index_path), "rb") as fh:
+        ranges = _index_kinds()[kind][1](fh.read(), ref_id, start, end)
+    return [(bam_path, cb, ce) for cb, ce in ranges]
+
+
+def _read_bam_region_indexed(
+    spark: SparkSession, kind: str, path: str, contig: str, start: int,
+    end: int, index_path: str | None = None,
+) -> DataFrame:
+    """read_bam_region_bai / read_bam_region_csi: candidate ranges from
+    the `kind` index (default ``<path>.<kind>``), then the
+    fetch_voffset_triples back half."""
+    refs = read_bam_refs(path)
+    ref_id = refs.index(contig) if contig in refs else -1
+    triples = _index_triples(
+        kind, path, index_path or f"{path}.{kind}", ref_id, int(start),
+        int(end),
     )
-    pos0 = F.col("pos") - 1
-    end0 = pos0 + F.greatest(ref_len, F.lit(1))
-    return decoded.filter(
-        (F.col("rname") == contig)
-        & (pos0 < int(end))
-        & (end0 > int(start))
+    return fetch_voffset_triples(
+        spark, triples, refs, contig, int(start), int(end)
     )
-
-
-def _read_at(f, off: int, n: int) -> bytes:
-    f.seek(off)
-    return f.read(n)
 
 
 def _bgzf_block(payload: bytes) -> bytes:
@@ -866,8 +981,8 @@ def write_bam(
 
     index="bai"/"csi" (round 9) additionally writes `<path>.bai` /
     `<path>.csi` after assembly (one driver-side streaming pass of the
-    finished file, constant memory - sources/bai.write_bai /
-    csi.write_csi).
+    finished file, constant memory - the _write_index path behind
+    bai.write_bai / csi.write_csi).
 
     index= with single_file=False (round 11): each shard is an
     independent valid BAM, so per-shard virtual offsets are well-
@@ -891,7 +1006,7 @@ def write_bam(
     import pandas as pd  # noqa: F401 - mapInPandas contract
     from pyspark.sql import functions as F
 
-    if index not in (None, "bai", "csi"):
+    if index is not None and index not in _index_kinds():
         raise ValueError(f"index must be 'bai', 'csi' or None, got {index!r}")
 
     ref_index = {name: i for i, (name, _) in enumerate(refs)}
@@ -983,19 +1098,7 @@ def write_bam(
                 # independent valid BAM, so its virtual offsets are
                 # self-contained. Same attempt-tmp + whole-file
                 # rename commit as the shard bytes.
-                if shard_index == "bai":
-                    from .bai import build_bai
-                    with open(fname, "rb") as sf:
-                        idx_bytes = build_bai(sf)
-                else:
-                    from .csi import build_csi
-                    with open(fname, "rb") as sf:
-                        idx_bytes = build_csi(sf)
-                idx_name = f"{fname}.{shard_index}"
-                idx_tmp = f"{idx_name}.attempt-{ctx.taskAttemptId()}"
-                with open(idx_tmp, "wb") as xf:
-                    xf.write(idx_bytes)
-                os.replace(idx_tmp, idx_name)
+                _write_index(shard_index, fname, attempt=ctx.taskAttemptId())
             fr, fp = lo if lo is not None else (-1, -1)
             lr, le = hi if hi is not None else (-1, -1)
             yield pd.DataFrame(
@@ -1048,14 +1151,8 @@ def write_bam(
             out.write(BGZF_EOF)
         shutil.rmtree(parts_dir)
 
-    if index == "bai" and not sharded:
-        from .bai import write_bai
-
-        write_bai(path)
-    elif index == "csi" and not sharded:
-        from .csi import write_csi
-
-        write_csi(path)
+    if index is not None and not sharded:
+        _write_index(index, path)
 
     spark = df.sparkSession
     schema = "path string, n_records long, n_bytes long"
@@ -1105,9 +1202,6 @@ def _sharded_region_plan(
     "shards_scanned"} for observability.
     """
     import json
-
-    from .bai import bai_candidate_ranges, parse_bai, read_bam_refs
-    from .csi import csi_candidate_ranges, parse_csi
 
     mpath = os.path.join(_local_path(path), "_manifest.json")
     with open(mpath) as mf:
@@ -1162,7 +1256,7 @@ def _sharded_region_plan(
                     idx_path = cand
                     idx_kind = man_kind
         if idx_path is None:
-            for kind in ([index] if index else ["bai", "csi"]):
+            for kind in ([index] if index else _index_kinds()):
                 cand = shard + "." + kind
                 if os.path.exists(cand):
                     idx_path, idx_kind = cand, kind
@@ -1172,19 +1266,12 @@ def _sharded_region_plan(
                 f"no .bai/.csi index next to shard {shard!r}; write with "
                 "write_bam(..., single_file=False, index='bai'|'csi')"
             )
-        with open(idx_path, "rb") as fh:
-            raw = fh.read()
-        if idx_kind == "bai":
-            per_ref, _ = parse_bai(raw)
-            ranges = bai_candidate_ranges(per_ref, ref_id, start, end)
-        else:
-            per_ref, min_shift, depth, _ = parse_csi(raw)
-            ranges = csi_candidate_ranges(
-                per_ref, min_shift, depth, ref_id, start, end
-            )
-        if ranges:
+        shard_triples = _index_triples(
+            idx_kind, shard, idx_path, ref_id, start, end
+        )
+        if shard_triples:
             scanned += 1
-            triples.extend((shard, cb, ce) for cb, ce in ranges)
+            triples.extend(shard_triples)
     return triples, refs, {
         "shards_total": len(entries),
         "shards_after_manifest": len(survivors),
@@ -1210,8 +1297,6 @@ def read_bam_region_sharded(
     files. Same result contract as read_bam_region /
     read_bam_region_bai / read_bam_region_csi on the assembled
     equivalent (pinned in tests/test_round11_ops.py)."""
-    from .bai import fetch_voffset_triples
-
     triples, refs, _ = _sharded_region_plan(
         path, contig, int(start), int(end), index
     )

@@ -18,6 +18,11 @@ pysam (core/seqtables.py:226-283) and pysam/htslib reads .csi
 transparently — this module lets the engine land a spec-conforming
 .csi that those users can reuse, and fetch through one it finds.
 
+This module holds only the CSI container and its parameterized
+binning; the BGZF reader, header read, record-span walk
+(bam._record_spans) and Spark region fetch are the shared record
+core in bam.py, reached through its index-kind table.
+
 Layout (all little-endian, inside BGZF): magic 'CSI\\x01',
 min_shift i32, depth i32, l_aux i32, aux[l_aux], n_ref i32; per ref:
 n_bin i32, then per bin: bin u32, loffset u64, n_chunk i32,
@@ -29,21 +34,16 @@ from __future__ import annotations
 
 import gzip
 import struct
-import zlib
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .bai import (
-    decode_bam_voffset_range,  # noqa: F401  (re-export convenience)
-    fetch_voffset_ranges,
-    read_bam_refs,
-)
 from .bam import (
-    _BgzfIndexStream,
-    _local_path,
-    _REF_CONSUMING,
-    _bgzf_block,
     BGZF_EOF,
+    _bgzf_compress,
+    _BgzfIndexStream,
+    _read_bam_region_indexed,
+    _record_spans,
+    _write_index,
 )
 
 CSI_MAGIC = b"CSI\x01"
@@ -114,7 +114,7 @@ def build_csi(
 ) -> bytes:
     """One streaming pass over a BAM (bytes or seekable file) ->
     spec-conforming .csi bytes (BGZF-wrapped unless compress=False).
-    Same constant-memory walk as build_bai; per-bin loffset = the
+    Same constant-memory bam._record_spans walk as build_bai; per-bin loffset = the
     backward-filled min record voffset of the bin's first leaf
     window (any value <= the true first-overlap voffset is a legal
     lower bound for a coordinate-sorted BAM — readers only use it to
@@ -126,36 +126,12 @@ def build_csi(
     linear: list[dict[int, int]] = [dict() for _ in range(n_ref)]
     n_no_coor = 0
 
-    def _voff(u: int) -> int:
-        c, uo = st.voffset(u)
-        return (c << 16) | uo
-
-    o = off
-    while True:
-        while st.total_u < o + 4:
-            if not st.more():
-                break
-        if st.total_u < o + 4:
-            break
-        (block_size,) = struct.unpack_from("<i", st.buf, o - st.base_u)
-        while st.total_u < o + 4 + block_size:
-            if not st.more():
-                raise ValueError("truncated BAM: record body incomplete")
-        r = o - st.base_u + 4
-        ref_id, pos0 = struct.unpack_from("<ii", st.buf, r)
-        l_read_name = st.buf[r + 8]
-        (n_cigar,) = struct.unpack_from("<H", st.buf, r + 12)
-        v_beg = _voff(o)
-        v_end = _voff(o + 4 + block_size)
-        if ref_id < 0:
+    for o, block_size, ref_id, pos0, end0 in _record_spans(st, off):
+        o_next = o + 4 + block_size
+        v_beg, v_end = st.vpack(o), st.vpack(o_next)
+        if end0 is None:
             n_no_coor += 1
         else:
-            co = r + 32 + l_read_name
-            ops = struct.unpack_from(f"<{n_cigar}I", st.buf, co)
-            ref_len = sum(
-                op >> 4 for op in ops if (op & 0xF) in _REF_CONSUMING
-            )
-            end0 = pos0 + max(ref_len, 1)
             b = reg2bin_csi(pos0, end0, min_shift, depth)
             chunks = bins[ref_id].setdefault(b, [])
             if chunks and chunks[-1][1] == v_beg:  # adjacent: extend
@@ -166,8 +142,7 @@ def build_csi(
                 prev = linear[ref_id].get(w)
                 if prev is None or v_beg < prev:
                     linear[ref_id][w] = v_beg
-        o += 4 + block_size
-        st.trim(o)
+        st.trim(o_next)
 
     out = bytearray(CSI_MAGIC)
     out += struct.pack("<iii", min_shift, depth, 0)  # no aux payload
@@ -195,12 +170,7 @@ def build_csi(
     out += struct.pack("<Q", n_no_coor)
     if not compress:
         return bytes(out)
-    # BGZF members hold < 64 KiB of payload each
-    blocks = bytearray()
-    for i in range(0, len(out), 60000):
-        blocks += _bgzf_block(bytes(out[i : i + 60000]))
-    blocks += BGZF_EOF
-    return bytes(blocks)
+    return _bgzf_compress(bytes(out)) + BGZF_EOF
 
 
 def write_csi(
@@ -209,13 +179,11 @@ def write_csi(
     min_shift: int = DEFAULT_MIN_SHIFT,
     depth: int = DEFAULT_DEPTH,
 ) -> str:
-    """Index a BAM file on disk: writes ``<bam>.csi`` (or csi_path)."""
-    csi_path = csi_path or bam_path + ".csi"
-    with open(_local_path(bam_path), "rb") as f:
-        data = build_csi(f, min_shift, depth)
-    with open(csi_path, "wb") as f:
-        f.write(data)
-    return csi_path
+    """Index a BAM file on disk (local path or file: URI): writes
+    ``<bam>.csi`` (or csi_path) and returns its path."""
+    return _write_index(
+        "csi", bam_path, csi_path, min_shift=min_shift, depth=depth
+    )
 
 
 # ------------------------------------------------------ parse (reader)
@@ -328,18 +296,7 @@ def read_bam_region_csi(
     """Indexed region fetch driven by a REAL .csi (defaults to
     ``<path>.csi``): same result contract as read_bam_region_bai /
     bam.read_bam_region (pinned equal in tests), through the shared
-    fetch_voffset_ranges back half."""
-    csi_path = csi_path or path + ".csi"
-    with open(_local_path(csi_path), "rb") as fh:
-        per_ref, min_shift, depth, _ = parse_csi(fh.read())
-    refs = read_bam_refs(path)
-    try:
-        ref_id = refs.index(contig)
-    except ValueError:
-        ref_id = -1
-    ranges = csi_candidate_ranges(
-        per_ref, min_shift, depth, ref_id, int(start), int(end)
-    )
-    return fetch_voffset_ranges(
-        spark, path, ranges, refs, contig, int(start), int(end)
+    bam.fetch_voffset_triples back half."""
+    return _read_bam_region_indexed(
+        spark, "csi", path, contig, start, end, csi_path
     )

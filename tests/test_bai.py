@@ -10,14 +10,17 @@ import re
 from seqtables_spark.sources.bai import (
     bai_candidate_ranges,
     build_bai,
-    decode_bam_voffset_range,
     parse_bai,
     read_bam_region_bai,
     reg2bin,
     reg2bins,
     write_bai,
 )
-from seqtables_spark.sources.bam import _parse_header, encode_bam
+from seqtables_spark.sources.bam import (
+    _parse_header,
+    decode_bam_voffset_range,
+    encode_bam,
+)
 
 
 def test_reg2bin_spec_values():
@@ -198,8 +201,7 @@ def test_bai_external_reader_interop(tmp_path):
 def test_read_bam_refs_truncated_file_raises_clear_error(tmp_path):
     """Round-9 (advice): a file whose header never parses must raise
     ValueError here, not AttributeError later in a refs consumer."""
-    from seqtables_spark.sources.bai import read_bam_refs
-    from seqtables_spark.sources.bam import _bgzf_block
+    from seqtables_spark.sources.bam import _bgzf_block, read_bam_refs
 
     import struct
 

@@ -225,14 +225,17 @@ class TestShardedWriteBam:
 
 
 class TestBaiCsiCrossIndex:
-    """Internal htslib-free interop evidence: the .bai and .csi
-    writers are INDEPENDENT implementations (6-level fixed scheme +
-    linear index vs configurable-depth scheme + per-bin loffsets).
+    """Internal htslib-free interop evidence. The .bai and .csi
+    writers share one BGZF reader and one record-span walk
+    (bam._record_spans), so this class does NOT cross-check how record
+    spans are read. What stays INDEPENDENT, and is compared here:
+    binning (reg2bin/reg2bins vs reg2bin_csi/reg2bins_csi), the lower
+    bound (the 16 kb linear index vs per-bin loffsets), serialization
+    (the two writers' and the two parsers' layouts), and candidate-
+    range selection (bai_candidate_ranges vs csi_candidate_ranges).
     For the BAI-equivalent CSI geometry (min_shift=14, depth=5) they
-    must agree bin-for-bin, chunk-for-chunk, and region-for-region -
-    two implementations agreeing on the same spec-defined artifact is
-    the strongest consistency check available without an external
-    reader (pysam unavailable here; see TESTDATA.md)."""
+    must agree bin-for-bin, chunk-for-chunk, and region-for-region
+    (pysam unavailable here; see TESTDATA.md)."""
 
     def _indexes(self):
         import random as _r
