@@ -3187,8 +3187,8 @@ def q_curate_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     verdict's #3 'what's wrong' item. Stage keys are ordinal strings
     so the relation sorts into funnel order."""
     from seqtables_spark.pipeline.dedup import (
-        band_keys_from_signatures, minhash_band_keys,
-        minhash_signature_cols,
+        DEFAULT_MAX_BROADCAST_ROWS, band_keys_from_signatures,
+        count_guarded_broadcast, minhash_band_keys, minhash_signature_cols,
     )
     from seqtables_spark.pipeline.text import gopher_quality_filter
 
@@ -3223,13 +3223,7 @@ def q_curate_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     eb = minhash_band_keys(
         evals, MINHASH_N, LSH_BANDS, LSH_K
     ).withColumnRenamed("doc_id", "_eval_id")
-    # the guard count materializes the lazy boundary; the join build
-    # then reads the banded keys instead of re-deriving them from text
-    eb = eb.localCheckpoint(eager=False)
-    if eb.count() <= 1_000_000:
-        eb = F.broadcast(eb)
-    else:
-        eb = eb.hint("shuffle_merge")
+    eb = count_guarded_broadcast(eb, DEFAULT_MAX_BROADCAST_ROWS)
     # |flagged| = distinct kept docs with >= 1 banded collision — the
     # same count near_dup_contamination(...).agg(count(*)) produced,
     # without its per-doc groupBy shuffle.
@@ -4330,380 +4324,55 @@ def _prepared(name: str, fn: Callable) -> Callable:
     return wrapped
 
 
-# Ordering feeds the driver's 50-query correctness window (it pins
-# the first 50 of the dict). Round-4 head: first the 7 queries no
-# driver round had hard-checked yet (r03 verdict item 4), then every
-# query whose implementation changed in round 4 (new asof directions,
-# bounded KMV, AQE contamination join, distributed ntile deciles, the
-# vectorized CIGAR kernel and everything downstream of it, the
-# numpy-batched multimodal decode), then rolling round-3 coverage.
-# Queries whose implementation or plan changed THIS round. RULE
-# (comment-enforced since r8, selfcheck-enforced since r9 - see
-# tools/selfcheck.py::check_priority_rotation): every name here MUST
-# lead _ORACLE_PRIORITY so the driver's 50-query correctness sample
-# attests exactly the code that moved.
-_ROUND_CHANGED = [
-    # --- round 13 OPTIMIZATION head (results identical;
-    # OPTIMIZATION_r13.md) ---
-    # §0 gate fix: the four r12 driver-red queries — oracle sums now
-    # CAST(... AS BIGINT) (DuckDB HUGEINT widening was the hash
-    # breaker); partitioned_prune day derivation integer-exact and
-    # tz-independent (no session timeZone mutation); bucketed_join
-    # catalog database PID-scoped
-    "partitioned_prune", "bucketed_join", "corpus_stats",
-    "leakage_split",
-    # §2 curate_funnel single corpus pass (keep flag + signature fold
-    # share one scan; banded contamination count from the slim
-    # signature relation)
-    "curate_funnel",
-    # §3 count-guarded eval subtrees checkpointed once
-    # (contamination_check / near_dup_contamination; curate_* consume
-    # contamination_check via pipeline/curate.py)
-    "contamination", "fuzzy_contamination", "curate_full",
-    "curate_corpus", "curate_llm",
-    # ranks.py boundary config gate (default plan unchanged — listed
-    # so the rank family re-attests on the touched module)
+# The correctness sample is the first 50 entries of queries().
+# Rule: queries whose code changed since the last attested round go
+# first; the rest of the head keeps the previous sample's order.
+# tools/selfcheck.py::check_priority_rotation warns when a q_*
+# function changed in git but sits outside this head.
+_SAMPLE_HEAD = (
+    # changed since the last attestation
+    "fastq_roundtrip", "sam_roundtrip", "bam_region", "bam_region_bai",
+    "bam_region_csi", "bowtie_align", "bowtie_distributed",
+    "bam_roundtrip", "bam_region_sharded", "quality_dist",
+    "quality_dist_fastqc", "contamination", "fuzzy_contamination",
+    "curate_funnel", "curate_full", "curate_corpus", "curate_llm",
+    # the previous sample's head
+    "partitioned_prune", "bucketed_join", "corpus_stats", "leakage_split",
     "token_budget", "customer_deciles", "training_order",
     "weighted_sample_docs", "running_revenue", "event_quantiles",
-    # quality.py empty-bins guard (plans unchanged on the preset
-    # paths; re-attest the consumers)
-    "quality_dist", "quality_dist_fastqc",
-]
-
-# Prior-round heads + rotation re-entries: names that must stay high
-# in the driver's 50-query sample without claiming a THIS-round code
-# change (check_priority_rotation only gates _ROUND_CHANGED).
-_PRIOR_HEADS = [
-    # --- r12 rotation re-entry (VERDICT r12 item 7: the 21 queries
-    # rotated OUT of the r12 sample re-enter so their attestation
-    # does not go stale) ---
     "audio_features", "bpe_merges", "bpe_tokens", "bpe_vocab",
-    "curate_corpus", "curate_llm", "dedup_clusters",
-    "dedup_clusters_star", "event_sessions", "fuzzy_contamination",
+    "dedup_clusters", "dedup_clusters_star", "event_sessions",
     "image_resize", "image_thumbs_packed", "intra_doc_dedup",
     "minhash_lsh_pairs", "repetition", "streaming_token_cms",
     "text_quality", "token_count", "value_quantiles_sketch",
     "video_frames", "warc_gz_roundtrip", "warc_roundtrip",
-    # --- round 12 OPTIMIZATION head (results identical, plans
-    # changed; OPTIMIZATION_r12.md sections 1-8) ---
-    # section 7: losers-subtree checkpoint / top-k checkpoint /
-    # literal-array bin lookup
     "dedup_survivors_pref", "dedup_survivors", "token_freq_cms",
-    "quality_dist", "quality_dist_fastqc",
-    # sections 1+8: rank framework (second exchange dropped, ranged
-    # relation checkpointed - range exchanges never runtime-reuse)
-    "token_budget", "customer_deciles", "training_order",
-    "weighted_sample_docs", "running_revenue", "event_quantiles",
-    # section 2: insertion family union-then-aggregate + gap row
-    "consensus_ins", "insertion_seq_dist", "seq_logo_ins",
-    "seq_dist_ins",
-    # sections 3-6: dsir totals window, banded-KMV single pass,
-    # semantic_dedup grouped kernel, curate boundaries/funnel
-    "dsir_weights", "source_overlap_banded", "semantic_dedup",
-    "curate_full", "curate_funnel",
-    # --- round 12 build head ---
-    # round 12: NEW query - product quantization: per-subspace
-    # codebooks (hash-ranked seeds + fixed-point Lloyd), 8-byte codes
-    # (32x), ADC LUT top-k (pipeline/similarity.pq_codebooks/
-    # pq_encode/pq_adc_topk)
-    "ann_pq",
-    # round 12: NEW queries - storage layout made first-class
-    # (hive-partition pruning + zero-exchange bucketed join), the ORC
-    # format roundtrip, and the per-source corpus data card
-    "partitioned_prune", "bucketed_join", "orc_roundtrip",
-    "corpus_stats", "leakage_split",
-    # round 12: NEW query - int8 embedding quantization + dequantized
-    # exact top-k (pipeline/similarity.quantize_embeddings)
-    "ann_quantized",
-    # round 12: NEW query - streaming sessionization (watermarked
-    # native session_window, complete-mode single drain; oracle =
-    # the batch event_sessions SQL)
-    "streaming_sessions",
-    # round 12: salt-explode gated by the sampled hot-key detector
-    # (skew.py _keys_are_skewed; uniform keys -> plain equi-join,
-    # sf1 4.1 s -> 1.34 s; hot keys still salt, pinned both ways)
-    "salted_brand_revenue",
-    # round 12: position-explode rewrite (explode(sequence)+substr)
-    # + seq-only reads + measured widen(8); sf1 4.09x -> 1.61x
-    "seq_dist_dense",
-    # round 12: decode_bam now requires the BGZF EOF magic + record
-    # bound checks (loud truncation); sharded indexed writes tolerate
-    # unmapped '*' reads; index-kind/extension mismatch is loud
-    "bam_roundtrip", "bam_region_sharded", "bam_region_bai",
-    "bam_region_csi",
-    # --- round 11 head ---
-    # round 11: per-shard .bai/.csi for sharded write_bam + manifest
-    # extent pruning + read_bam_region_sharded two-level dispatch
-    # round 11: read_bam directory scan now glob-filters *.bam (the
-    # sharded dir also holds index files); fetch_voffset_ranges
-    # refactored onto the multi-path fetch_voffset_triples core
-    "bam_roundtrip", "bam_region_bai", "bam_region_csi",
-    # round 11: native session_window sessionize (one pass, boundary
-    # -1 adjustment pins exact >= gap break semantics) + shuffle-hash
-    # binned overlap join with fused predicates + single
-    # checkpoint/stats job; sf1 on-clock 5.72 s -> 1.65 s (1.29x
-    # oracle, was 4.45x)
-    "session_overlap",
-    # round 11: algorithm="auto" crossover pick (JVM explode plan
-    # below 100M cells, Arrow bincount kernel above; the bench no
-    # longer pays the losing side at any measured sf)
-    "seq_dist_dense",
-    # round 11: EXISTS -> max-shipdate preagg + shuffle-hash join
-    # (sf1 4.59 s -> 1.01 s, identical result)
-    "pending_orders_priority",
-]
-
-_ORACLE_PRIORITY = _ROUND_CHANGED + _PRIOR_HEADS + [
-    # then the round-10 head
-    "semantic_dedup", "ann_ivf", "cluster_mix", "embedding_near_dups",
-    "classifier_score",
-    "perplexity_scores", "session_overlap", "dedup_clusters_auto",
-    "pwm_score", "pwm_log_score",
-    "gopher_filter", "chunk_documents",
-    "quality_histogram", "language_id", "pii_scan", "redact_pii",
-    "token_count", "text_quality", "repetition", "token_budget",
-    "video_frames",
-    # then the round-9 head (rolling prior-round coverage; the union
-    # of driver attestations across rounds covers all queries)
-    "classifier_score", "event_sessions", "curate_full",
-    "dedup_clusters", "dedup_clusters_star", "image_thumbs_packed",
-    "dedup_survivors", "minhash_lsh_pairs",
-    # then the round-8 head
-    "value_quantiles_sketch", "weighted_sample_docs", "token_freq_cms",
-    "streaming_token_cms",
-    "image_resize", "curate_corpus", "curate_funnel", "curate_full",
-    "curate_llm", "audio_features",
-    "bpe_merges", "bpe_tokens", "bpe_vocab",
-    "video_frames",
-    "warc_roundtrip",
-    "warc_gz_roundtrip",
-    "fuzzy_contamination",
-    "intra_doc_dedup", "gopher_filter",
-    "streaming_quality_gate", "session_overlap",
-    "dedup_survivors_pref", "redact_pii", "quality_histogram",
-    "segment_dedup", "token_budget", "zipf_slope",
-    "temperature_mix", "source_overlap",
-    "source_overlap_banded",
-    "jsonl_roundtrip", "streaming_index_dedup", "cluster_mix",
-    "rollup_revenue", "salted_brand_revenue",
-    "asof_skew", "incremental_dedup", "bowtie_distributed",
-    "duplicate_spans",
-    "streaming_near_dup_ttl",
-    "training_shards",
-    "sam_roundtrip", "bam_roundtrip", "bam_region",
-    "fastq_roundtrip",
-    "small_quantity_revenue",
-    "pending_orders_priority", "customer_setops",
-    "bowtie_align", "streaming_near_dup",
-    "training_order",
-    "asof_forward", "asof_nearest", "asof_purchase_click",
-    "kmv_users", "bloom_contamination", "contamination",
-    "customer_deciles", "event_quantiles", "ngram_jaccard",
-    "cigar_align", "cigar_insertions", "view_with_ins",
-    "insertion_events", "insertion_stats", "insertion_expectations",
-    "seq_dist_ins", "consensus_ins", "seq_logo_ins",
-    "multimodal_features", "frame_sample",
-    "click_attribution", "dsir_weights", "kmers_gapped_ins",
-    "library_alignment", "ann_lsh", "ann_ivf", "insilico_library",
-    "pairwise_hamming", "codon_usage", "motif_search",
-    "filter_reads_stats", "hamming_setdiff", "repetition", "pii_scan",
-    "pack_sequences", "chunk_documents", "stratified_sample",
-    "source_mix", "tfidf_terms", "streaming_events",
-    "streaming_windowed", "streaming_dedup", "events_hourly",
-    "event_sessions", "pricing_summary", "revenue_by_nation",
-    "profit_by_nation_brand", "top_orders_per_cust",
-    "salted_brand_revenue", "dedup_clusters_star",
-    "semantic_dedup", "rollup_revenue", "customers_without_orders",
-    "running_revenue", "json_events", "duplicate_spans",
-    "value_quantiles_sketch", "weighted_sample_docs", "token_freq_cms",
-    "streaming_token_cms",
-    "classifier_score", "curate_corpus", "seq_dist_dense",
-]
+    "consensus_ins",
+)
 
 
 def queries(cached: bool = True) -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """cached=True (the driver's path) memoizes the built DataFrame
+    """Every q_<name> function of this module, keyed by <name>:
+    _SAMPLE_HEAD first, then the rest in definition order.
+
+    cached=True (the default) memoizes the built DataFrame
     per (query, sf_dir) - the prepared-statement model. bench.py
     passes cached=False: re-collecting one DataFrame instance reuses
     its shuffle map outputs (Spark keeps them per RDD lineage), so a
     warm-timing loop over cached plans would measure shuffle REUSE,
     not execution - each bench run must build a fresh plan."""
-    raw = _raw_queries()
-    ordered = {n: raw[n] for n in _ORACLE_PRIORITY if n in raw}
-    ordered.update(raw)
+    defined = {
+        name[2:]: fn
+        for name, fn in globals().items()
+        if name.startswith("q_") and getattr(fn, "__module__", None) == __name__
+    }
+    ordered = {name: defined[name] for name in _SAMPLE_HEAD}
+    ordered.update(defined)
     if not cached:
         return ordered
     return {
         name: fn if name in _PLAN_CACHE_EXCLUDE else _prepared(name, fn)
         for name, fn in ordered.items()
-    }
-
-
-def _raw_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "seq_dist": q_seq_dist,
-        "seq_dist_dense": q_seq_dist_dense,
-        "seq_dist_freq": q_seq_dist_freq,
-        "seq_dist_weighted": q_seq_dist_weighted,
-        "hamming_norm": q_hamming_norm,
-        "compare_matches": q_compare_matches,
-        "mutation_by_position": q_mutation_by_position,
-        "pwm_log_score": q_pwm_log_score,
-        "quality_dist_fastqc": q_quality_dist_fastqc,
-        "insertion_seq_dist": q_insertion_seq_dist,
-        "consensus": q_consensus,
-        "entropy": q_entropy,
-        "hamming": q_hamming,
-        "mutation_profile": q_mutation_profile,
-        "slice_sequences": q_slice_sequences,
-        "quality_filter": q_quality_filter,
-        "quality_dist": q_quality_dist,
-        "pwm_score": q_pwm_score,
-        "ts_tv": q_ts_tv,
-        "kmers_gapped": q_kmers_gapped,
-        "kmers_gapped_ins": q_kmers_gapped_ins,
-        "kmers_contiguous": q_kmers_contiguous,
-        "translate": q_translate,
-        "library_alignment": q_library_alignment,
-        "filter_by_count": q_filter_by_count,
-        "low_qual_mask": q_low_qual_mask,
-        "cigar_align": q_cigar_align,
-        "cigar_insertions": q_cigar_insertions,
-        "insertion_stats": q_insertion_stats,
-        "insertion_expectations": q_insertion_expectations,
-        "view_with_ins": q_view_with_ins,
-        "seq_logo_ins": q_seq_logo_ins,
-        "merge_union": q_merge_union,
-        "merge_overlay": q_merge_overlay,
-        "sam_flags": q_sam_flags,
-        "softclip": q_softclip,
-        "exact_dedup": q_exact_dedup,
-        "minhash_signatures": q_minhash_signatures,
-        "simhash": q_simhash,
-        "minhash_lsh_pairs": q_minhash_lsh_pairs,
-        "ngram_jaccard": q_ngram_jaccard,
-        "incremental_dedup": q_incremental_dedup,
-        "streaming_index_dedup": q_streaming_index_dedup,
-        "dedup_clusters": q_dedup_clusters,
-        "dedup_clusters_star": q_dedup_clusters_star,
-        "dedup_clusters_auto": q_dedup_clusters_auto,
-        "image_thumbs_packed": q_image_thumbs_packed,
-        "dedup_survivors": q_dedup_survivors,
-        "dedup_survivors_pref": q_dedup_survivors_pref,
-        "embedding_near_dups": q_embedding_near_dups,
-        "multimodal_features": q_multimodal_features,
-        "audio_features": q_audio_features,
-        "subsample": q_subsample,
-        "fingerprint": q_fingerprint,
-        "token_count": q_token_count,
-        "text_quality": q_text_quality,
-        "language_id": q_language_id,
-        "cosine_topk": q_cosine_topk,
-        "ann_quantized": q_ann_quantized,
-        "ann_pq": q_ann_pq,
-        "orc_roundtrip": q_orc_roundtrip,
-        "partitioned_prune": q_partitioned_prune,
-        "bucketed_join": q_bucketed_join,
-        "corpus_stats": q_corpus_stats,
-        "leakage_split": q_leakage_split,
-        "seq_bits": q_seq_bits,
-        "relative_entropy": q_relative_entropy,
-        "plogo": q_plogo,
-        "ann_lsh": q_ann_lsh,
-        "ann_ivf": q_ann_ivf,
-        "cluster_mix": q_cluster_mix,
-        "semantic_dedup": q_semantic_dedup,
-        "insilico_library": q_insilico_library,
-        "pairwise_hamming": q_pairwise_hamming,
-        "seq_dist_ins": q_seq_dist_ins,
-        "insertion_events": q_insertion_events,
-        "codon_usage": q_codon_usage,
-        "motif_search": q_motif_search,
-        "filter_reads_stats": q_filter_reads_stats,
-        "consensus_ins": q_consensus_ins,
-        "contamination": q_contamination,
-        "frame_sample": q_frame_sample,
-        "video_frames": q_video_frames,
-        "hamming_setdiff": q_hamming_setdiff,
-        "repetition": q_repetition,
-        "segment_dedup": q_segment_dedup,
-        "bpe_merges": q_bpe_merges,
-        "bpe_tokens": q_bpe_tokens,
-        "bpe_vocab": q_bpe_vocab,
-        "warc_roundtrip": q_warc_roundtrip,
-        "warc_gz_roundtrip": q_warc_gz_roundtrip,
-        "fuzzy_contamination": q_fuzzy_contamination,
-        "intra_doc_dedup": q_intra_doc_dedup,
-        "gopher_filter": q_gopher_filter,
-        "curate_llm": q_curate_llm,
-        "streaming_quality_gate": q_streaming_quality_gate,
-        "curate_funnel": q_curate_funnel,
-        "session_overlap": q_session_overlap,
-        "token_budget": q_token_budget,
-        "zipf_slope": q_zipf_slope,
-        "image_resize": q_image_resize,
-        "temperature_mix": q_temperature_mix,
-        "source_overlap": q_source_overlap,
-        "source_overlap_banded": q_source_overlap_banded,
-        "jsonl_roundtrip": q_jsonl_roundtrip,
-        "pii_scan": q_pii_scan,
-        "redact_pii": q_redact_pii,
-        "quality_histogram": q_quality_histogram,
-        "pack_sequences": q_pack_sequences,
-        "training_order": q_training_order,
-        "training_shards": q_training_shards,
-        "chunk_documents": q_chunk_documents,
-        "stratified_sample": q_stratified_sample,
-        "source_mix": q_source_mix,
-        "tfidf_terms": q_tfidf_terms,
-        "streaming_events": q_streaming_events,
-        "streaming_windowed": q_streaming_windowed,
-        "streaming_dedup": q_streaming_dedup,
-        "streaming_near_dup": q_streaming_near_dup,
-        "streaming_near_dup_ttl": q_streaming_near_dup_ttl,
-        "events_hourly": q_events_hourly,
-        "event_sessions": q_event_sessions,
-        "streaming_sessions": q_streaming_sessions,
-        "pricing_summary": q_pricing_summary,
-        "revenue_by_nation": q_revenue_by_nation,
-        "profit_by_nation_brand": q_profit_by_nation_brand,
-        "top_orders_per_cust": q_top_orders_per_cust,
-        "duplicate_spans": q_duplicate_spans,
-        "classifier_score": q_classifier_score,
-        "curate_corpus": q_curate_corpus,
-        "curate_full": q_curate_full,
-        "fastq_roundtrip": q_fastq_roundtrip,
-        "perplexity_scores": q_perplexity_scores,
-        "small_quantity_revenue": q_small_quantity_revenue,
-        "customer_setops": q_customer_setops,
-        "pending_orders_priority": q_pending_orders_priority,
-        "sam_roundtrip": q_sam_roundtrip,
-        "bam_roundtrip": q_bam_roundtrip,
-        "bam_region": q_bam_region,
-        "bam_region_bai": q_bam_region_bai,
-        "bam_region_csi": q_bam_region_csi,
-        "bam_region_sharded": q_bam_region_sharded,
-        "bowtie_align": q_bowtie_align,
-        "bowtie_distributed": q_bowtie_distributed,
-        "rollup_revenue": q_rollup_revenue,
-        "customers_without_orders": q_customers_without_orders,
-        "running_revenue": q_running_revenue,
-        "json_events": q_json_events,
-        "value_quantiles_sketch": q_value_quantiles_sketch,
-        "weighted_sample_docs": q_weighted_sample_docs,
-        "token_freq_cms": q_token_freq_cms,
-        "streaming_token_cms": q_streaming_token_cms,
-        "salted_brand_revenue": q_salted_brand_revenue,
-        "asof_purchase_click": q_asof_purchase_click,
-        "asof_skew": q_asof_skew,
-        "asof_forward": q_asof_forward,
-        "asof_nearest": q_asof_nearest,
-        "click_attribution": q_click_attribution,
-        "kmv_users": q_kmv_users,
-        "bloom_contamination": q_bloom_contamination,
-        "dsir_weights": q_dsir_weights,
-        "event_quantiles": q_event_quantiles,
-        "customer_deciles": q_customer_deciles,
     }
 
 

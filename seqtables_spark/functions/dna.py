@@ -18,16 +18,6 @@ from pyspark.sql import Column, functions as F
 from ..alphabets import CODON_TABLE, DEGENERATE_MAP, PHRED_ADJUST
 
 
-def _codon_map_col() -> Column:
-    """The 125+-entry codon table as a literal MAP column - constant-
-    folded by Catalyst, shipped once with the plan (no per-row python)."""
-    pairs: list[Column] = []
-    for codon, aa in CODON_TABLE.items():
-        pairs.append(F.lit(codon))
-        pairs.append(F.lit(aa))
-    return F.create_map(*pairs)
-
-
 def get_codons_expr(seq: Column | str, frame: int = 1) -> Column:
     """Split into codon triplets starting at reading frame 1..3;
     trailing partial codons are dropped (reference pads then strips)."""
@@ -42,30 +32,6 @@ def get_codons_expr(seq: Column | str, frame: int = 1) -> Column:
             lambda i: shifted.substr(i * 3 + 1, F.lit(3)),
         )
     )
-
-
-# 64-char AA lookup string indexed by 16*i1 + 4*i2 + i3 where
-# i = (ascii(base) >> 1) & 3 maps A->0, C->1, T->2, G->3 - the classic
-# 2-bit nucleotide encoding; one substr replaces a per-row map build.
-_NT_IDX_ORDER = "ACTG"  # index 0..3 under (ascii >> 1) & 3
-
-
-def _build_aa64() -> str:
-    from ..alphabets import _STANDARD_CODONS
-
-    out = []
-    for i1 in _NT_IDX_ORDER:
-        for i2 in _NT_IDX_ORDER:
-            for i3 in _NT_IDX_ORDER:
-                out.append(_STANDARD_CODONS[i1 + i2 + i3])
-    return "".join(out)
-
-
-_AA64 = _build_aa64()
-
-
-def _nt_index(ch: Column) -> Column:
-    return F.shiftright(F.ascii(ch), 1).bitwiseAND(F.lit(3))
 
 
 # Full translation as perfect hashing: every degenerate-alphabet char

@@ -23,7 +23,7 @@ map-side (partial hash agg) before any shuffle, so the exploded width
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .alphabets import FILL_CHAR, PHRED_ADJUST
 
@@ -620,13 +620,3 @@ class SeqTable:
             df.createOrReplaceTempView(vname)
             names.append(vname)
         return names
-
-
-def phred_char_to_num(col: Column | str, phred_adjust: int = PHRED_ADJUST) -> Column:
-    """chr(q+33) -> numeric phred (reference seqtables.py:401)."""
-    return F.ascii(col) - F.lit(phred_adjust)
-
-
-def phred_num_to_char(col: Column | str, phred_adjust: int = PHRED_ADJUST) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.char(c + F.lit(phred_adjust))

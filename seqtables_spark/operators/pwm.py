@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from collections.abc import Mapping, Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 
 def pwm_entries(
@@ -31,19 +31,6 @@ def pwm_entries(
         for letter, w in zip(column_names, weights):
             rows.append((int(pos), letter, float(w)))
     return rows
-
-
-def pwm_to_df(
-    spark: SparkSession,
-    pwm: Sequence[Sequence[float]],
-    positions: Sequence[int] | None = None,
-    column_names: str = "ACTG",
-) -> DataFrame:
-    """DataFrame form of `pwm_entries` for the join path."""
-    return spark.createDataFrame(
-        pwm_entries(pwm, positions, column_names),
-        "position long, letter string, weight double",
-    )
 
 
 def calculate_pwm(

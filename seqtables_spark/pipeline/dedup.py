@@ -1033,6 +1033,26 @@ def ngram_jaccard_pairs(
     )
 
 
+DEFAULT_MAX_BROADCAST_ROWS = 1_000_000
+
+
+def count_guarded_broadcast(small: DataFrame, max_rows: int) -> DataFrame:
+    """Join-strategy guard for a side that is small by construction
+    (an eval set's grams or band keys): broadcast it when an explicit
+    count finds <= max_rows rows, else force shuffle-merge.
+
+    The count executes the subtree; without a boundary the join build
+    would execute it a second time. The lazy boundary makes the count
+    materialize the relation once and the broadcast (or shuffle)
+    build read it back; the relation is bounded by the guard itself
+    (<= max_rows rows on the fast path, else it is the join's
+    shuffle input anyway)."""
+    small = small.localCheckpoint(eager=False)
+    if small.count() <= int(max_rows):
+        return F.broadcast(small)
+    return small.hint("shuffle_merge")
+
+
 def contamination_check(
     corpus: DataFrame,
     eval_set: DataFrame,
@@ -1079,18 +1099,7 @@ def contamination_check(
         F.explode(shingle_array(text_col, k)).alias("gram"),
     )
     if max_broadcast_grams is not None:
-        # Round 13: the count guard EXECUTES the eval subtree (scan +
-        # explode + 2-level distinct), and the join build used to
-        # execute it a second time. A lazy boundary makes the guard's
-        # count() materialize the distinct-gram relation once and the
-        # broadcast (or shuffle) build read it back — the relation is
-        # bounded by the guard itself (<= max_broadcast_grams rows on
-        # the fast path, else it is the join's shuffle input anyway).
-        eval_grams = eval_grams.localCheckpoint(eager=False)
-        if eval_grams.count() <= int(max_broadcast_grams):
-            eval_grams = F.broadcast(eval_grams)
-        else:
-            eval_grams = eval_grams.hint("shuffle_merge")
+        eval_grams = count_guarded_broadcast(eval_grams, max_broadcast_grams)
     marked = doc_grams.join(eval_grams, "gram", "left")
     return marked.groupBy(id_col).agg(
         F.count(F.lit(1)).alias("n_grams"),
@@ -1143,7 +1152,7 @@ def near_dup_contamination(
     text_col: str = "text",
     id_col: str = "doc_id",
     seed: int = 42,
-    max_broadcast_rows: int | None = 1_000_000,
+    max_broadcast_rows: int | None = DEFAULT_MAX_BROADCAST_ROWS,
 ) -> DataFrame:
     """FUZZY benchmark decontamination: corpus documents that are
     MinHash-band near-duplicates of any eval-set document.
@@ -1174,15 +1183,7 @@ def near_dup_contamination(
         eval_set, n_hashes, bands, k, text_col, id_col, seed
     ).withColumnRenamed(id_col, "_eval_id")
     if max_broadcast_rows is not None:
-        # same round-13 boundary as contamination_check: the count
-        # guard already executes the eval-side scan + signature fold +
-        # band explode; checkpoint lazily so the join build reads the
-        # materialized bands instead of executing that subtree again
-        eb = eb.localCheckpoint(eager=False)
-        if eb.count() <= int(max_broadcast_rows):
-            eb = F.broadcast(eb)
-        else:
-            eb = eb.hint("shuffle_merge")
+        eb = count_guarded_broadcast(eb, max_broadcast_rows)
     hits = cb.join(eb, ["band_idx", "band_hash"])
     return hits.groupBy(id_col).agg(
         F.countDistinct("_eval_id").cast("long").alias("n_eval_matches"),

@@ -89,71 +89,6 @@ def read_sam(
     return out
 
 
-def read_bam(
-    spark: SparkSession,
-    path: str,
-    min_mapping_quality: int | None = None,
-    n_partitions: int = 32,
-) -> DataFrame:
-    """BAM reader (reference from_pysam, seqtables.py:226-283): range-
-    partition the reference space driver-side from the BAM header, then
-    fetch each range inside mapInPandas so decode parallelizes across
-    executors - the same shape a 100 TB htsget/BAM ingest uses.
-
-    Requires pysam; when absent use the pure-Python codec
-    `sources.bam.read_bam` (no native dependency, distributes over
-    files) - it shares this reader's output schema."""
-    try:
-        import pysam  # noqa: F401
-    except ImportError as e:  # pragma: no cover - pysam absent here
-        raise ImportError(
-            "read_bam requires pysam; use seqtables_spark.sources.bam."
-            "read_bam (pure-Python BGZF/BAM codec) instead"
-        ) from e
-
-    import pandas as pd
-
-    with pysam.AlignmentFile(path, "rb") as bam:  # pragma: no cover
-        ranges = [
-            (ref, start, min(start + 1_000_000, length))
-            for ref, length in zip(bam.references, bam.lengths)
-            for start in range(0, length, 1_000_000)
-        ]
-    rdf = spark.createDataFrame(ranges, "ref string, start long, stop long").repartition(
-        n_partitions
-    )
-
-    def _fetch(batches):  # pragma: no cover
-        import pysam as _ps
-
-        bamf = _ps.AlignmentFile(path, "rb")
-        for pdf in batches:
-            out = {k: [] for k in ("header", "flag", "rname", "pos", "mapq", "cigar", "seq", "qual")}
-            for ref, start, stop in zip(pdf["ref"], pdf["start"], pdf["stop"]):
-                for r in bamf.fetch(str(ref), int(start), int(stop)):
-                    if r.reference_start < start:  # dedupe overlap
-                        continue
-                    if min_mapping_quality is not None and r.mapping_quality < min_mapping_quality:
-                        continue
-                    out["header"].append(r.query_name)
-                    out["flag"].append(r.flag)
-                    out["rname"].append(r.reference_name)
-                    out["pos"].append(r.reference_start + 1)  # 0->1 based
-                    out["mapq"].append(r.mapping_quality)
-                    out["cigar"].append(r.cigarstring or "*")
-                    out["seq"].append(r.query_sequence or "*")
-                    out["qual"].append(
-                        "".join(chr(q + 33) for q in (r.query_qualities or []))
-                    )
-            yield pd.DataFrame(out)
-
-    return rdf.mapInPandas(
-        _fetch,
-        "header string, flag int, rname string, pos long, mapq int, "
-        "cigar string, seq string, qual string",
-    )
-
-
 def filter_reads(
     df: DataFrame,
     ignore_hits: Sequence[str] = (),

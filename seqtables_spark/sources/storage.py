@@ -29,14 +29,6 @@ def position_band(position_col: str = "position", band_width: int = 100) -> str:
     return f"CAST(floor({position_col} / {band_width}) AS INT)"
 
 
-def write_partitioned_by_ref(
-    reads: DataFrame, path: str, ref_col: str = "ref"
-) -> None:
-    """Reads laid out one directory per reference/amplicon: queries
-    filtered to a reference scan only its files."""
-    reads.write.mode("overwrite").partitionBy(ref_col).parquet(path)
-
-
 def write_cells_banded(
     cells: DataFrame,
     path: str,

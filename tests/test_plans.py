@@ -325,7 +325,7 @@ def test_round3_relational_query_plan_shapes(spark):
     import __spark_entry__ as e
 
     sf = "/root/testdata/sf0.001"
-    raw = e._raw_queries()
+    raw = e.queries(cached=False)
 
     rollup = _plan(raw["rollup_revenue"](spark, sf))
     assert rollup.count("Expand") == 1

@@ -311,30 +311,17 @@ def perf_gate(spark, con, entry, names, sf_dir: str, baseline: dict | None) -> d
 
 
 def check_priority_rotation(entry) -> list[str]:
-    """VERDICT r8 #8: every query declared changed this round
-    (entry._ROUND_CHANGED) must sit inside the first 50 entries of
-    _ORACLE_PRIORITY (the driver's correctness sample size), so the
-    driver attests exactly the code that moved. Also cross-checks the
-    declaration against git: q_* functions in __spark_entry__.py with
-    diff hunks since the last round-boundary commit ("round N: ..."),
-    whose query name is missing from _ROUND_CHANGED, are reported too
-    (WARNINGS, not failures - library-level changes can't be seen this
-    way and need the manual list)."""
+    """The correctness sample is the first 50 entries of
+    entry.queries(): a query whose q_* function has diff hunks since
+    the last round-boundary commit ("round N: ...") must sit among
+    them, so the sample attests the code that moved. Reported as WARNINGS, not
+    failures - library-level changes can't be seen this way, and
+    entry._SAMPLE_HEAD lists them by hand."""
     import ast
     import subprocess
 
     warnings: list[str] = []
-    prio: list[str] = []
-    for n in entry._ORACLE_PRIORITY:  # dedupe, keep first occurrence
-        if n not in prio:
-            prio.append(n)
-    head = set(prio[:50])
-    for name in entry._ROUND_CHANGED:
-        if name not in head:
-            warnings.append(
-                f"_ROUND_CHANGED query {name!r} sits past index 50 in "
-                "_ORACLE_PRIORITY - the driver sample will not attest it"
-            )
+    head = set(list(entry.queries(cached=False))[:50])
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     entry_py = os.path.join(root, "__spark_entry__.py")
@@ -367,17 +354,13 @@ def check_priority_rotation(entry) -> list[str]:
         for node in tree.body
         if isinstance(node, ast.FunctionDef) and node.name.startswith("q_")
     }
-    raw = entry._raw_queries()
-    fn_to_query = {fn.__name__: qname for qname, fn in raw.items()}
-    declared = set(entry._ROUND_CHANGED)
     for fname, (lo, hi) in fn_spans.items():
-        if fname in fn_to_query and any(lo <= ln <= hi for ln in changed_lines):
-            q = fn_to_query[fname]
-            if q not in declared:
-                warnings.append(
-                    f"query {q!r} ({fname}) changed since round-boundary "
-                    f"commit {base[:8]} but is not in _ROUND_CHANGED"
-                )
+        query = fname[2:]
+        if query not in head and any(lo <= ln <= hi for ln in changed_lines):
+            warnings.append(
+                f"query {query!r} ({fname}) changed since round-boundary "
+                f"commit {base[:8]} but is not in the first 50 of queries()"
+            )
     return warnings
 
 
