@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .alphabets import FILL_CHAR, PHRED_ADJUST
+from .session import local_relation
 
 #: split pattern that never produces a trailing empty element
 _CHAR_SPLIT = "(?!$)"
@@ -192,8 +193,8 @@ class SeqTable:
     @property
     def insertions(self) -> DataFrame:
         if self._insertions is None:
-            spark = SparkSession.getActiveSession()
-            self._insertions = spark.createDataFrame(
+            self._insertions = local_relation(
+                SparkSession.getActiveSession(),
                 [],
                 "read_id string, position long, loc_ins int, base string, qual int",
             )

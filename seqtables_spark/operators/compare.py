@@ -29,6 +29,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from ..session import local_relation
+
 # NT transitions (purine<->purine, pyrimidine<->pyrimidine); all other
 # substitutions are transversions (reference seqtables.py:1170-1221).
 TRANSITIONS = {("A", "G"), ("G", "A"), ("C", "T"), ("T", "C")}
@@ -43,9 +45,10 @@ def ref_cells_from_strings(
     from literal strings; mirrors _align_ref_seqs (seqtables.py:688-709).
 
     References are by definition tiny (M refs x P positions), so the
-    cells are exploded driver-side into a single-partition local
-    relation: the broadcast side of every downstream join costs zero
-    Spark jobs to build (vs re-entering the from_list constructor,
+    cells are exploded driver-side into a JVM-born LocalRelation
+    (session.local_relation): building it runs no job, and the
+    broadcast side of every downstream join is a LocalTableScan with
+    no Python-worker task (vs re-entering the from_list constructor,
     which would add a width-discovery action + an explode stage)."""
     if isinstance(refs, dict):
         items = list(refs.items())
@@ -58,10 +61,7 @@ def ref_cells_from_strings(
         for rid, s in items
         for off in range(width)
     ]
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1),
-        "ref_id string, position long, ref_base string",
-    )
+    return local_relation(spark, rows, "ref_id string, position long, ref_base string")
 
 
 def _match_expr(

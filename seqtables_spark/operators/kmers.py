@@ -8,7 +8,9 @@ Scale notes. The gapped variant is combinatorially explosive BY
 SPECIFICATION (the reference warns the same); we keep it faithful for
 small P and add `contiguous_kmers` as the scale path: sliding-window
 k-mers via a single explode - linear in input size, the shape every
-large-scale pipeline (dedup shingles, motif counting) actually uses.
+large-scale pipeline (dedup shingles, motif counting) actually uses;
+its window substrings are a compiled projection over the exploded
+start positions.
 The combination list is built driver-side (it is metadata, size
 C(P,k)) and exploded executor-side; counting is one hash aggregate.
 """
@@ -172,15 +174,19 @@ def contiguous_kmers(
 ) -> DataFrame:
     """Sliding-window k-mers (the scalable counting mode): one row per
     (k-mer occurrence), counted. Returns DF(kmer, cnt) or
-    DF(id, kmer, cnt) when id_col is given. Pure explode + hash agg:
-    linear, no driver combinatorics, partial aggregation map-side."""
+    DF(id, kmer, cnt) when id_col is given. Explodes the window start
+    positions and takes ``substr(text, i, k)`` in the projection after
+    the explode, so the whole path is codegen'd (a ``transform``
+    lambda would be evaluated interpreted, once per element); then a
+    hash agg: linear, no driver combinatorics, partial aggregation
+    map-side."""
     ids = [F.col(id_col)] if id_col else []
-    kmer = F.explode(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length(text_col) - F.lit(k - 1), F.lit(0))),
-            lambda i: F.col(text_col).substr(i, F.lit(k)),
-        )
-    ).alias("kmer")
-    exploded = df.filter(F.length(text_col) >= k).select(*ids, kmer)
+    text = F.col(text_col)
+    starts = F.explode(F.sequence(F.lit(1), F.length(text) - F.lit(k - 1)))
+    exploded = (
+        df.filter(F.length(text) >= k)
+        .select(*ids, text.alias("_text"), starts.alias("_i"))
+        .select(*ids, F.col("_text").substr(F.col("_i"), F.lit(k)).alias("kmer"))
+    )
     keys = ([id_col] if id_col else []) + ["kmer"]
     return exploded.groupBy(*keys).agg(F.count(F.lit(1)).alias("cnt"))

@@ -20,11 +20,11 @@ histogram:
     task over <= P x |phred| rows) and assign bins by arithmetic;
   - an explicit bin list is attached to the histogram rows by
     _attach_bins (a literal-array lookup, or a broadcast range join
-    when bins overlap);
-  - counts are summed by (bin, qual), and the EXACT percentiles are
-    interpolated on that tiny table with window functions (phred is a
-    small integer domain, ~0..45), not by a sort-based percentile()
-    over the raw cells.
+    against a LocalRelation bin table when bins overlap);
+  - one aggregate per bin over the histogram rows gives mean, min,
+    max and the EXACT percentiles: percentile() weighted by the row
+    counts, so its buffer holds at most |phred| values per bin (phred
+    is a small integer domain, ~0..45) and it never sees a cell.
 At 100 TB the shuffles carry kilobytes.
 
 quality_filter is a row-local predicate on reads: it counts the
@@ -41,6 +41,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from ..model import SeqTable
+from ..session import local_relation
 
 
 def fastqc_bins(max_position: int) -> list[tuple[int, int]]:
@@ -128,10 +129,9 @@ def _attach_bins(spark, qcells: DataFrame, bin_list) -> DataFrame:
             )
             .filter(F.col("bin_name").isNotNull())
         )
-    bins_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(f"{lo}-{hi}" if lo != hi else str(lo), lo, hi) for lo, hi in bin_list], 1
-        ),
+    bins_df = local_relation(
+        spark,
+        [(f"{lo}-{hi}" if lo != hi else str(lo), lo, hi) for lo, hi in bin_list],
         "bin_name string, bin_lo long, bin_hi long",
     )
     return qcells.join(
@@ -198,9 +198,10 @@ def quality_dist(
     min, max, p0, p10, p25, p50, p75, p90, p100, ... user percentiles).
     The percentile set always includes {0,10,25,50,75,90,100} like the
     reference (numpy_ops.py:251-257). Percentiles are exact with
-    linear interpolation (numpy/Spark `percentile` semantics:
-    rank = p*(n-1), v = v[floor] + frac*(v[ceil] - v[floor])), computed
-    from the per-bin quality histogram - see module docstring.
+    linear interpolation (numpy/Spark `percentile` semantics: rank =
+    p*(n-1), interpolated between the values at floor and ceil of the
+    rank), computed from the per-bin quality histogram - see module
+    docstring.
     Building the plan runs no Spark job; a table with no scored cells
     gives an empty result.
     """
@@ -219,59 +220,25 @@ def quality_dist(
     else:
         binned = _attach_bins(spark, hist, [(int(lo), int(hi)) for lo, hi in bins])
     pset = sorted(set(int(p) for p in percentiles) | {0, 10, 25, 50, 75, 90, 100})
-
-    hist = binned.groupBy("bin_name", "bin_lo", "bin_hi", "qual").agg(
-        F.sum("c").alias("c")
+    # one aggregate over the histogram rows: percentile() with the
+    # count as frequency is exact and interpolates at rank (n-1)*p
+    pct = F.percentile("qual", F.array(*[F.lit(p / 100.0) for p in pset]), frequency=F.col("c"))
+    out = binned.groupBy("bin_name", "bin_lo", "bin_hi").agg(
+        (F.sum(F.col("qual") * F.col("c")).cast("double") / F.sum("c")).alias("mean"),
+        pct.alias("_pct"),
+        F.min("qual").alias("min"),
+        F.max("qual").alias("max"),
     )
-    bywin = Window.partitionBy("bin_name")
-    cumwin = bywin.orderBy("qual").rowsBetween(Window.unboundedPreceding, 0)
-    hist = (
-        hist.withColumn("cum", F.sum("c").over(cumwin))
-        .withColumn("cum_lo", F.col("cum") - F.col("c"))
-        .withColumn("n", F.sum("c").over(bywin))
-        .withColumn("qc_sum", F.sum(F.col("qual") * F.col("c")).over(bywin))
+    return out.select(
+        "bin_name",
+        "bin_lo",
+        "bin_hi",
+        "mean",
+        F.col("_pct")[pset.index(50)].alias("median"),
+        "min",
+        "max",
+        *[F.col("_pct")[i].alias(f"p{p}") for i, p in enumerate(pset)],
     )
-
-    pct_df = F.broadcast(
-        spark.createDataFrame(
-            spark.sparkContext.parallelize([(p, p / 100.0) for p in pset], 1),
-            "p long, frac double",
-        )
-    )
-    rk = (F.col("n") - 1).cast("double") * F.col("frac")
-    # a histogram row holds sorted indexes [cum_lo, cum); pick the rows
-    # covering the two indexes that bracket the fractional rank
-    covers = lambda idx: (idx >= F.col("cum_lo")) & (idx < F.col("cum"))  # noqa: E731
-    vals = (
-        hist.join(pct_df, how="cross")
-        .withColumn("rk", rk)
-        .groupBy("bin_name", "bin_lo", "bin_hi", "p")
-        .agg(
-            F.max(F.when(covers(F.floor("rk")), F.col("qual"))).alias("v_lo"),
-            F.max(F.when(covers(F.ceil("rk")), F.col("qual"))).alias("v_hi"),
-            F.max("rk").alias("rk"),
-            F.max("n").alias("n"),
-            F.max("qc_sum").alias("qc_sum"),
-            F.min(F.when(F.col("cum_lo") == 0, F.col("qual"))).alias("minq"),
-            F.max(F.when(F.col("cum") == F.col("n"), F.col("qual"))).alias("maxq"),
-        )
-        .withColumn(
-            "val",
-            F.col("v_lo")
-            + (F.col("rk") - F.floor("rk")) * (F.col("v_hi") - F.col("v_lo")),
-        )
-    )
-    out = vals.groupBy("bin_name", "bin_lo", "bin_hi").agg(
-        (F.max("qc_sum").cast("double") / F.max("n")).alias("mean"),
-        F.max(F.when(F.col("p") == 50, F.col("val"))).alias("median"),
-        F.max("minq").alias("min"),
-        F.max("maxq").alias("max"),
-        *[
-            F.max(F.when(F.col("p") == p, F.col("val"))).alias(f"p{p}")
-            for p in pset
-        ],
-    )
-    return out
 
 
 def _n_codes_at_least(qual: Column, code: int) -> Column:

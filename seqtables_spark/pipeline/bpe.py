@@ -43,6 +43,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from ..session import local_relation
+
 __all__ = [
     "word_vocab",
     "train_bpe",
@@ -330,23 +332,12 @@ def train_bpe(
 
 
 def bpe_rules_df(spark: SparkSession, rules: list[dict]) -> DataFrame:
-    """Rules as a JVM-born LocalRelation (SQL VALUES — NOT
-    createDataFrame, whose python-RDD scan pays a per-partition
-    python-worker roundtrip on every downstream action;
-    SCALING.md round-6 trap #1). Tokens are [a-z]+ so inlining the
-    literals is injection-safe."""
-    if not rules:
-        return spark.sql(
-            "SELECT CAST(NULL AS INT) AS merge_rank, '' AS lhs, '' AS rhs, "
-            "CAST(NULL AS BIGINT) AS pair_count WHERE 1=0"
-        )
-    rows = ", ".join(
-        f"({r['merge_rank']}, '{r['lhs']}', '{r['rhs']}', "
-        f"CAST({r['pair_count']} AS BIGINT))"
-        for r in rules
-    )
-    return spark.sql(
-        f"SELECT * FROM VALUES {rows} AS t(merge_rank, lhs, rhs, pair_count)"
+    """Rules as a JVM-born LocalRelation (session.local_relation)."""
+    cols = ("merge_rank", "lhs", "rhs", "pair_count")
+    return local_relation(
+        spark,
+        [tuple(r[c] for c in cols) for r in rules],
+        "merge_rank int, lhs string, rhs string, pair_count long",
     )
 
 

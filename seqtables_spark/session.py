@@ -16,8 +16,10 @@ upper bound for the local harness.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable, Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -51,3 +53,49 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _sql_literal(value, sql_type: str) -> str:
+    if value is None:
+        lit = "NULL"
+    elif isinstance(value, str):
+        lit = f"CAST(X'{value.encode('utf-8').hex()}' AS STRING)"
+    elif isinstance(value, int) and not isinstance(value, bool):
+        lit = str(value)
+    else:
+        raise TypeError(f"local_relation: unsupported value {value!r}")
+    return f"CAST({lit} AS {sql_type})"
+
+
+def local_relation(
+    spark: SparkSession,
+    rows: Iterable[Sequence],
+    ddl: str | StructType,
+) -> DataFrame:
+    """A JVM-born LocalRelation of ``rows`` typed by ``ddl``.
+
+    ``createDataFrame`` on a Python list scans a Python RDD, so every
+    action over the result first runs a Python-worker task (SCALING.md
+    trap #1). This emits ``SELECT * FROM VALUES ...`` instead, which
+    the analyzer folds into a LocalRelation: building it runs no job,
+    scanning it starts no Python worker, and the executed plan shows a
+    ``LocalTableScan``.
+
+    Each value is a typed CAST: a string is a UTF-8 hex literal, so no
+    value can break or inject into the SQL; an int is a numeral; None
+    is a typed NULL. Any other type raises TypeError. Empty ``rows``
+    give a typed empty relation.
+
+    For bounded metadata tables only (file lists, bin tables, reference
+    cells, manifests): the SQL text grows with the rows, so data-sized
+    tables do not belong here."""
+    schema = StructType.fromDDL(ddl) if isinstance(ddl, str) else ddl
+    types = [f.dataType.simpleString() for f in schema.fields]
+    rows = list(rows)
+    values = ", ".join(
+        "(" + ", ".join(_sql_literal(v, t) for v, t in zip(r, types, strict=True)) + ")"
+        for r in rows or [(None,) * len(types)]
+    )
+    names = ", ".join("`" + f.name.replace("`", "``") + "`" for f in schema.fields)
+    where = "" if rows else " WHERE false"
+    return spark.sql(f"SELECT * FROM VALUES {values} AS t({names}){where}")

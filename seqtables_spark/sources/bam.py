@@ -61,6 +61,8 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import local_relation
+
 BAM_MAGIC = b"BAM\x01"
 CIGAR_OPS = "MIDNSHP=X"
 SEQ_NIBBLE = "=ACMGRSVTWYHKDBN"
@@ -716,22 +718,14 @@ def fetch_voffset_triples(
     import pandas as pd
 
     if not triples:
-        return spark.createDataFrame([], BAM_SCHEMA)
-    # JVM-born VALUES relation with the path quote-escaped (the warc
-    # reader's pattern; round-8 ADVICE fix): a quote in the path can
-    # no longer break or inject into the SQL, and the relation stays
-    # a LocalRelation — createDataFrame was tried and REVERTED, its
-    # python-RDD scan pays a python-worker roundtrip per action
-    # (SCALING.md round-6 trap #1; measured 0.25 s -> 0.79 s on
-    # bam_region_bai).
-    rows = ", ".join(
-        "('{}', CAST({} AS BIGINT), CAST({} AS BIGINT))".format(
-            p.replace("'", "''"), int(cb), int(ce)
-        )
-        for p, cb, ce in triples
-    )
-    rel = spark.sql(
-        f"SELECT * FROM VALUES {rows} AS t(path, v_beg, v_end)"
+        return local_relation(spark, [], BAM_SCHEMA)
+    # a JVM-born LocalRelation: createDataFrame was tried and REVERTED,
+    # its python-RDD scan pays a python-worker roundtrip per action
+    # (SCALING.md trap #1; measured 0.25 s -> 0.79 s on bam_region_bai)
+    rel = local_relation(
+        spark,
+        [(p, int(cb), int(ce)) for p, cb, ce in triples],
+        "path string, v_beg long, v_end long",
     ).repartition(min(len(triples), spark.sparkContext.defaultParallelism))
 
     def _decode(batches):
@@ -1155,17 +1149,10 @@ def write_bam(
         _write_index(index, path)
 
     spark = df.sparkSession
-    schema = "path string, n_records long, n_bytes long"
-    if not manifest:
-        return spark.createDataFrame([], schema)
-    rows = ", ".join(
-        "('{}', CAST({} AS BIGINT), CAST({} AS BIGINT))".format(
-            m["path"].replace("'", "''"), m["n_records"], m["n_bytes"]
-        )
-        for m in manifest
-    )
-    return spark.sql(
-        f"SELECT * FROM VALUES {rows} AS t(path, n_records, n_bytes)"
+    return local_relation(
+        spark,
+        [(m["path"], m["n_records"], m["n_bytes"]) for m in manifest],
+        "path string, n_records long, n_bytes long",
     )
 
 

@@ -49,6 +49,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..session import local_relation
 from .sam import SAM_STD_COLS, read_sam
 
 __all__ = [
@@ -410,16 +411,10 @@ def bowtie2_align_distributed(
 
     if isinstance(fastq_files, DataFrame):
         paths_df = fastq_files
-    elif paired:
-        rows = [(os.path.abspath(a), os.path.abspath(b)) for a, b in fastq_files]
-        paths_df = spark.createDataFrame(
-            rows, "path string, path2 string"
-        ).repartition(max(len(rows), 1))
     else:
-        rows = [(os.path.abspath(p),) for p in fastq_files]
-        paths_df = spark.createDataFrame(rows, "path string").repartition(
-            max(len(rows), 1)
-        )
+        rows = [tuple(map(os.path.abspath, f if paired else (f,))) for f in fastq_files]
+        ddl = "path string, path2 string" if paired else "path string"
+        paths_df = local_relation(spark, rows, ddl).repartition(max(len(rows), 1))
 
     opts = _normalize_options(options)
     keep = tuple(opt_fields_keep)

@@ -47,6 +47,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..session import local_relation
+
 WARC_SCHEMA = StructType(
     [
         StructField("warc_file", StringType()),
@@ -168,19 +170,14 @@ def read_warc(
     paths = sorted(_glob.glob(path)) if any(c in path for c in "*?[") else [path]
     if not paths:
         raise FileNotFoundError(path)
-    # JVM-born file list (VALUES, not createDataFrame — a python-RDD
-    # local relation pays a python-worker roundtrip per partition);
-    # EXACTLY one partition per file so each task streams exactly one
-    # file: hash-repartitioning on path gives no such guarantee (path
-    # hash collisions stack two files in one task and leave another
-    # empty), so emit a monotone file index and range-partition on it —
-    # n distinct index values into n ranges is one file per task.
-    rows = ", ".join(
-        "({}, '{}')".format(i, p.replace("'", "''"))
-        for i, p in enumerate(paths)
-    )
+    # JVM-born file list (session.local_relation); EXACTLY one
+    # partition per file so each task streams exactly one file:
+    # hash-repartitioning on path gives no such guarantee (path hash
+    # collisions stack two files in one task and leave another empty),
+    # so emit a monotone file index and range-partition on it — n
+    # distinct index values into n ranges is one file per task.
     files = (
-        spark.sql(f"SELECT * FROM VALUES {rows} AS t(file_idx, path)")
+        local_relation(spark, enumerate(paths), "file_idx int, path string")
         .repartitionByRange(len(paths), "file_idx")
         .select("path")
     )
@@ -314,15 +311,4 @@ def write_warc(
             )
 
     manifest = src.mapInPandas(_write, _MANIFEST_SCHEMA).collect()
-    spark = df.sparkSession
-    if not manifest:
-        return spark.createDataFrame([], _MANIFEST_SCHEMA)
-    rows = ", ".join(
-        "('{}', CAST({} AS BIGINT), CAST({} AS BIGINT))".format(
-            m["path"].replace("'", "''"), m["n_records"], m["n_bytes"]
-        )
-        for m in manifest
-    )
-    return spark.sql(
-        f"SELECT * FROM VALUES {rows} AS t(path, n_records, n_bytes)"
-    )
+    return local_relation(df.sparkSession, manifest, _MANIFEST_SCHEMA)

@@ -55,7 +55,7 @@ def test_no_banned_operators_subset(audit_subset):
 def test_bnlj_carriers_detected(audit_subset):
     # the audit must actually SEE the nested-loop joins it adjudicates,
     # otherwise the allowlist is untestable
-    assert audit_subset["quality_dist"]["bnlj"] >= 1
+    assert audit_subset["view_with_ins"]["bnlj"] >= 1
     assert audit_subset["customer_setops"]["bnlj"] >= 1
     assert audit_subset["pairwise_hamming"]["bnlj"] >= 1
 

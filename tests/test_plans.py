@@ -9,8 +9,9 @@ silently when an operator is refactored. These tests pin them:
   - per-position aggregations are hash aggregates with a map-side
     partial before the exchange (the shuffle carries the collapsed
     distribution, not the exploded cells),
-  - quality_dist never falls back to a sort-based / object-hash
-    aggregate (its percentiles come from the tiny histogram),
+  - quality_dist never falls back to a sort-based aggregate, and its
+    object-hash percentile aggregate reads only the tiny histogram
+    (raw cells feed only the partial count),
   - parquet scans under a filter push the predicate into the scan.
 
 The assertions read the pre-execution executedPlan string (the
@@ -21,6 +22,7 @@ join to broadcast).
 """
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -73,7 +75,11 @@ def test_seq_dist_is_partial_then_final_hash_aggregate(cells):
 def test_quality_dist_has_no_sort_based_percentile(cells):
     plan = _plan(quality_dist(cells, bins=[(1, 4), (5, 8)]))
     assert "SortAggregate" not in plan
-    assert "ObjectHashAggregate" not in plan  # percentile() would force one
+    # the percentile() object-hash aggregate sits above the histogram
+    # exchange: below it, raw cells feed only the partial count
+    hist_exchange = re.search(r"Exchange hashpartitioning\(position#\d+L?, qual#", plan)
+    assert hist_exchange is not None
+    assert "ObjectHashAggregate" not in plan[hist_exchange.end():]
     assert plan.count("HashAggregate") >= 2
 
 

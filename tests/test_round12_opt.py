@@ -437,10 +437,11 @@ def test_quality_dist_lookup_matches_range_join(spark):
 
 
 def test_quality_dist_lookup_plan_has_single_cross(spark):
-    """Plan pin: with preset bins the only nested-loop node is the
-    tiny hist x percentile cross (the bins are arithmetic on the
-    position histogram); an explicit non-overlapping bin list is a
-    row-local element_at lookup, not a range join."""
+    """Plan pin: with preset bins there is no nested-loop node (the
+    bins are arithmetic on the position histogram, and the
+    percentiles are one aggregate over it); an explicit
+    non-overlapping bin list is a row-local element_at lookup, not a
+    range join."""
     from seqtables_spark.operators.quality import quality_dist
 
     cells = spark.createDataFrame(
@@ -450,13 +451,12 @@ def test_quality_dist_lookup_plan_has_single_cross(spark):
     df = quality_dist(cells, bins="even")
     # executedPlan().toString() lists each physical node exactly once
     # (the formatted explain's doubled tree+detail mentions were a
-    # brittle pin — r12 ADVICE): exactly ONE nested-loop node = the
-    # hist x pct cross
+    # brittle pin — r12 ADVICE): no nested-loop node at all
     exec_plan = df._jdf.queryExecution().executedPlan().toString()
-    assert exec_plan.count("BroadcastNestedLoopJoin") == 1
+    assert exec_plan.count("BroadcastNestedLoopJoin") == 0
     listed = quality_dist(cells, bins=[(1, 3), (4, 6), (7, 9)])
     exec_plan = listed._jdf.queryExecution().executedPlan().toString()
-    assert exec_plan.count("BroadcastNestedLoopJoin") == 1
+    assert exec_plan.count("BroadcastNestedLoopJoin") == 0
     assert "element_at" in _plan(listed)
 
 
@@ -470,11 +470,11 @@ def test_quality_dist_overlapping_bins_fall_back_to_join(spark):
         "read_id string, position long, qual long",
     )
     df = quality_dist(cells, bins=[(1, 4), (3, 6)])
-    # TWO nested-loop nodes in the executed plan (one mention each —
+    # ONE nested-loop node in the executed plan (one mention each —
     # r12 ADVICE dropped the doubled formatted-explain counting): the
-    # kept range join plus the hist x pct cross
+    # kept range join
     exec_plan = df._jdf.queryExecution().executedPlan().toString()
-    assert exec_plan.count("BroadcastNestedLoopJoin") == 2
+    assert exec_plan.count("BroadcastNestedLoopJoin") == 1
     assert df.count() == 2  # one row per bin, both covering position 3-4
 
 

@@ -79,8 +79,6 @@ BNLJ_ALLOWED = {
     "customer_setops",           # crossJoin of three 1-row aggregates
     "dsir_weights",              # crossJoin(broadcast 1-row normalizer)
     "curate_full",               # broadcast 1-row quantile threshold in the funnel
-    "quality_dist",              # broadcast |percentiles| relation x (bin, qual) histogram
-    "quality_dist_fastqc",       # same, fastqc bin edition
     "tfidf_terms",               # crossJoin(broadcast 1-row n_docs) (text.py:146)
     "view_with_ins",             # crossJoin(broadcast slot grid) (insertions.py:204)
     "consensus_ins",             # crossJoin(broadcast 1-row n_reads) (insertions.py:264)
