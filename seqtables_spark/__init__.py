@@ -11,14 +11,3 @@ from .model import SeqTable, explode_chars
 from .constructors import from_list, from_df, from_sam_df, guess_seqtype
 
 __version__ = "0.1.0"
-
-__all__ = [
-    "get_spark",
-    "SeqTable",
-    "explode_chars",
-    "from_list",
-    "from_df",
-    "from_sam_df",
-    "guess_seqtype",
-    "__version__",
-]

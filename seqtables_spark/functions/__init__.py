@@ -15,10 +15,3 @@ from .sam import (
     cigar_tokens,
     cigar_event_total,
 )
-
-__all__ = [
-    "translate_expr", "get_codons_expr", "seq_to_regex",
-    "nt_pos_to_res_num", "res_num_to_nt_pos", "phred_decode", "phred_encode",
-    "flag_bit_set", "read_number", "nterminal_softclip",
-    "cterminal_softclip", "cigar_tokens", "cigar_event_total",
-]

@@ -36,20 +36,3 @@ from .asof import asof_join, asof_join_ranged
 from .ranges import point_in_interval_join
 from .ranks import global_ntile, global_row_number
 from .widen import widen
-
-__all__ = [
-    "seq_dist", "seq_dist_with_insertions", "consensus", "consensus_string", "pos_entropy", "seq_bits",
-    "relative_entropy", "compare_cells", "compare_to_references",
-    "hamming_distance", "pairwise_hamming", "mutation_profile", "mutation_ts_tv_profile",
-    "ref_cells_from_strings", "quality_dist", "quality_filter",
-    "convert_low_bases_to_null", "slice_sequences", "filter_by_count",
-    "calculate_pwm", "calculate_pwm_seq", "get_substrings", "contiguous_kmers", "merge_seqtables",
-    "get_insertion_events", "get_insertion_distribution",
-    "get_average_insertion_quality", "get_insertion_expectations",
-    "get_insertion_seq_dist", "view_with_insertions",
-    "consensus_with_insertions", "get_plogo", "salted_join",
-    "asof_join", "asof_join_ranged", "point_in_interval_join",
-    "global_row_number",
-    "global_ntile",
-    "widen",
-]

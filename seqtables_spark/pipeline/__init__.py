@@ -59,24 +59,3 @@ from .sketch import (
     kmv_sketch,
     sample_quantiles,
 )
-
-__all__ = [
-    "portable_string_hash", "HASH_PRIME",
-    "exact_dedup", "shingles", "minhash_signatures",
-    "minhash_candidate_pairs", "simhash", "simhash_near_dups",
-    "save_minhash_index", "incremental_near_dup_pairs",
-    "ngram_jaccard_pairs", "connected_components", "dedup_survivors",
-    "contamination_check", "tfidf_terms", "repetition_features",
-    "pii_counts", "redact_pii",
-    "token_count", "text_quality_features",
-    "quality_score", "language_id", "document_fingerprint",
-    "cosine_topk", "lsh_bucketed_cosine",
-    "stratified_sample", "mix_sources", "pack_sequences", "chunk_documents",
-    "dsir_weights", "training_order", "write_training_shards",
-    "weighted_sample",
-    "kmv_sketch", "kmv_merge", "kmv_estimate",
-    "kmv_pairwise_jaccard", "kmv_pairwise_jaccard_banded",
-    "bloom_build", "bloom_probe",
-    "cms_build", "cms_merge", "cms_estimate",
-    "hash_sample", "sample_quantiles",
-]

@@ -247,6 +247,29 @@ def bowtie2_align(
         sam_file = bowtie_ref_name + ".sam"
     sam_file = os.path.join(working_directory, os.path.basename(sam_file))
 
+    prefix = _stage_reference(
+        references, working_directory, bowtie_ref_name, bowtie_path
+    )
+    cmd = _align_argv(
+        _find_binary("bowtie2", bowtie_path), threads,
+        _normalize_options(options), prefix, fastq_files, paired, sam_file,
+    )
+    _run(cmd, "bowtie2")
+    if not os.path.isfile(sam_file):
+        raise RuntimeError(
+            "bowtie2 exited 0 but produced no SAM file - check options"
+        )
+    return read_sam(spark, sam_file, opt_fields_keep=opt_fields_keep)
+
+
+def _stage_reference(
+    references: Sequence[tuple[str, str]] | str, working_directory: str,
+    bowtie_ref_name: str, bowtie_path: str | None,
+) -> str:
+    """Index the reference once on the driver host; returns the index
+    prefix. A path is indexed as-is; [(name, seq), ...] is first
+    written to <working_directory>/<bowtie_ref_name>.fasta (ref
+    bowtie_tools.py:104-123)."""
     if isinstance(references, str):
         fasta = os.path.abspath(references)
         if not os.path.isfile(fasta):
@@ -254,27 +277,26 @@ def bowtie2_align(
     else:
         fasta = os.path.join(working_directory, bowtie_ref_name + ".fasta")
         write_fasta(list(references), fasta)
-    prefix = build_reference(
-        fasta, bowtie_ref_name, working_directory, bowtie_path
-    )
+    return build_reference(fasta, bowtie_ref_name, working_directory, bowtie_path)
 
-    cmd: list = [_find_binary("bowtie2", bowtie_path)]
+
+def _align_argv(
+    exe: str, threads: int, opts: list[str], prefix: str,
+    fastq_files: Sequence[str], paired: bool, sam_file: str,
+) -> list:
+    """The bowtie2 command line both align entry points run (ref
+    bowtie_tools.py:129-141): options verbatim, the index, -1/-2 for a
+    pair or one -U per unpaired file, then the SAM output."""
+    cmd: list = [exe]
     if threads:
         cmd += ["--threads", threads]
-    cmd += _normalize_options(options)
-    cmd += ["-x", prefix]
+    cmd += [*opts, "-x", prefix]
     if paired:
         cmd += ["-1", fastq_files[0], "-2", fastq_files[1]]
     else:
         for f in fastq_files:
             cmd += ["-U", f]
-    cmd += ["-S", sam_file]
-    _run(cmd, "bowtie2")
-    if not os.path.isfile(sam_file):
-        raise RuntimeError(
-            "bowtie2 exited 0 but produced no SAM file - check options"
-        )
-    return read_sam(spark, sam_file, opt_fields_keep=opt_fields_keep)
+    return cmd + ["-S", sam_file]
 
 
 def _normalize_options(options: Sequence) -> list[str]:
@@ -398,15 +420,8 @@ def bowtie2_align_distributed(
     os.makedirs(working_directory, exist_ok=True)
     if bowtie_ref_name is None:
         bowtie_ref_name = f"btref_{int(time.time() * 1000)}_{os.getpid()}"
-    if isinstance(references, str):
-        fasta = os.path.abspath(references)
-        if not os.path.isfile(fasta):
-            raise FileNotFoundError(f"reference fasta not found: {fasta}")
-    else:
-        fasta = os.path.join(working_directory, bowtie_ref_name + ".fasta")
-        write_fasta(list(references), fasta)
-    prefix = build_reference(
-        fasta, bowtie_ref_name, working_directory, bowtie_path
+    prefix = _stage_reference(
+        references, working_directory, bowtie_ref_name, bowtie_path
     )
 
     if isinstance(fastq_files, DataFrame):
@@ -428,15 +443,10 @@ def bowtie2_align_distributed(
             for row in pdf.itertuples(index=False):
                 with tempfile.TemporaryDirectory() as td:
                     shard = os.path.join(td, "shard.sam")
-                    cmd = [exe]
-                    if n_threads:
-                        cmd += ["--threads", str(n_threads)]
-                    cmd += opts + ["-x", prefix]
-                    if is_paired:
-                        cmd += ["-1", row.path, "-2", row.path2]
-                    else:
-                        cmd += ["-U", row.path]
-                    cmd += ["-S", shard]
+                    fastqs = (row.path, row.path2) if is_paired else (row.path,)
+                    cmd = _align_argv(
+                        exe, n_threads, opts, prefix, fastqs, is_paired, shard
+                    )
                     _run(cmd, f"bowtie2 ({row.path})")
                     # stream the shard: fixed-size pandas batches off
                     # the open file handle, never the whole shard as

@@ -16,6 +16,7 @@ bucket database so stale catalog state can never alias).
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -78,43 +79,93 @@ def test_partitioned_prune_does_not_mutate_session_timezone(spark):
         spark.conf.set("spark.sql.session.timeZone", before)
 
 
-def test_partitioned_prune_nanos_shape_matches_micros_shape(
-    spark, tmp_path
-):
+@pytest.fixture
+def nanos_dir(tmp_path):
+    """A replica of SF_DIR whose events.parquet stores ts as
+    TIMESTAMP(NANOS), which Spark reads only under nanosAsLong."""
+    pytest.importorskip("pyarrow")
+    from tools.make_nanos_fixture import make
+
+    d = str(tmp_path / "sf_nanos")
+    make(SF_DIR, d)
+    return d
+
+
+def test_partitioned_prune_nanos_shape_matches_micros_shape(spark, nanos_dir):
     """The driver's events.parquet is TIMESTAMP(NANOS), which Spark
     reads as BIGINT under nanosAsLong — a completely different day-
     derivation branch from the local TIMESTAMP(MICROS) one. Same
     instants through both branches must give identical results."""
-    pa = pytest.importorskip("pyarrow")
-    import pyarrow.parquet as pq
-
     from __spark_entry__ import q_partitioned_prune
-
-    nanos_dir = tmp_path / "sf_nanos"
-    nanos_dir.mkdir()
-    t = pq.read_table(f"{SF_DIR}/events.parquet")
-    i = t.schema.get_field_index("ts")
-    t = t.set_column(
-        i, pa.field("ts", pa.timestamp("ns")),
-        t.column("ts").cast(pa.timestamp("ns")),
-    )
-    pq.write_table(t, str(nanos_dir / "events.parquet"), store_schema=False)
 
     # sanity: the nanos copy really takes the bigint branch
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    dt = dict(
-        spark.read.parquet(str(nanos_dir / "events.parquet")).dtypes
-    )["ts"]
+    dt = dict(spark.read.parquet(f"{nanos_dir}/events.parquet").dtypes)["ts"]
     assert dt == "bigint", f"nanos fixture read as {dt}, expected bigint"
 
     base = {
         tuple(r) for r in q_partitioned_prune(spark, SF_DIR).collect()
     }
-    nanos = {
-        tuple(r)
-        for r in q_partitioned_prune(spark, str(nanos_dir)).collect()
-    }
+    nanos = {tuple(r) for r in q_partitioned_prune(spark, nanos_dir).collect()}
     assert base == nanos
+
+
+def test_events_read_sets_nanos_as_long(spark, nanos_dir):
+    """_t owns the events read conf: with nanosAsLong unset, reading
+    the TIMESTAMP(NANOS) events table still works and gives a bigint
+    ts (without the conf Spark rejects the file as an illegal
+    Parquet type)."""
+    from __spark_entry__ import _t
+
+    spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    assert dict(_t(spark, nanos_dir, "events").dtypes)["ts"] == "bigint"
+
+
+@pytest.mark.parametrize("ts_type", ["nanos", "ltz"])
+def test_events_by_day_floors_pre_1970_instants(spark, tmp_path, ts_type):
+    """One tick before the epoch is on 1969-12-31, as DuckDB's
+    CAST(ts AS DATE) has it; truncating division would put it on
+    1970-01-01. Covers the bigint-nanos branch and the ltz one."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from __spark_entry__ import _events_by_day
+
+    arrow_type = (
+        pa.timestamp("ns") if ts_type == "nanos" else pa.timestamp("us", tz="UTC")
+    )
+    t = pa.table({"ts": pa.array([-1], arrow_type), "value": [1.0]})
+    pq.write_table(t, str(tmp_path / "events.parquet"), store_schema=False)
+    days = spark.read.parquet(_events_by_day(spark, str(tmp_path))).select(
+        F.col("day").cast("string")
+    )
+    assert [r[0] for r in days.collect()] == ["1969-12-31"]
+
+
+def test_memo_is_per_session_and_per_arguments(spark):
+    """One build per (session, builder, arguments); another session
+    rebuilds."""
+    import __spark_entry__ as entry
+
+    docs = entry._t(spark, SF_DIR, "documents")
+    assert entry._t(spark, SF_DIR, "documents") is docs
+    assert entry._t(spark, SF_DIR, "customer") is not docs
+    other = entry._t(spark.newSession(), SF_DIR, "documents")
+    assert other is not docs
+    assert other.sparkSession is not spark
+    assert entry._t(spark, SF_DIR, "documents") is not other
+
+
+def test_queries_plan_cache_survives_and_bare_queries_rebuild(spark):
+    """queries() memoizes each built plan across calls to queries();
+    queries(cached=False) hands out the bare builders, which build a
+    fresh DataFrame every time."""
+    import __spark_entry__ as entry
+
+    first = entry.queries()["seq_dist"](spark, SF_DIR)
+    assert entry.queries()["seq_dist"](spark, SF_DIR) is first
+    bare = entry.queries(cached=False)["seq_dist"]
+    assert bare(spark, SF_DIR) is not bare(spark, SF_DIR)
 
 
 def test_ranks_boundary_none_is_value_identical(spark):

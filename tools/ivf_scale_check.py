@@ -99,9 +99,9 @@ def main() -> int:
             qs = entry.queries(cached=False)
             build_s = None
             for _ in range(2):
-                old = entry._ivf_index_cache.pop(sf_dir, None)
+                old = entry._memo.pop(("_ivf_index", sf_dir), None)
                 if old is not None:
-                    old[2].unpersist()
+                    old[1][1].unpersist()
                 t0 = time.perf_counter()
                 cents, assigned, k, nprobe = entry._ivf_index(spark, sf_dir)
                 n_assigned = assigned.count()  # force the persisted assignment

@@ -52,7 +52,9 @@ on a representative subset, and checkable over the full artifact):
 
 Fixture-writing queries (the *_roundtrip family) run their driver-side
 fixture setup during plan build; at sf0.01 that costs seconds. The
-audit runs each query's builder but never executes the plan.
+audit runs each query's builder but never executes the plan. Before
+each query it empties the entry module's fixture memo and the
+session's cache, so a row never depends on the order queries ran in.
 
 Usage: python tools/plan_audit.py [sf_dir] [out_json]
 """
@@ -159,14 +161,14 @@ def audit_plan(plan: str) -> dict:
 def build_audit(spark, sf_dir: str, names=None) -> dict:
     import __spark_entry__ as entry
 
-    try:
-        qfns = entry.queries(cached=False)
-    except TypeError:
-        qfns = entry.queries()
     out = {}
-    for name, fn in qfns.items():
+    for name, fn in entry.queries(cached=False).items():
         if names and name not in names:
             continue
+        # every query builds its shared fixtures itself, so its row does
+        # not depend on which query ran first
+        entry._memo.clear()
+        spark.catalog.clearCache()
         try:
             df = fn(spark, sf_dir)
             plan = df._jdf.queryExecution().executedPlan().toString()
