@@ -47,6 +47,7 @@ from seqtables_spark.pipeline.text import (
     text_quality_features,
     token_count,
 )
+from seqtables_spark.session import boundary
 
 # ---------------------------------------------------------------- constants
 
@@ -2558,7 +2559,6 @@ def q_curate_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_contamination=0.5,
         dsir_target=F.col("pred_lang") == "en",
         dsir_buckets=DSIR_BUCKETS,
-        materialize_stages=True,
     )
     return cur.select(
         "doc_id",
@@ -2946,12 +2946,25 @@ def _bucketed_db(spark: SparkSession, sf_dir: str) -> str:
     session's cwd (derby metastore_db survives across driver
     invocations) would otherwise resolve CREATE DATABASE IF NOT EXISTS
     to a STALE location from a dead process; a per-process name can
-    never collide with leftover catalog state."""
+    never collide with leftover catalog state. So that such a
+    metastore does not gain one database per process forever, every
+    seqtables_bucket_* database whose PID is dead is dropped first."""
     import hashlib
     import os
 
     from seqtables_spark.sources.storage import save_bucketed
 
+    for row in spark.sql("SHOW DATABASES LIKE 'seqtables_bucket_*'").collect():
+        name = row[0]
+        pid = name.rsplit("_", 1)[-1]
+        if not pid.isdigit():
+            continue
+        try:
+            os.kill(int(pid), 0)
+        except ProcessLookupError:
+            spark.sql(f"DROP DATABASE IF EXISTS {name} CASCADE")
+        except PermissionError:
+            pass  # alive, owned by another user
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     db = f"seqtables_bucket_{tag}_{os.getpid()}"
     loc = _rt_tmp("seqtables_warehouse", sf_dir)
@@ -3083,9 +3096,9 @@ def q_session_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     join_hint default), exact predicate + first-shared-bin dedup
     riding IN the join condition. Never |sessions| x |sessions|.
 
-    Round 11 also collapsed the plan-build jobs: the sessions persist
+    Round 11 also collapsed the plan-build jobs: the session boundary
     and the bin-width statistics come from ONE aggregate action
-    (which materializes the cache), where round 10 paid an eager
+    (which materializes the checkpoint), where round 10 paid an eager
     localCheckpoint job THEN auto_bin_width's separate scan. sf1:
     5.7 s -> ~4.1 s; the remaining gap to the in-process oracle is
     ledgered (SF1_LEDGER.md) — the 19.4M true overlap pairs are the
@@ -3103,16 +3116,9 @@ def q_session_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         ts_us = F.unix_micros(ts.cast("timestamp"))
     ev = ev.select(F.col("user_id"), ts_us.alias("t"))
     sess = sessionize(ev, "t", SESSION_GAP_US, ["user_id"])
-    # the self-join references the sessionize subtree twice and
-    # Catalyst does not dedupe common subtrees (round-9 finding), so
-    # checkpoint the session relation; LAZY, so the SAME action that
-    # materializes it returns the auto-bin-width statistics (one job
-    # where round 10 ran two: eager checkpoint + auto_bin_width's
-    # scan). localCheckpoint, not persist(): persist is matched by
-    # logical plan in the CacheManager, so a FRESH plan of the same
-    # query would silently reuse it and the bench would measure cache
-    # hits instead of execution.
-    sess = sess.localCheckpoint(eager=False)
+    # the bin-width statistics and both sides of the self-join read
+    # `sess`; the lazy boundary lets the statistics action materialize it
+    sess = boundary(sess)
     st = sess.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("e_us") - F.col("s_us")).alias("s"),
@@ -3146,7 +3152,7 @@ def q_curate_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     curation run logs per batch. Scale shape (round 13): the corpus
     text is read and annotated ONCE — the same scan that evaluates
     the gopher keep flag also folds the MinHash signature columns
-    (dedup.minhash_signature_cols), and a lazy localCheckpoint pins
+    (dedup.minhash_signature_cols), and a lazy session.boundary pins
     the resulting (doc_id, keep, sig_ok, mh_0..15) relation — ~150
     bytes/doc, never the text (guide §8: decide with small rows;
     §2.3: keys and metadata cross stages, not payloads). Both funnel
@@ -3181,12 +3187,13 @@ def q_curate_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # mirrors minhash_signatures' length(text) >= k row filter (a
     # short doc cannot be banded on either side; its mh_* columns are
     # the untouched sentinel accumulator and must not reach the join).
-    slim = docs_ann.select(
+    # the funnel counts and the banded contamination side read `slim`
+    slim = boundary(docs_ann.select(
         "doc_id",
         "keep",
         (F.length(F.lower(F.col("text"))) >= LSH_K).alias("_sig_ok"),
         *minhash_signature_cols("text", MINHASH_N, LSH_K),
-    ).localCheckpoint(eager=False)
+    ))
     cb = band_keys_from_signatures(
         slim.filter(F.col("keep") & F.col("_sig_ok")),
         MINHASH_N, LSH_BANDS,
@@ -3267,8 +3274,8 @@ def q_curate_llm(spark: SparkSession, sf_dir: str) -> DataFrame:
     word dedup -> BPE trained ON THE CLEANED CORPUS -> per-source
     token accounting (what a tokenizer-budget planner consumes).
 
-    Composition notes that matter at scale: the cleaned relation is
-    localCheckpointed once (eager) because BOTH BPE training's vocab
+    Composition notes that matter at scale: the cleaned relation sits
+    behind one eager session.boundary because BOTH BPE training's vocab
     pass and the encode pass consume it and Catalyst never dedups
     common subtrees (round-5 sweep); everything upstream of that
     boundary is map-side except the banded-key join and the word
@@ -3298,10 +3305,11 @@ def q_curate_llm(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id")
     kept0 = g.join(flagged, "doc_id", "left_anti")
     dd = intra_doc_segment_dedup(kept0, sep=" ")
-    clean = (
+    # BPE training's vocab pass and the encode pass read `clean`
+    clean = boundary(
         dd.select("doc_id", F.col("text_dedup").alias("text"))
-        .join(kept0.select("doc_id", "source"), "doc_id")
-        .localCheckpoint(eager=True)
+        .join(kept0.select("doc_id", "source"), "doc_id"),
+        eager=True,
     )
     rules = train_bpe(clean, num_merges=8)
     toks = bpe_token_count(clean, rules, id_cols=("doc_id", "source"))
@@ -4194,15 +4202,8 @@ def q_token_freq_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     exact = toks.groupBy("word").agg(F.count(F.lit(1)).alias("exact_cnt"))
     top = exact.orderBy(F.desc("exact_cnt"), F.asc("word")).limit(CMS_TOPN)
-    # Round 12 (opt, guide §2.4): `top` (CMS_TOPN rows) is referenced
-    # twice — as the final join's left side and as the estimate
-    # probe — and Catalyst re-planned the whole exact tokenize +
-    # count + top-k corpus pass per reference (3 corpus scans total).
-    # A lazy boundary materializes the 20-row relation once; the
-    # query now tokenizes the corpus exactly twice (exact pass + CMS
-    # pass — two different aggregation keys over the token stream,
-    # the documented deliberate recompute).
-    top = top.localCheckpoint(eager=False)
+    # the final join's left side and the estimate probe read `top`
+    top = boundary(top)
     cms = cms_build(
         toks, "word", width=CMS_WIDTH, depth=CMS_DEPTH, seed=CMS_SEED
     )
@@ -4269,22 +4270,23 @@ _PLAN_CACHE_EXCLUDE = {
 # function changed in git but sits outside this head.
 _SAMPLE_HEAD = (
     # changed since the last attestation
+    "session_overlap", "curate_funnel", "curate_llm", "token_freq_cms",
+    "curate_full", "perplexity_scores",
+    # the previous sample's head
     "streaming_events", "streaming_windowed", "streaming_sessions",
     "events_hourly", "event_sessions", "json_events", "bowtie_align",
     "bowtie_distributed", "partitioned_prune", "bucketed_join",
-    "session_overlap", "streaming_quality_gate", "kmv_users",
-    "event_quantiles", "value_quantiles_sketch", "streaming_token_cms",
-    # the previous sample's head
-    "hamming", "mutation_profile", "ts_tv", "hamming_norm",
-    "compare_matches", "mutation_by_position", "hamming_setdiff",
-    "kmers_contiguous", "fastq_roundtrip", "sam_roundtrip",
-    "bam_region", "bam_region_bai", "bam_region_csi", "bam_roundtrip",
-    "bam_region_sharded", "quality_dist", "quality_dist_fastqc",
-    "contamination", "fuzzy_contamination", "curate_funnel",
-    "curate_full", "curate_corpus", "curate_llm", "corpus_stats",
+    "streaming_quality_gate", "kmv_users", "event_quantiles",
+    "value_quantiles_sketch", "streaming_token_cms", "hamming",
+    "mutation_profile", "ts_tv", "hamming_norm", "compare_matches",
+    "mutation_by_position", "hamming_setdiff", "kmers_contiguous",
+    "fastq_roundtrip", "sam_roundtrip", "bam_region", "bam_region_bai",
+    "bam_region_csi", "bam_roundtrip", "bam_region_sharded",
+    "quality_dist", "quality_dist_fastqc", "contamination",
+    "fuzzy_contamination", "curate_corpus", "corpus_stats",
     "leakage_split", "token_budget", "customer_deciles",
     "training_order", "weighted_sample_docs", "running_revenue",
-    "audio_features", "bpe_merges", "bpe_tokens", "bpe_vocab",
+    "audio_features", "bpe_merges",
 )
 
 

@@ -19,6 +19,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from perfbench.sampler import cpu_times, steal_pct  # noqa: E402
+
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -117,22 +119,11 @@ def main() -> int:
     # same-tree totals 55.7 s vs 73.0 s; a 0.9 s query reading 4.5 s).
     # Recording the per-query steal share lets a reader (and the
     # sf1 ledger) adjudicate outliers with data instead of rerunning.
-    def _cpu_counters():
-        with open("/proc/stat") as fh:
-            v = list(map(int, fh.readline().split()[1:]))
-        # fields: user nice system idle iowait irq softirq steal
-        # guest guest_nice — the kernel already folds guest time into
-        # user, so summing all 10 would double-count it and slightly
-        # understate steal_pct (round-11 ADVICE fix)
-        total = sum(v[:8])
-        steal = v[7] if len(v) > 7 else 0
-        return total, steal
-
     def _measure_spark(fn) -> tuple[float, int, float]:
         """min-of-reps execute-to-driver + the steal share sampled
         around exactly these reps -> (best_s, rows, steal_pct)."""
         best, n = None, 0
-        q_t0, q_s0 = _cpu_counters()
+        q0 = cpu_times()
         for _ in range(reps):
             df = fn(spark, sf_dir)
             df._jdf.queryExecution().executedPlan()  # plan build off-clock
@@ -140,13 +131,7 @@ def main() -> int:
             n = len(df.collect())
             dt = time.perf_counter() - t0
             best = dt if best is None else min(best, dt)
-        q_t1, q_s1 = _cpu_counters()
-        stl = (
-            round(100.0 * (q_s1 - q_s0) / (q_t1 - q_t0), 2)
-            if q_t1 > q_t0
-            else 0.0
-        )
-        return best, n, stl
+        return best, n, round(steal_pct(q0, cpu_times()), 2)
 
     def _measure_duck(name) -> float | None:
         if con is None or name not in oracles:
@@ -168,7 +153,7 @@ def main() -> int:
     timings: dict[str, float] = {}
     duck_timings: dict[str, float] = {}
     steal_pcts: dict[str, float] = {}
-    run_t0, run_s0 = _cpu_counters()
+    run0 = cpu_times()
     for name, fn in qfns.items():
         best, n, stl = _measure_spark(fn)
         steal_pcts[name] = stl
@@ -258,7 +243,7 @@ def main() -> int:
         "floor_shuffle_s": floor_shuffle_s,
         "reps": reps,
     }
-    run_t1, run_s1 = _cpu_counters()
+    run1 = cpu_times()
     # The on-disk artifact carries everything; the STDOUT line stays
     # bounded (round-13, verdict item #2): the r11 driver capture
     # truncated mid-line inside the auxiliary per-query maps and the
@@ -268,14 +253,12 @@ def main() -> int:
     # (duck_queries, query_steal_pct, steal_retries) now live ONLY in
     # BENCH.json. No timing methodology changed.
     artifact = dict(payload)
-    if run_t1 > run_t0:
+    if run1[0] > run0[0]:
         # hypervisor steal share over the whole run + per-query map
         # (sampled around each query's SPARK reps - the parallel side
         # steal actually taxes; >~5% on a row means that wall number
         # is host-noise suspect)
-        payload["steal_pct"] = round(
-            100.0 * (run_s1 - run_s0) / (run_t1 - run_t0), 2
-        )
+        payload["steal_pct"] = round(steal_pct(run0, run1), 2)
         artifact["steal_pct"] = payload["steal_pct"]
         artifact["query_steal_pct"] = steal_pcts
     if steal_retries:

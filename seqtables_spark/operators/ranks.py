@@ -32,33 +32,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-
-def _lazy_boundary(df: DataFrame) -> DataFrame:
-    """Materialization boundary for the twice-read ranged relation.
-
-    Default: localCheckpoint(eager=False) — one execution of the
-    upstream subtree, branches read the checkpoint. Trade-offs at
-    cluster scale (r12 ADVICE): the checkpoint is executor-LOCAL
-    storage with truncated lineage, so an executor loss (or dynamic
-    allocation decommission) makes the job unrecoverable, and each
-    fresh plan build pins another O(N) copy until driver GC.
-    ``spark.seqtables.ranks.boundary=none`` removes the boundary:
-    each branch re-executes the scan + range exchange (2 passes, but
-    fully lineage-recoverable and zero pinned state) — identical
-    results, set it on clusters running with dynamic allocation.
-
-    Why not persist(): Spark SQL's CacheManager dedups by logical
-    plan, so a persisted ranged relation would be silently REUSED
-    across freshly built plans — an unpersist leak in library code
-    and, in this repo's bench protocol (fresh plan per rep precisely
-    so shuffle/cache reuse is never timed), a dishonest number.
-    """
-    mode = df.sparkSession.conf.get(
-        "spark.seqtables.ranks.boundary", "checkpoint"
-    )
-    if mode == "none":
-        return df
-    return df.localCheckpoint(eager=False)
+from ..session import boundary
 
 
 def _ranked_parts(
@@ -86,19 +60,10 @@ def _ranked_parts(
     rp = df.repartitionByRange(parts, *order_by).withColumn(
         "__pid__", F.spark_partition_id()
     )
-    # Round 12 (opt): LAZY boundary. The local and offsets branches
-    # both reference `rp`, but range exchanges are never reused at
-    # runtime (AQE's ReusedExchange fires for hash partitioning, not
-    # RangePartitioning — measured on the final adaptive plans), so
-    # without the boundary the WHOLE upstream subtree (scan,
-    # aggregations, the range shuffle itself) executes once per
-    # branch. Checkpointing the ranged relation materializes it once;
-    # lazy, so plan build stays action-free and the work lands on the
-    # consumer's own clock. Partition indices (and hence __pid__ and
-    # the within-partition positions below) are preserved. Gated by
-    # spark.seqtables.ranks.boundary (see _lazy_boundary: executor
-    # loss / dynamic-allocation trade-off, r13).
-    rp = _lazy_boundary(rp)
+    # the local and offsets branches both read `rp` (AQE never reuses
+    # a range exchange); a checkpoint keeps the partition indices that
+    # __pid__ and the positions below rely on
+    rp = boundary(rp)
     # Round 12: the local rank used to be row_number() OVER
     # (PARTITION BY __pid__ ORDER BY ...). That window's required
     # ClusteredDistribution(__pid__) re-shuffled the WHOLE relation
@@ -224,11 +189,8 @@ def global_running_sum(
     rp = df.repartitionByRange(parts, *order_by).withColumn(
         "__pid__", F.spark_partition_id()
     )
-    # LAZY boundary — same rationale as _ranked_parts: range
-    # exchanges never hit AQE's runtime reuse, so the cumsum and
-    # offsets branches would each re-execute the scan + range shuffle
-    # (gated by spark.seqtables.ranks.boundary, see _lazy_boundary)
-    rp = _lazy_boundary(rp)
+    # the cumsum and offsets branches both read `rp`
+    rp = boundary(rp)
     v = F.col(value_col).cast("long")
     # Round 12: the per-partition running sum used to be a window
     # PARTITION BY __pid__, whose required distribution re-shuffled

@@ -124,8 +124,8 @@ def salted_join(
     streaming DataFrames work. Passing a number makes this function
     EAGER: it runs ``small.count()`` at plan time, and when the guard
     does NOT trip, an uncached small side is computed twice (once for
-    the count, once again inside the join) — persist/localCheckpoint
-    an expensive small side before calling. Never pass a guard value
+    the count, once again inside the join) — wrap an expensive small
+    side in session.boundary before calling. Never pass a guard value
     for streaming inputs (count() on a streaming relation raises at
     plan time).
 

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..session import boundary
 from .dedup import (
     contamination_check,
     exact_dedup,
@@ -137,7 +138,6 @@ def curate_documents_full(
     min_alpha_ratio: float = 0.4,
     text_col: str = "text",
     id_col: str = "doc_id",
-    materialize_stages: bool = False,
 ) -> DataFrame:
     """The WHOLE pre-training curation pipeline composed end to end:
 
@@ -159,22 +159,19 @@ def curate_documents_full(
     100 TB: the row-local gates run in the scan, the exact-dedup
     digest shuffle sees only gated rows, the quadratic-risk stages
     (LSH verify) see only exact-unique rows, and the gram explosion
-    for decontamination sees only near-dup survivors. The one
-    eager action is the contamination count-guard on the EVAL side
-    (see contamination_check).
+    for decontamination sees only near-dup survivors.
 
-    ``materialize_stages=True`` localCheckpoints the curated relation
-    (and the near-dup survivors) - the downstream stages fan out over
-    the SAME curated rows up to seven times (LSH signatures, verify
-    grams, anti-joins, contamination grams, DSIR tokens, final
-    projection), and without a materialization boundary Catalyst
-    re-analyzes the whole curation subtree (a large language-ID
-    expression forest) per branch and the executor re-computes it per
-    consumer. Measured: ~30 s cold -> a few seconds with boundaries.
-    At 100 TB this is exactly where a pipeline writes its curated
-    corpus to storage anyway; localCheckpoint is the in-session
-    stand-in (blocks are reclaimed by the ContextCleaner when the
-    DataFrame is garbage-collected).
+    The curated relation and the near-dup survivors each sit behind an
+    eager session.boundary: the downstream stages read the SAME rows
+    up to seven times (LSH signatures, verify grams, anti-joins,
+    contamination grams, DSIR tokens, final projection), and without
+    one the whole curation subtree (a large language-ID expression
+    forest) is re-analyzed and re-executed per consumer. Measured:
+    ~30 s cold -> a few seconds with boundaries. At 100 TB this is
+    where a pipeline writes its curated corpus to storage anyway.
+    Plan build therefore runs jobs: these boundaries and the
+    contamination count-guard on the EVAL side (see
+    contamination_check).
     """
     cur = curate_documents(
         df,
@@ -184,8 +181,7 @@ def curate_documents_full(
         text_col=text_col,
         id_col=id_col,
     )
-    if materialize_stages:
-        cur = cur.localCheckpoint(eager=True)
+    cur = boundary(cur, eager=True)
     if near_dup:
         cand = minhash_candidate_pairs(
             cur, n_hashes=lsh_hashes, bands=lsh_bands, k=shingle_k,
@@ -196,9 +192,7 @@ def curate_documents_full(
             text_col=text_col, id_col=id_col, candidates=cand,
         )
         losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
-        cur = cur.join(losers, id_col, "left_anti")
-        if materialize_stages:
-            cur = cur.localCheckpoint(eager=True)
+        cur = boundary(cur.join(losers, id_col, "left_anti"), eager=True)
     if eval_set is not None:
         cont = contamination_check(
             cur, eval_set, k=contamination_k,
@@ -208,16 +202,9 @@ def curate_documents_full(
             F.col("contamination") > max_contamination
         ).select(id_col)
         cur = cur.join(dirty, id_col, "left_anti")
-        if materialize_stages and dsir_target is not None:
-            # LAZY boundary (materialized by the consumer's own
-            # action, so the decontamination work stays on-clock,
-            # once): the DSIR stage references `cur` three times
-            # (score pass, bucket pass, final logw join) and without
-            # it Catalyst re-plans — and the executor re-runs — the
-            # whole contamination anti-join subtree (eval-set gram
-            # aggregation + corpus gram explode) per reference
-            # (round 12: curate_full planned that subtree 3x).
-            cur = cur.localCheckpoint(eager=False)
+        if dsir_target is not None:
+            # the DSIR score pass, bucket pass and logw join read `cur`
+            cur = boundary(cur)
     if dsir_target is not None:
         w = dsir_weights(
             cur, dsir_target, text_col=text_col, id_col=id_col,

@@ -27,6 +27,7 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import boundary
 from .hashing import HASH_PRIME, minhash_params, portable_string_hash, universal_hash
 
 
@@ -884,16 +885,9 @@ def dedup_survivors(
             .filter(F.col("_rk") > 1)
             .select(F.col("doc_id").alias(id_col))
         )
-        # LAZY boundary (round 12, guide §2.4/§3.3): when `df` is a
-        # union, Catalyst pushes this anti-join below it and
-        # re-plans — and the executor re-runs — the whole losers
-        # subtree (cluster/score join + window + its corpus rescans
-        # for the score column) once PER UNION BRANCH. Checkpointing
-        # the loser ids (a tiny id-only relation, bounded by the
-        # clustered docs) makes every branch read the one
-        # materialization; lazy, so the work stays on the consumer's
-        # clock and plan build stays action-free.
-        losers = losers.localCheckpoint(eager=False)
+        # when `df` is a union, the anti-join is pushed below it and
+        # every union branch reads `losers`
+        losers = boundary(losers)
     return df.join(losers, id_col, "left_anti")
 
 
@@ -1041,13 +1035,11 @@ def count_guarded_broadcast(small: DataFrame, max_rows: int) -> DataFrame:
     (an eval set's grams or band keys): broadcast it when an explicit
     count finds <= max_rows rows, else force shuffle-merge.
 
-    The count executes the subtree; without a boundary the join build
-    would execute it a second time. The lazy boundary makes the count
-    materialize the relation once and the broadcast (or shuffle)
-    build read it back; the relation is bounded by the guard itself
-    (<= max_rows rows on the fast path, else it is the join's
-    shuffle input anyway)."""
-    small = small.localCheckpoint(eager=False)
+    The count and the join build both read `small`, so it sits behind
+    a session.boundary; the relation is bounded by the guard itself
+    (<= max_rows rows on the fast path, else it is the join's shuffle
+    input anyway)."""
+    small = boundary(small)
     if small.count() <= int(max_rows):
         return F.broadcast(small)
     return small.hint("shuffle_merge")

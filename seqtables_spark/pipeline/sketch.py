@@ -31,6 +31,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..session import boundary
 from .hashing import HASH_PRIME, minhash_params, portable_string_hash
 
 
@@ -325,21 +326,10 @@ def kmv_pairwise_jaccard_banded(
         F.col(group_col).cast("string").alias("__g__"),
         F.col(kmv_col).alias("__kmv__"),
     )
-    # Round 12 (guide §1.2/§3.3): this function references the sketch
-    # relation FOUR times (inverted-index explode, both sides of the
-    # candidate self-join's sketch attach) and Catalyst never dedupes
-    # common subtrees — measured on source_overlap_banded at sf0.1:
-    # the full corpus shingle+sketch build was planned AND EXECUTED 4x
-    # (8 parquet scans, zero ReusedExchange in the final adaptive
-    # plan). A lazy localCheckpoint materializes the G-row sketch
-    # relation once at the first action and every reference reads the
-    # checkpointed blocks: exactly ONE pass over the corpus at any
-    # scale. (Lazy, so plan build stays action-free; same pattern as
-    # the sessionize localCheckpoint. The attach joins below lose
-    # catalyst size estimates and plan as sort-merge — correct for
-    # the million-group contract this variant exists for; AQE demotes
-    # them to broadcast at runtime when G is actually small.)
-    narrow = narrow.localCheckpoint(eager=False)
+    # the inverted-index explode and both sides of the candidate
+    # self-join's sketch attach read `narrow` (the attach joins then
+    # plan as sort-merge; AQE demotes them to broadcast when G is small)
+    narrow = boundary(narrow)
     elems = narrow.select(
         F.col("__g__"), F.explode("__kmv__").alias("__h__")
     )

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .dedup import count_guarded_broadcast
 from .hashing import portable_string_hash
 
 # tiny per-language stopword marker sets for the n-gram/stopword
@@ -445,7 +446,6 @@ def bigram_logprob(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    reuse_tokens: bool = False,
     broadcast_model: int | None = 5_000_000,
     model_df: DataFrame | None = None,
 ) -> DataFrame:
@@ -471,45 +471,23 @@ def bigram_logprob(
     quadratic; model size is bounded by distinct-bigram count, and a
     pretrained model would broadcast.
 
-    reuse_tokens (round-8, MEASURED REJECTION of the persist plan):
-    True repartitions the doc-bigram stream once on (w1, w2) and
-    persists it (MEMORY_AND_DISK) so the tokenize+explode runs one
-    pass instead of two and the cached partitioning feeds both the
-    groupBy(w1, w2) and the scoring join. Measured at sf0.1
-    (within-run A/B, 4 reps): no-reuse 1.32 s, persist-only 1.44 s,
-    repartition+persist 2.29 s and degrading across reps — the
-    block-manager write+read of the exploded bigram stream (~2-3x
-    corpus bytes) costs more than the regexp pass it saves, at this
-    shape on local disk. Default is therefore False (stateless plan,
-    also streaming-safe). True remains for genuinely regexp-bound
-    corpora on clusters where local-disk bandwidth beats re-scan
-    (re-measure there; the plan is correct either way). CACHE
-    LIFETIME: the persist is registered on an internal relation this
-    function cannot see materialized, so the CALLER owns the memory -
-    unpersist via spark.catalog.clearCache() or scope the session;
-    repeated reuse_tokens=True calls accumulate cached blocks until
-    then (corpus-sized, MEMORY_AND_DISK, so they spill rather than
-    OOM - but they do not vanish with the returned DataFrame).
-
     broadcast_model (round 9): the model relation is vocabulary-
     bounded (distinct bigrams), NOT corpus-bounded - so it is the side
     that must build the hash relation. Left to its size estimates,
     Catalyst was observed (round-9 executed plan, sf0.1) broadcasting
     the EXPLODED DOC-BIGRAM STREAM as the build side instead - a
     corpus-sized driver collect that works at fixture scale and OOMs
-    the driver at real scale. With broadcast_model=N the model is
-    localCheckpoint(eager)'d (vocab-sized executor blocks, lineage
-    truncated so the guard count is free) and broadcast iff its
-    measured row count <= N; above the guard the join stays a shuffle
-    join on (w1, w2) where AQE skew-split handles stop-bigram hot
-    keys, and the checkpoint still saves the window re-computation.
-    Same count-guarded pattern as decontaminate_fuzzy. None restores
-    the fully-lazy estimate-driven plan. Measured at sf0.1 (within-run,
+    the driver at real scale. With broadcast_model=N the model goes
+    through dedup.count_guarded_broadcast: broadcast iff its measured
+    row count <= N, else a shuffle-merge join on (w1, w2) where AQE
+    skew-split handles stop-bigram hot keys; either way the boundary
+    saves the window re-computation. None restores the fully-lazy
+    estimate-driven plan. Measured at sf0.1 (within-run,
     interleaved): default-estimates 1.35 s (and variance from AQE
     flipping build sides), pinned broadcast-model 0.95 s. Note the
-    eager checkpoint makes this call run jobs at BUILD time; batch
-    only - a STREAMING df raises unless broadcast_model=None (round
-    10: explicit guard instead of the documented foot-gun).
+    guard count makes this call run a job at BUILD time; batch only
+    - a STREAMING df raises unless broadcast_model=None (round 10:
+    explicit guard instead of the documented foot-gun).
 
     model_df (round 10, the plan-purity escape hatch): a precomputed
     model relation (w1, w2, c12, c1) - e.g. from
@@ -528,13 +506,6 @@ def bigram_logprob(
     Returns DF(id, n_bigrams, avg_logprob).
     """
     doc_bigrams = _doc_bigram_stream(df, text_col, id_col)
-    if reuse_tokens:
-        from pyspark import StorageLevel
-
-        doc_bigrams = doc_bigrams.repartition("w1", "w2").persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-
     big_counts = doc_bigrams.groupBy("w1", "w2").agg(
         F.count(F.lit(1)).alias("c12")
     )
@@ -564,9 +535,7 @@ def bigram_logprob(
                     " streaming DataFrame; pass broadcast_model=None"
                     " (lazy plan) or a precomputed model_df"
                 )
-            model = model.localCheckpoint(eager=True)
-            if model.count() <= broadcast_model:
-                model = F.broadcast(model)
+            model = count_guarded_broadcast(model, broadcast_model)
 
     scored = doc_bigrams.join(model, ["w1", "w2"]).select(
         id_col,

@@ -55,6 +55,58 @@ def get_spark(
     return spark
 
 
+BOUNDARY_KEY = "spark.seqtables.boundary"
+
+
+def boundary(df: DataFrame, eager: bool = False) -> DataFrame:
+    """Materialize-once boundary for a relation that one plan reads
+    more than once.
+
+    Catalyst does not dedupe common subtrees, so each reference to a
+    shared relation re-plans, and outside the odd reused exchange
+    re-executes, its whole upstream subtree. With
+    ``spark.seqtables.boundary=checkpoint`` (the default) this returns
+    ``df.localCheckpoint(eager=eager)``: the subtree runs once and
+    every reference reads the checkpointed blocks.
+
+    Why ``localCheckpoint`` and not ``persist``: the CacheManager
+    matches cached relations by logical plan, so a persisted relation
+    is silently reused by every fresh plan of the same query. That
+    leaks executor memory across calls that library code cannot
+    unpersist, and it makes a fresh-plan timing measure cache hits
+    instead of execution. A checkpoint belongs to its DataFrame, and
+    the ContextCleaner reclaims its blocks when that DataFrame is
+    garbage-collected.
+
+    Why lazy by default: ``eager=False`` runs no job here, so plan
+    build stays action-free and the first action of the consumer
+    materializes the relation on its own clock. Sites that must
+    materialize before a driver-side decision pass ``eager=True``.
+
+    The trade-off: a checkpoint lives in executor-local storage with
+    its lineage cut, so losing an executor (or a dynamic-allocation
+    decommission) makes the job unrecoverable, and each live plan pins
+    one copy of the relation. ``spark.seqtables.boundary=none`` returns
+    ``df`` unchanged: each reference re-executes the subtree, results
+    are identical, and lineage stays fully recoverable. Set it on
+    clusters that run with dynamic allocation or preemptible
+    executors.
+
+    Only the iterative lineage cuts call ``localCheckpoint`` directly
+    and ignore the key: the connected-components rounds
+    (``dedup._cc_label_propagation``, ``dedup._cc_star``) and the BPE
+    merge fold (``bpe.train_bpe``). Without them the plan grows with
+    every round until the driver runs out of memory."""
+    mode = df.sparkSession.conf.get(BOUNDARY_KEY, "checkpoint")
+    if mode == "none":
+        return df
+    if mode != "checkpoint":
+        raise ValueError(
+            f"{BOUNDARY_KEY} must be 'checkpoint' or 'none', got {mode!r}"
+        )
+    return df.localCheckpoint(eager=eager)
+
+
 def _sql_literal(value, sql_type: str) -> str:
     if value is None:
         lit = "NULL"

@@ -328,13 +328,14 @@ def _mini_docs(spark, n=60):
 
 
 def test_curate_full_dsir_boundary_single_contamination_pass(spark):
-    """Round-12 opt pin: with materialize_stages=True the
+    """Round-12 opt pin: under the default boundary key the
     decontaminated relation is a LAZY localCheckpoint, so the DSIR
     stage's three references read the boundary instead of re-planning
     the contamination anti-join (before: the eval-gram aggregation +
     corpus gram explode appeared per reference). The anti-join is
     behind the boundary -> ZERO LeftAnti in the final plan; values
-    are identical to the unmaterialized form."""
+    are identical to the unmaterialized form
+    (spark.seqtables.boundary=none)."""
     from pyspark.sql import functions as F
 
     from seqtables_spark.pipeline.curate import curate_documents_full
@@ -348,15 +349,20 @@ def test_curate_full_dsir_boundary_single_contamination_pass(spark):
         dsir_target=F.col("pred_lang") == "en", dsir_buckets=16,
         min_tokens=2, max_tokens=10_000, min_alpha_ratio=0.1,
     )
-    mat = curate_documents_full(corpus, materialize_stages=True, **kw)
+    mat = curate_documents_full(corpus, **kw)
     plan = mat._jdf.queryExecution().executedPlan().toString()
     assert "LeftAnti" not in plan
     key = lambda df: sorted(
         (r["doc_id"], r["n_tokens"], round(r["logw"], 9))
         for r in df.collect()
     )
-    unmat = curate_documents_full(corpus, materialize_stages=False, **kw)
-    assert key(mat) == key(unmat)
+    spark.conf.set("spark.seqtables.boundary", "none")
+    try:
+        unmat = curate_documents_full(corpus, **kw)
+        assert "LeftAnti" in unmat._jdf.queryExecution().executedPlan().toString()
+        assert key(mat) == key(unmat)
+    finally:
+        spark.conf.unset("spark.seqtables.boundary")
 
 
 def test_curate_funnel_counts_need_no_join(monkeypatch, spark):

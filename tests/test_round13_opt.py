@@ -168,13 +168,7 @@ def test_queries_plan_cache_survives_and_bare_queries_rebuild(spark):
     assert bare(spark, SF_DIR) is not bare(spark, SF_DIR)
 
 
-def test_ranks_boundary_none_is_value_identical(spark):
-    """r12 ADVICE: the O(N) localCheckpoint of the ranged relation is
-    unsafe under executor loss / dynamic allocation; the
-    spark.seqtables.ranks.boundary=none escape hatch re-executes the
-    branches instead — results must be identical either way."""
-    from pyspark.sql import functions as F
-
+def _site_ranks(spark):
     from seqtables_spark.operators.ranks import (
         global_ntile, global_row_number, global_running_sum,
     )
@@ -185,24 +179,195 @@ def test_ranks_boundary_none_is_value_identical(spark):
         (F.col("id") % 13).alias("v"),
     )
     order = [F.col("k").asc(), F.col("id").asc()]
+    return (
+        global_row_number(df, order, num_partitions=7),
+        global_ntile(df, order, 10, num_partitions=7),
+        global_running_sum(df, order, "v", num_partitions=7),
+    )
 
-    def run():
-        rn = global_row_number(df, order, num_partitions=7)
-        nt = global_ntile(df, order, 10, num_partitions=7)
-        rs = global_running_sum(df, order, "v", num_partitions=7)
-        return (
-            sorted(map(tuple, rn.collect())),
-            sorted(map(tuple, nt.collect())),
-            sorted(map(tuple, rs.collect())),
+
+def _site_sketch_banded(spark):
+    from seqtables_spark.pipeline.sketch import (
+        kmv_pairwise_jaccard_banded, kmv_sketch,
+    )
+
+    df = spark.createDataFrame(
+        [(f"g{i % 4}", f"tok{i % 23}") for i in range(300)],
+        "source string, tok string",
+    )
+    sk = kmv_sketch(df, "tok", k=8, group_by=["source"])
+    return (kmv_pairwise_jaccard_banded(sk, k=8),)
+
+
+def _site_dedup_survivors(spark):
+    from seqtables_spark.pipeline.dedup import dedup_survivors
+
+    docs = spark.createDataFrame(
+        [(i, "x" * (i % 7 + 1)) for i in range(40)], "doc_id long, text string"
+    )
+    corpus = docs.filter("doc_id % 2 = 0").unionByName(
+        docs.filter("doc_id % 2 = 1")
+    ).withColumn("_len", F.length("text"))
+    pairs = spark.createDataFrame(
+        [(0, 1), (1, 2), (10, 11)], "id_a long, id_b long"
+    )
+    return (
+        dedup_survivors(corpus, pairs, prefer_col="_len", descending=False),
+    )
+
+
+def _boundary_docs(spark, n=60):
+    """English and German docs of hex words; doc 10j+3 near-duplicates
+    doc 10j+2 and doc 10j+9 copies doc 10j+10 (an eval doc below), so
+    every curation stage drops rows."""
+    src = (
+        F.when(F.col("id") % 10 == 3, F.col("id") - 1)
+        .when(F.col("id") % 10 == 9, F.col("id") + 1)
+        .otherwise(F.col("id"))
+    )
+    return spark.range(n).select(
+        F.col("id").alias("doc_id"),
+        F.concat_ws(
+            " ",
+            F.when(src % 3 == 0, F.lit("der und die ist")).otherwise(
+                F.lit("the and of is")
+            ),
+            F.regexp_replace(F.sha2(src.cast("string"), 256), "(.{8})", "$1 "),
+            F.when(F.col("id") % 10 == 3, F.lit("zz")),
+        ).alias("text"),
+    )
+
+
+def _site_contamination_check(spark):
+    from seqtables_spark.pipeline.dedup import contamination_check
+
+    docs = _boundary_docs(spark)
+    evals = docs.filter(F.col("doc_id") % 10 == 0)
+    return (contamination_check(docs, evals, k=8),)
+
+
+def _site_curate_documents_full(spark):
+    from seqtables_spark.pipeline.curate import curate_documents_full
+
+    docs = _boundary_docs(spark)
+    return (
+        curate_documents_full(
+            docs.filter(F.col("doc_id") % 10 != 0),
+            eval_set=docs.filter(F.col("doc_id") % 10 == 0),
+            lsh_hashes=4, lsh_bands=2, shingle_k=5, min_jaccard=0.9,
+            contamination_k=8, max_contamination=0.8,
+            dsir_target=F.col("pred_lang") == "en", dsir_buckets=16,
+            min_tokens=2, max_tokens=10_000, min_alpha_ratio=0.1,
+        ),
+    )
+
+
+def _site_bigram_logprob(spark):
+    from seqtables_spark.pipeline.text import bigram_logprob
+
+    return (bigram_logprob(_boundary_docs(spark)),)
+
+
+def _entry_site(name):
+    def build(spark):
+        import __spark_entry__ as entry
+
+        return (getattr(entry, f"q_{name}")(spark, SF_DIR),)
+
+    return build
+
+
+_BOUNDARY_SITES = {
+    "ranks": _site_ranks,
+    "sketch_banded": _site_sketch_banded,
+    "dedup_survivors": _site_dedup_survivors,
+    "contamination_check": _site_contamination_check,
+    "curate_documents_full": _site_curate_documents_full,
+    "bigram_logprob": _site_bigram_logprob,
+    **{
+        name: _entry_site(name)
+        for name in (
+            "session_overlap", "curate_funnel", "curate_llm",
+            "token_freq_cms",
         )
+    },
+}
 
-    base = run()
-    spark.conf.set("spark.seqtables.ranks.boundary", "none")
+
+def _rows(dfs):
+    def norm(v):
+        return round(v, 9) if isinstance(v, float) else v
+
+    return [
+        sorted((tuple(map(norm, r)) for r in df.collect()), key=repr)
+        for df in dfs
+    ]
+
+
+@pytest.mark.parametrize("site", list(_BOUNDARY_SITES))
+def test_boundary_none_is_value_identical(spark, site):
+    """spark.seqtables.boundary=none removes every materialize-once
+    boundary (each reference re-executes the shared subtree); each
+    gated site must return the same rows either way."""
+    build = _BOUNDARY_SITES[site]
+    base = _rows(build(spark))
+    spark.conf.set("spark.seqtables.boundary", "none")
     try:
-        none_mode = run()
+        unbounded = _rows(build(spark))
     finally:
-        spark.conf.unset("spark.seqtables.ranks.boundary")
-    assert base == none_mode
+        spark.conf.unset("spark.seqtables.boundary")
+    assert base == unbounded
+    assert all(base), "a site returned no rows; the comparison shows nothing"
+
+
+def test_boundary_key_modes(spark):
+    """checkpoint (the default) cuts the plan at a checkpointed RDD,
+    none hands the DataFrame back unchanged, anything else raises."""
+    from seqtables_spark.session import boundary
+
+    df = spark.range(10).withColumn("x", F.col("id") * 2)
+    plan = boundary(df)._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" in plan
+    spark.conf.set("spark.seqtables.boundary", "none")
+    try:
+        assert boundary(df) is df
+        spark.conf.set("spark.seqtables.boundary", "persist")
+        with pytest.raises(ValueError, match="spark.seqtables.boundary"):
+            boundary(df)
+    finally:
+        spark.conf.unset("spark.seqtables.boundary")
+
+
+def test_local_checkpoint_only_behind_the_boundary_helper():
+    """Planning-free source scan: every localCheckpoint call in the
+    library and the query module sits in session.boundary, except
+    the iterative lineage cuts (connected-components rounds and the
+    BPE merge fold), which must not depend on the boundary key."""
+    import ast
+    import collections
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    files = sorted((root / "seqtables_spark").rglob("*.py"))
+    files.append(root / "__spark_entry__.py")
+    found = collections.Counter()
+    for path in files:
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for top in tree.body:
+            owner = getattr(top, "name", "<module>")
+            for node in ast.walk(top):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "localCheckpoint"
+                ):
+                    found[f"{path.relative_to(root)}::{owner}"] += 1
+    assert dict(found) == {
+        "seqtables_spark/session.py::boundary": 1,
+        "seqtables_spark/pipeline/dedup.py::_cc_label_propagation": 3,
+        "seqtables_spark/pipeline/dedup.py::_cc_star": 3,
+        "seqtables_spark/pipeline/bpe.py::train_bpe": 1,
+    }
 
 
 def test_quality_dist_empty_bins_returns_empty(spark):
@@ -254,3 +419,39 @@ def test_bucketed_join_database_is_pid_scoped(spark):
     assert all(d.endswith(f"_{pid}") for d in ours), (
         f"bucket databases not PID-scoped: {ours}"
     )
+
+
+def test_bucketed_db_drops_databases_of_dead_processes(spark, tmp_path):
+    """A persistent metastore must not keep one bucket database per
+    process forever: building the bucket database drops every
+    seqtables_bucket_* database whose PID is dead, and keeps those of
+    live processes."""
+    import subprocess
+    import sys
+
+    import __spark_entry__ as entry
+
+    child = subprocess.Popen([sys.executable, "-c", "pass"])
+    child.wait()
+    try:
+        os.kill(child.pid, 0)
+        pytest.skip("the exited child's PID is already reused")
+    except ProcessLookupError:
+        pass
+    dead = f"seqtables_bucket_deadbeef_{child.pid}"
+    alive = f"seqtables_bucket_cafebabe_{os.getpid()}"
+    for db in (dead, alive):
+        spark.sql(f"CREATE DATABASE {db} LOCATION '{tmp_path / db}'")
+    # a private sf_dir (links to the real tables), so _bucketed_db runs
+    # afresh without overwriting tables that other tests have planned
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    for t in ("customer", "orders"):
+        os.symlink(f"{SF_DIR}/{t}.parquet", sf / f"{t}.parquet")
+    try:
+        entry._bucketed_db(spark, str(sf))
+        dbs = {d.name for d in spark.catalog.listDatabases()}
+        assert dead not in dbs
+        assert alive in dbs
+    finally:
+        spark.sql(f"DROP DATABASE IF EXISTS {alive} CASCADE")

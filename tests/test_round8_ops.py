@@ -112,22 +112,6 @@ def test_read_bam_region_bai_quoted_path(spark, tmp_path):
     assert [r["header"] for r in got] == ["r1"]
 
 
-def test_bigram_logprob_reuse_tokens_parity(spark):
-    """The persist path (reuse_tokens=True) and the stateless default
-    produce identical rows; the round-8 window-model rewrite changed
-    the plan, not the arithmetic."""
-    from seqtables_spark.pipeline.text import bigram_logprob
-
-    df = spark.createDataFrame(
-        [(1, "a b a b c"), (2, "a b"), (3, "x"), (4, "c c c c")],
-        "doc_id long, text string",
-    )
-    a = sorted(map(tuple, bigram_logprob(df, reuse_tokens=False).collect()))
-    b = sorted(map(tuple, bigram_logprob(df, reuse_tokens=True).collect()))
-    assert a == b
-    assert len(a) == 3  # doc 3 has no bigram
-
-
 def test_train_bpe_batch_merges_exact(spark):
     """batch_merges>1 must produce a BIT-IDENTICAL merge table to the
     sequential top-1 path (the safety prefix stops at any pair whose

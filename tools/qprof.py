@@ -24,17 +24,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-
-def _cpu_counters() -> tuple[int, int]:
-    """(total jiffies, steal jiffies) — same sampler as bench.py so a
-    qprof number carries the same hypervisor-steal receipt the bench
-    artifact does (a steal spike triples wall times while the in-VM
-    load average stays low)."""
-    with open("/proc/stat") as fh:
-        v = list(map(int, fh.readline().split()[1:]))
-    total = sum(v[:8])
-    steal = v[7] if len(v) > 7 else 0
-    return total, steal
+# the same steal sampler as bench.py and perfbench, so a qprof number
+# carries the same hypervisor-steal receipt
+from perfbench.sampler import cpu_times, steal_pct  # noqa: E402
 
 
 def main() -> int:
@@ -93,7 +85,7 @@ def main() -> int:
         # timings: fresh plan per rep, plan-build off-clock (bench protocol)
         noop_best = coll_best = None
         rows = 0
-        q_t0, q_s0 = _cpu_counters()
+        q0 = cpu_times()
         for _ in range(reps):
             d1 = fn(spark, sf_dir)
             d1._jdf.queryExecution().executedPlan()
@@ -108,10 +100,7 @@ def main() -> int:
             rows = len(d2.collect())
             dt = time.perf_counter() - t0
             coll_best = dt if coll_best is None else min(coll_best, dt)
-        q_t1, q_s1 = _cpu_counters()
-        steal_pct = round(
-            100.0 * (q_s1 - q_s0) / max(q_t1 - q_t0, 1), 2
-        )
+        stl = round(steal_pct(q0, cpu_times()), 2)
         out[name] = {
             "noop_s": round(noop_best, 3),
             "collect_s": round(coll_best, 3),
@@ -119,11 +108,11 @@ def main() -> int:
             "exchanges": n_exch,
             "py_nodes": n_py,
             "joins": joins,
-            "steal_pct": steal_pct,
+            "steal_pct": stl,
         }
         print(
             f"{name:28s} noop={noop_best:6.3f} collect={coll_best:6.3f} "
-            f"rows={rows:>8d} exch={n_exch} py={n_py} steal={steal_pct}% "
+            f"rows={rows:>8d} exch={n_exch} py={n_py} steal={stl}% "
             f"joins={joins}",
             flush=True,
         )
