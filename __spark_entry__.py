@@ -170,16 +170,16 @@ def _doc_reads(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_memoized
 def _doc_qcells(spark: SparkSession, sf_dir: str) -> DataFrame:
     st = from_df(_doc_reads(spark, sf_dir), max_len=W)
-    return st.cells(with_qual=True).persist()
+    return boundary(st.cells(with_qual=True))
 
 
 def _doc_cells(spark: SparkSession, sf_dir: str, with_qual: bool = False) -> DataFrame:
     """Exploded per-character view of the document prefixes.
 
-    Persisted once per (session, sf_dir) with both channels: ~12 of
-    the queries below share this exact scan+explode, so one in-memory
-    materialization amortizes across them; column pruning on the
-    cached plan drops `qual` for the callers that don't ask for it."""
+    Checkpointed once per (session, sf_dir) with both channels: ~12
+    of the queries below share this exact scan+explode, so one
+    materialization amortizes across them; callers that don't ask for
+    `qual` get a projection of the same checkpoint."""
     cells = _doc_qcells(spark, sf_dir)
     if with_qual:
         return cells
@@ -585,10 +585,11 @@ def _sam_shaped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_memoized
 def _aligned(spark: SparkSession, sf_dir: str):
-    """Aligned (reads, insertions) pair, persisted per session x sf:
-    five queries consume the mapInPandas aligner output, and the
-    insertion stats join both sides of it - one materialization
-    instead of re-running the Python kernel per consumer."""
+    """Aligned (reads, insertions) pair, checkpointed once per
+    (session, sf_dir): five queries consume the mapInArrow aligner
+    output, and the insertion stats join both sides of it - one
+    materialization (align_sam_df's boundary) instead of re-running
+    the Python kernel per consumer."""
     from seqtables_spark.sources.align import align_sam_df
 
     reads, ins = align_sam_df(
@@ -597,7 +598,7 @@ def _aligned(spark: SparkSession, sf_dir: str):
         max_pos=ALIGN_WINDOW[1],
         id_col="read_id",
     )
-    return reads.persist(), ins.persist()
+    return reads, ins
 
 
 def q_cigar_align(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -812,18 +813,18 @@ LSH_BANDS = 2
 
 @_memoized
 def _lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Banded-LSH candidate pairs over the planted corpus, persisted
-    per (session x sf_dir): q_minhash_lsh_pairs and q_ngram_jaccard
-    share this exact pipeline (the md5 shingle hashing is the whole
-    cost), so one materialization serves both."""
+    """Banded-LSH candidate pairs over the planted corpus,
+    checkpointed once per (session, sf_dir): q_minhash_lsh_pairs and
+    q_ngram_jaccard share this exact pipeline (the md5 shingle hashing
+    is the whole cost), so one materialization serves both."""
     from seqtables_spark.pipeline.dedup import minhash_candidate_pairs
 
-    return minhash_candidate_pairs(
+    return boundary(minhash_candidate_pairs(
         _planted_corpus(spark, sf_dir),
         n_hashes=MINHASH_N,
         bands=LSH_BANDS,
         k=LSH_K,
-    ).persist()
+    ))
 
 
 def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -834,18 +835,19 @@ def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_memoized
 def _verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH-then-verify output, persisted per (session x sf_dir): the
-    verified pair list feeds THREE queries (ngram_jaccard,
-    dedup_clusters, dedup_survivors), and the verify re-shingles the
-    candidate docs each time - one materialization serves all."""
+    """LSH-then-verify output, checkpointed once per (session,
+    sf_dir): the verified pair list feeds THREE queries
+    (ngram_jaccard, dedup_clusters, dedup_survivors), and the verify
+    re-shingles the candidate docs each time - one materialization
+    serves all."""
     from seqtables_spark.pipeline.dedup import ngram_jaccard_pairs
 
-    return ngram_jaccard_pairs(
+    return boundary(ngram_jaccard_pairs(
         _planted_corpus(spark, sf_dir),
         k=12,
         min_jaccard=0.4,
         candidates=_lsh_candidates(spark, sf_dir),
-    ).persist()
+    ))
 
 
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1099,13 +1101,13 @@ def q_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_memoized
 def _emb_and_query(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list[float]]:
-    """(base embeddings persisted, query vector) per (session x
-    sf_dir): the three ANN queries each need the vec_id=0 probe vector
-    and scan the table several times (seed/train/search for IVF), so
-    one cached materialization and one driver fetch serve all."""
+    """(base embeddings, query vector), the base checkpointed once per
+    (session, sf_dir): the three ANN queries each need the vec_id=0
+    probe vector and scan the table several times (seed/train/search
+    for IVF), so one materialization and one driver fetch serve all."""
     emb = _t(spark, sf_dir, "embeddings")
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-    return _wide(spark, emb.filter(F.col("vec_id") != 0)).persist(), qvec
+    return boundary(_wide(spark, emb.filter(F.col("vec_id") != 0))), qvec
 
 
 def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1140,17 +1142,17 @@ def q_ann_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_memoized
 def _pq_index(spark: SparkSession, sf_dir: str):
-    """PQ codebooks + persisted code column per (session x sf_dir):
-    like the IVF index, a PQ index is trained once and searched many
-    times — at scale the m-byte codes are written out (32x smaller
-    than the float32 vectors) and ADC queries never touch the
-    originals, so re-training per query would misrepresent the
+    """PQ codebooks + code column, checkpointed once per (session,
+    sf_dir): like the IVF index, a PQ index is trained once and
+    searched many times — at scale the m-byte codes are written out
+    (32x smaller than the float32 vectors) and ADC queries never touch
+    the originals, so re-training per query would misrepresent the
     operator's cost."""
     from seqtables_spark.pipeline.similarity import pq_codebooks, pq_encode
 
     base, qvec = _emb_and_query(spark, sf_dir)
     books = pq_codebooks(base, m=32, ksub=16, n_iters=1, dim=len(qvec))
-    return books, pq_encode(base, books).select("vec_id", "codes").persist()
+    return books, boundary(pq_encode(base, books).select("vec_id", "codes"))
 
 
 def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1229,11 +1231,11 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_memoized
 def _ivf_index(spark: SparkSession, sf_dir: str):
-    """IVF index per (session x sf_dir): centroids + persisted cell
-    assignment + the derived (k, nprobe). An IVF index is BUILT ONCE
-    and searched many times - at scale the assignment is written out
-    partitioned by `_c`, so re-training per query would misrepresent
-    the operator's cost.
+    """IVF index, checkpointed once per (session, sf_dir): centroids
+    + cell assignment + the derived (k, nprobe). An IVF index is BUILT
+    ONCE and searched many times - at scale the assignment is written
+    out partitioned by `_c`, so re-training per query would
+    misrepresent the operator's cost.
 
     k is NOT pinned: it grows with the corpus (ivf_k_for, fixed
     expected cell size of 250) so semantic_dedup's within-cluster
@@ -1248,14 +1250,14 @@ def _ivf_index(spark: SparkSession, sf_dir: str):
 
     base, qvec = _emb_and_query(spark, sf_dir)
     cents = ivf_centroids(base, k=ivf_k_for(base.count()), n_iters=1, dim=len(qvec))
-    assigned = ivf_assign(base, cents).persist()
+    assigned = boundary(ivf_assign(base, cents))
     return cents, assigned, len(cents), ivf_nprobe_for(len(cents))
 
 
 def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Similarity scale path 2: IVF - k-means coarse quantizer
     (deterministic seeding + fixed-point Lloyd mean, pure DataFrame
-    ops) + nprobe search + exact re-rank over the cached cell
+    ops) + nprobe search + exact re-rank over the checkpointed cell
     assignment. The fixed-point mean makes the trained centroids
     bit-identical across engines, so even this iterative path carries
     a value-exact DuckDB oracle (see _sql_ann_ivf)."""
@@ -4270,23 +4272,22 @@ _PLAN_CACHE_EXCLUDE = {
 # function changed in git but sits outside this head.
 _SAMPLE_HEAD = (
     # changed since the last attestation
-    "session_overlap", "curate_funnel", "curate_llm", "token_freq_cms",
-    "curate_full", "perplexity_scores",
+    "cigar_insertions", "seq_dist", "ngram_jaccard", "dedup_clusters_star",
+    "cosine_topk", "ann_pq", "ann_ivf",
     # the previous sample's head
-    "streaming_events", "streaming_windowed", "streaming_sessions",
-    "events_hourly", "event_sessions", "json_events", "bowtie_align",
-    "bowtie_distributed", "partitioned_prune", "bucketed_join",
-    "streaming_quality_gate", "kmv_users", "event_quantiles",
-    "value_quantiles_sketch", "streaming_token_cms", "hamming",
-    "mutation_profile", "ts_tv", "hamming_norm", "compare_matches",
-    "mutation_by_position", "hamming_setdiff", "kmers_contiguous",
-    "fastq_roundtrip", "sam_roundtrip", "bam_region", "bam_region_bai",
-    "bam_region_csi", "bam_roundtrip", "bam_region_sharded",
-    "quality_dist", "quality_dist_fastqc", "contamination",
-    "fuzzy_contamination", "curate_corpus", "corpus_stats",
-    "leakage_split", "token_budget", "customer_deciles",
-    "training_order", "weighted_sample_docs", "running_revenue",
-    "audio_features", "bpe_merges",
+    "session_overlap", "curate_funnel", "curate_llm", "token_freq_cms",
+    "curate_full", "perplexity_scores", "streaming_events",
+    "streaming_windowed", "streaming_sessions", "events_hourly",
+    "event_sessions", "json_events", "bowtie_align", "bowtie_distributed",
+    "partitioned_prune", "bucketed_join", "streaming_quality_gate",
+    "kmv_users", "event_quantiles", "value_quantiles_sketch",
+    "streaming_token_cms", "hamming", "mutation_profile", "ts_tv",
+    "hamming_norm", "compare_matches", "mutation_by_position",
+    "hamming_setdiff", "kmers_contiguous", "fastq_roundtrip", "sam_roundtrip",
+    "bam_region", "bam_region_bai", "bam_region_csi", "bam_roundtrip",
+    "bam_region_sharded", "quality_dist", "quality_dist_fastqc",
+    "contamination", "fuzzy_contamination", "curate_corpus", "corpus_stats",
+    "leakage_split",
 )
 
 

@@ -130,9 +130,5 @@ def from_sam_df(
         & (F.col("cigar").isNotNull()) & (F.col("cigar") != "*")
         & (F.col("seq").isNotNull()) & (F.col("seq") != "*")
     )
-    reads, insertions, cached = align_sam_df(
-        clean, min_pos=min_pos, max_pos=max_pos, return_cached=True
-    )
-    st = SeqTable(reads, insertions, seq_type=seq_type)
-    st._cached_plans.append(cached)
-    return st
+    reads, insertions = align_sam_df(clean, min_pos=min_pos, max_pos=max_pos)
+    return SeqTable(reads, insertions, seq_type=seq_type)

@@ -110,9 +110,6 @@ class SeqTable:
         self.phred_adjust = phred_adjust
         self.fillna_val = fillna_val or FILL_CHAR.get(seq_type, "N")
         self._n_reads: int | None = None  # lazy, cached after first use
-        # persisted upstream stages this table owns (e.g. the CIGAR
-        # realignment output); released by unpersist()
-        self._cached_plans: list[DataFrame] = []
 
     # -- constructors (reference classmethod surface, seqtables.py:92,
     # 168, 214, 226): thin delegates so a reference user's
@@ -592,18 +589,6 @@ class SeqTable:
         from .operators.merge import merge_seqtables
 
         return merge_seqtables([self, *others], axis=axis)
-
-    def unpersist(self) -> None:
-        """Release any persisted upstream stages this table owns (the
-        realignment cache from from_sam/from_pysam/from_df-with-cigar).
-        Safe to call repeatedly; the table remains usable (stages
-        recompute lazily afterwards)."""
-        for df in self._cached_plans:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        self._cached_plans = []
 
     def create_views(self, prefix: str = "seqtable") -> list[str]:
         """Register the table's three relations as session temp views

@@ -96,7 +96,9 @@ def boundary(df: DataFrame, eager: bool = False) -> DataFrame:
     and ignore the key: the connected-components rounds
     (``dedup._cc_label_propagation``, ``dedup._cc_star``) and the BPE
     merge fold (``bpe.train_bpe``). Without them the plan grows with
-    every round until the driver runs out of memory."""
+    every round until the driver runs out of memory. Library and query
+    code never calls ``persist``, except the two loop-scoped caches in
+    ``bpe.train_bpe``, which it unpersists before it returns."""
     mode = df.sparkSession.conf.get(BOUNDARY_KEY, "checkpoint")
     if mode == "none":
         return df

@@ -32,8 +32,8 @@ the single-read reference implementation - the property suite pins
 batch == single-read for arbitrary cigars. Each input row yields one
 output row carrying the aligned seq/qual plus an array<struct> of
 its insertions; callers split that into the `reads` and `insertions`
-DataFrames (persist the aligned DF first when both sides are
-consumed, to avoid recomputing the UDF). At 100 TB the operator is
+DataFrames, which share one materialize-once boundary so consuming
+both runs the kernel once. At 100 TB the operator is
 embarrassingly parallel per partition and Arrow-batched; no shuffle
 at all.
 """
@@ -44,6 +44,8 @@ import re
 import numpy as np
 
 from pyspark.sql import DataFrame, functions as F
+
+from ..session import boundary
 
 _CIGAR_RE = re.compile(r"(\d+)([MIDNSHP=XB])")
 
@@ -606,15 +608,11 @@ def align_sam_df(
     max_pos: int | None = None,
     edge_gap: str = "-",
     id_col: str = "header",
-    return_cached: bool = False,
-) -> tuple[DataFrame, DataFrame] | tuple[DataFrame, DataFrame, DataFrame]:
+) -> tuple[DataFrame, DataFrame]:
     """Align a SAM-shaped DataFrame (id, pos, seq, qual, cigar).
 
-    Returns (reads, insertions) - or, with return_cached=True,
-    (reads, insertions, cached_stage) where cached_stage is the
-    persisted mapInPandas output BOTH derive from: the owner must
-    eventually .unpersist() it (SeqTable.unpersist does), otherwise
-    the CacheManager entry lives for the whole session.
+    Returns (reads, insertions), both projections of one
+    materialize-once boundary over the kernel output:
 
       reads(read_id, seq, qual, pos_start)  - fixed width, aligned
       insertions(read_id, position, loc_ins, base, qual)
@@ -676,14 +674,10 @@ def align_sam_df(
     # mapInArrow, not mapInPandas: the kernel reads the Arrow string
     # buffers directly and emits the aligned columns zero-copy from
     # its byte matrices - no python strings cross the boundary in
-    # either direction. Both outputs derive from the one stage;
-    # persist so consuming reads AND insertions costs one
-    # CIGAR-realign pass, not two (MEMORY_AND_DISK - spills, never
-    # recomputes)
-    aligned = prepared.mapInArrow(_align_batches, ALIGNED_SCHEMA).persist()
-    # the persisted stage is handed back via return_cached so an OWNER
-    # (SeqTable.unpersist) can release it - persist without a release
-    # handle leaks CacheManager entries for the session lifetime
+    # either direction. Both outputs derive from the one stage behind
+    # a boundary, so consuming reads AND insertions costs one
+    # CIGAR-realign pass, not two
+    aligned = boundary(prepared.mapInArrow(_align_batches, ALIGNED_SCHEMA))
     reads = aligned.select("read_id", "seq", "qual", "pos_start")
     insertions = (
         aligned.select("read_id", F.explode("ins").alias("i"))
@@ -695,6 +689,4 @@ def align_sam_df(
             (F.ascii("i.qual_ch") - F.lit(33)).alias("qual"),
         )
     )
-    if return_cached:
-        return reads, insertions, aligned
     return reads, insertions

@@ -210,19 +210,18 @@ def test_create_views_sql_surface(spark):
     assert spark.sql("SELECT count(*) n FROM t_sql_reads").first()["n"] == 3
 
 
-def test_unpersist_releases_realignment_cache(spark):
-    """from_df(cigar) owns a persisted realignment stage; unpersist()
-    releases it and the table stays usable."""
+def test_from_sam_df_leaves_the_cache_manager_empty(spark):
+    """from_df(cigar) shares one realignment pass between reads and
+    insertions through a checkpoint boundary, not a persisted relation
+    that would outlive the table in the session CacheManager."""
     from seqtables_spark.model import SeqTable
 
+    spark.catalog.clearCache()
     sam_df = spark.createDataFrame(
-        [("r1", "ref1", 3, "4M", "ACGT", "IIII")],
+        [("r1", "ref1", 3, "2M1I2M", "ACGTA", "IIIII")],
         "header string, rname string, pos long, cigar string, seq string, qual string",
     )
     st = SeqTable.from_df(sam_df)
-    assert len(st._cached_plans) == 1
-    assert st.reads.count() == 1
-    st.unpersist()
-    assert st._cached_plans == []
-    assert st.reads.count() == 1  # recomputes lazily, still correct
-    st.unpersist()  # idempotent
+    assert len(st.reads.collect()) == 1
+    assert len(st.insertions.collect()) == 1
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -317,7 +317,16 @@ def _mini_docs(spark, n=60):
         F.col("id").alias("doc_id"),
         F.concat_ws(
             " ",
-            F.lit(words),
+            # English LANG_MARKERS, so language_id keeps the docs, and
+            # a per-doc digest, so near-dup removal keeps them; docs
+            # 5, 15, ... reuse the digest of the doc 5 below them, so
+            # decontamination against the %10 == 0 docs drops those
+            F.lit("the and of to is"),
+            F.sha2(
+                (F.col("id") - F.when(F.col("id") % 10 == 5, 5).otherwise(0))
+                .cast("string"),
+                256,
+            ),
             F.concat(F.lit("doc"), (F.col("id") % 7).cast("string")),
             F.when(F.col("id") % 5 == 0, F.lit(words)).otherwise(
                 F.concat(F.lit("tail"), F.col("id").cast("string"))
@@ -360,6 +369,7 @@ def test_curate_full_dsir_boundary_single_contamination_pass(spark):
     try:
         unmat = curate_documents_full(corpus, **kw)
         assert "LeftAnti" in unmat._jdf.queryExecution().executedPlan().toString()
+        assert key(mat), "no doc reached DSIR; the comparison shows nothing"
         assert key(mat) == key(unmat)
     finally:
         spark.conf.unset("spark.seqtables.boundary")

@@ -272,9 +272,23 @@ def _entry_site(name):
     def build(spark):
         import __spark_entry__ as entry
 
+        # a memoized fixture keeps the boundary mode it was built under
+        entry._memo.clear()
         return (getattr(entry, f"q_{name}")(spark, SF_DIR),)
 
     return build
+
+
+def _site_from_sam_df(spark):
+    from seqtables_spark.model import SeqTable
+
+    st = SeqTable.from_df(spark.createDataFrame(
+        [("r1", "ref1", 3, "2M1I2M", "ACGTA", "IIIII"),
+         ("r2", "ref1", 2, "1S3M", "TACG", "IIII"),
+         ("r3", "ref1", 1, "2M2I1M", "ACCCG", "IIIII")],
+        "header string, rname string, pos long, cigar string, seq string, qual string",
+    ))
+    return st.reads, st.insertions
 
 
 _BOUNDARY_SITES = {
@@ -284,11 +298,13 @@ _BOUNDARY_SITES = {
     "contamination_check": _site_contamination_check,
     "curate_documents_full": _site_curate_documents_full,
     "bigram_logprob": _site_bigram_logprob,
+    "from_sam_df": _site_from_sam_df,
     **{
         name: _entry_site(name)
         for name in (
             "session_overlap", "curate_funnel", "curate_llm",
-            "token_freq_cms",
+            "token_freq_cms", "cigar_insertions", "ngram_jaccard",
+            "ann_ivf",
         )
     },
 }
@@ -342,7 +358,9 @@ def test_local_checkpoint_only_behind_the_boundary_helper():
     """Planning-free source scan: every localCheckpoint call in the
     library and the query module sits in session.boundary, except
     the iterative lineage cuts (connected-components rounds and the
-    BPE merge fold), which must not depend on the boundary key."""
+    BPE merge fold), which must not depend on the boundary key. No
+    code persists or caches a relation, except the two loop-scoped
+    caches train_bpe releases itself."""
     import ast
     import collections
     import pathlib
@@ -359,14 +377,15 @@ def test_local_checkpoint_only_behind_the_boundary_helper():
                 if (
                     isinstance(node, ast.Call)
                     and isinstance(node.func, ast.Attribute)
-                    and node.func.attr == "localCheckpoint"
+                    and node.func.attr in ("localCheckpoint", "persist", "cache")
                 ):
-                    found[f"{path.relative_to(root)}::{owner}"] += 1
+                    found[node.func.attr, f"{path.relative_to(root)}::{owner}"] += 1
     assert dict(found) == {
-        "seqtables_spark/session.py::boundary": 1,
-        "seqtables_spark/pipeline/dedup.py::_cc_label_propagation": 3,
-        "seqtables_spark/pipeline/dedup.py::_cc_star": 3,
-        "seqtables_spark/pipeline/bpe.py::train_bpe": 1,
+        ("localCheckpoint", "seqtables_spark/session.py::boundary"): 1,
+        ("localCheckpoint", "seqtables_spark/pipeline/dedup.py::_cc_label_propagation"): 3,
+        ("localCheckpoint", "seqtables_spark/pipeline/dedup.py::_cc_star"): 3,
+        ("localCheckpoint", "seqtables_spark/pipeline/bpe.py::train_bpe"): 1,
+        ("persist", "seqtables_spark/pipeline/bpe.py::train_bpe"): 2,
     }
 
 

@@ -159,18 +159,18 @@ def audit_plan(plan: str) -> dict:
 
 
 def build_audit(spark, sf_dir: str, names=None) -> dict:
+    """Audit each query's initial physical plan, in `names` order (all
+    queries by default). Every query builds its shared fixtures itself
+    from an empty memo, so its row does not depend on which query ran
+    first; no fixture persists, so emptying the memo is enough."""
     import __spark_entry__ as entry
 
+    qs = entry.queries(cached=False)
     out = {}
-    for name, fn in entry.queries(cached=False).items():
-        if names and name not in names:
-            continue
-        # every query builds its shared fixtures itself, so its row does
-        # not depend on which query ran first
+    for name in names or qs:
         entry._memo.clear()
-        spark.catalog.clearCache()
         try:
-            df = fn(spark, sf_dir)
+            df = qs[name](spark, sf_dir)
             plan = df._jdf.queryExecution().executedPlan().toString()
         except Exception as e:  # audit must report, not die
             out[name] = {"error": f"{type(e).__name__}: {e}"[:200]}
