@@ -9,7 +9,7 @@ closest native analog) with the standard large-corpus dedup toolbox:
     minhash_candidate_pairs banded LSH self-join
   - simhash / simhash_near_dups: sign-aggregated token hashes,
     hamming-ball matching via banding
-  - ngram_jaccard_pairs:    exact n-gram Jaccard within blocks
+  - ngram_jaccard_pairs:    exact n-gram Jaccard
 
 Scale design. Exact dedup is one hash aggregate (map-side partial on
 the digest). MinHash: the shingle explode is the wide step, but it
@@ -19,6 +19,14 @@ LSH band join is an equi-join on (band_idx, band_hash): uniform by
 construction, no skew; candidate verification stays per-bucket.
 Nothing here ever self-joins the full corpus - that is the entire
 point of LSH at 100 TB.
+
+Every near-duplicate operator is filter-then-verify: derive bucket
+keys, pair the rows that share one, verify the pair. `_key_pairs` is
+the one statement of the bucket self-join (pair orientation
+id_a < id_b, one row per shared key) and `_drop_hot_keys` the one
+statement of the hot-key cap; sketch.kmv_pairwise_jaccard_banded
+uses both. `_band_collisions` is the corpus-vs-eval band join behind
+the count guard.
 """
 
 from __future__ import annotations
@@ -236,21 +244,51 @@ def minhash_candidate_pairs(
     rows of at least one band. Returns DF(id_a, id_b) with id_a < id_b.
     """
     banded = minhash_band_keys(df, n_hashes, bands, k, text_col, id_col, seed)
-    left = banded.alias("l")
-    right = banded.alias("r")
-    pairs = (
-        left.join(
-            right,
-            (F.col("l.band_idx") == F.col("r.band_idx"))
-            & (F.col("l.band_hash") == F.col("r.band_hash"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b")
-        )
-        .distinct()
+    return _key_pairs(banded, ("band_idx", "band_hash"), id_col).distinct()
+
+
+def _key_pairs(
+    rel: DataFrame,
+    keys: Sequence[str],
+    id_col: str,
+    carry: Sequence[str] = (),
+) -> DataFrame:
+    """The bucket self equi-join of every near-duplicate operator:
+    rows of `rel` that share all of `keys` pair up, oriented
+    id_a < id_b inside the join condition (so each unordered pair is
+    produced once per shared key and a row never pairs with itself).
+    Returns DF(id_a, id_b[, <c>_a, <c>_b for c in carry]) with one row
+    per shared key; callers that want one row per pair take
+    .distinct(). The join is never all-pairs: its cost is
+    sum over keys of C(m_key, 2), which `_drop_hot_keys` bounds."""
+    on = [F.col(f"l.{key}") == F.col(f"r.{key}") for key in keys]
+    on.append(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
+    return rel.alias("l").join(rel.alias("r"), on).select(
+        F.col(f"l.{id_col}").alias("id_a"),
+        F.col(f"r.{id_col}").alias("id_b"),
+        *[F.col(f"l.{c}").alias(f"{c}_a") for c in carry],
+        *[F.col(f"r.{c}").alias(f"{c}_b") for c in carry],
     )
-    return pairs
+
+
+def _drop_hot_keys(
+    rel: DataFrame, key: str, max_rows: int | None
+) -> DataFrame:
+    """The hot-key cap ahead of a `_key_pairs` self-join: drop every
+    row whose `key` value occurs in more than `max_rows` rows of
+    `rel` (a stop-shingle shared by d rows would add d*(d-1)/2 join
+    rows on its own). None returns `rel` unchanged. The hot list is
+    bounded only by rows/(max_rows+1), so the anti-join carries no
+    broadcast hint; AQE broadcasts it when it is measured small."""
+    if max_rows is None:
+        return rel
+    hot = (
+        rel.groupBy(key)
+        .agg(F.count(F.lit(1)).alias("__n__"))
+        .filter(F.col("__n__") > int(max_rows))
+        .select(key)
+    )
+    return rel.join(hot, key, "left_anti")
 
 
 def _band_bucket(bucket_bits: int):
@@ -563,25 +601,18 @@ def simhash_near_dups(
     expanded = sh.select(F.col(id_col), F.col("simhash"), F.explode(chunks).alias("c")).select(
         id_col, "simhash", "c.chunk_idx", "c.chunk_val"
     )
-    l, r = expanded.alias("l"), expanded.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.chunk_idx") == F.col("r.chunk_idx"))
-            & (F.col("l.chunk_val") == F.col("r.chunk_val"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
+    return (
+        _key_pairs(expanded, ("chunk_idx", "chunk_val"), id_col, ("simhash",))
         .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
+            "id_a",
+            "id_b",
             F.bit_count(
-                F.col("l.simhash").bitwiseXOR(F.col("r.simhash"))
+                F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))
             ).alias("hamming"),
         )
         .distinct()
         .filter(F.col("hamming") <= max_hamming)
     )
-    return cand
 
 
 def connected_components(
@@ -895,7 +926,6 @@ def ngram_jaccard_pairs(
     df: DataFrame,
     k: int = 3,
     min_jaccard: float = 0.8,
-    block_cols: tuple[str, ...] = (),
     text_col: str = "text",
     id_col: str = "doc_id",
     candidates: DataFrame | None = None,
@@ -914,14 +944,14 @@ def ngram_jaccard_pairs(
 
     Without `candidates`: inverted-index join - docs sharing an n-gram
     meet in that n-gram's posting list; |intersection| falls out of a
-    groupBy over the join, |union| = |A| + |B| - |A n B|. block_cols
-    (e.g. ('lang',)) restrict candidates. Quadratic in posting-list
-    length: a shingle shared by d docs contributes d*(d-1)/2 join rows,
-    so one stop-gram shared by 10k docs is a 5*10^7-row hot key.
-    `max_doc_freq` is the standard inverted-index guard and is ON BY
-    DEFAULT (256): shingles whose GLOBAL document frequency exceeds it
-    are dropped from the universe before the self-join (sizes |A|,|B|
-    are recomputed over the kept shingles, so the score is exact
+    groupBy over the join, |union| = |A| + |B| - |A n B|. Quadratic in
+    posting-list length: a shingle shared by d docs contributes
+    d*(d-1)/2 join rows, so one stop-gram shared by 10k docs is a
+    5*10^7-row hot key. `max_doc_freq` is the standard inverted-index
+    guard (`_drop_hot_keys`) and is ON BY DEFAULT (256): shingles whose
+    GLOBAL document frequency exceeds it are dropped from the universe
+    before the self-join (sizes |A|,|B| are recomputed over the kept
+    shingles, so the score is exact
     Jaccard over the informative-shingle universe - ultra-common grams
     carry no similarity signal, the same reasoning as stopword
     removal), bounding every posting list's join fan-out at
@@ -983,31 +1013,18 @@ def ngram_jaccard_pairs(
             "id_b",
             jac,
         ).filter(F.col("jaccard") >= min_jaccard)
-    sh = shingles(df, k=k, text_col=text_col, id_col=id_col)
-    if block_cols:
-        meta = df.select(F.col(id_col), *block_cols)
-        sh = sh.join(meta, id_col)
-    if max_doc_freq is not None:
-        # rows are distinct per (doc, shingle) by construction, so
-        # count(*) per shingle IS its document frequency; the hot list
-        # is tiny (only the offenders) and AQE broadcasts the anti-join
-        hot = (
-            sh.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("__df__"))
-            .filter(F.col("__df__") > int(max_doc_freq))
-            .select("shingle")
-        )
-        sh = sh.join(hot, "shingle", "left_anti")
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
-    l, r = sh.alias("l"), sh.alias("r")
-    join_cond = (F.col("l.shingle") == F.col("r.shingle")) & (
-        F.col(f"l.{id_col}") < F.col(f"r.{id_col}")
+    # rows are distinct per (doc, shingle) by construction, so a
+    # shingle's row count IS its document frequency; the sizes below
+    # are taken over the capped universe
+    sh = _drop_hot_keys(
+        shingles(df, k=k, text_col=text_col, id_col=id_col),
+        "shingle",
+        max_doc_freq,
     )
-    for bc in block_cols:
-        join_cond = join_cond & (F.col(f"l.{bc}") == F.col(f"r.{bc}"))
+    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
     inter = (
-        l.join(r, join_cond)
-        .groupBy(F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b"))
+        _key_pairs(sh, ("shingle",), id_col)
+        .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
     sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n").alias("n_a"))
@@ -1104,37 +1121,6 @@ def contamination_check(
     )
 
 
-def lsh_design(n_hashes: int, bands: int) -> dict:
-    """Design math for a banded-MinHash configuration (pure driver
-    arithmetic, no data): with r = n_hashes/bands rows per band, a
-    pair with true Jaccard similarity s collides in at least one band
-    with probability 1 - (1 - s^r)^bands (the classic S-curve), and
-    the curve's steepest point — the effective similarity threshold —
-    is (1/bands)^(1/r). Use it to pick (n_hashes, bands) BEFORE
-    running a corpus-scale job: at 100 TB, a threshold 0.1 too low is
-    billions of extra candidate pairs.
-
-    Returns {"rows_per_band", "threshold", "p_collide": s -> p}.
-    """
-    n_hashes, bands = int(n_hashes), int(bands)
-    if bands < 1 or n_hashes < 1 or n_hashes % bands != 0:
-        raise ValueError(
-            f"bands must divide n_hashes: got {n_hashes=} {bands=}"
-        )
-    r = n_hashes // bands
-
-    def p_collide(s: float) -> float:
-        if not 0.0 <= s <= 1.0:
-            raise ValueError(f"similarity must be in [0,1], got {s}")
-        return 1.0 - (1.0 - s**r) ** bands
-
-    return {
-        "rows_per_band": r,
-        "threshold": (1.0 / bands) ** (1.0 / r),
-        "p_collide": p_collide,
-    }
-
-
 def near_dup_contamination(
     corpus: DataFrame,
     eval_set: DataFrame,
@@ -1168,19 +1154,34 @@ def near_dup_contamination(
     docs with at least one banded collision; drop them (or route to
     human review) before training.
     """
-    cb = minhash_band_keys(
-        corpus, n_hashes, bands, k, text_col, id_col, seed
+    hits = _band_collisions(
+        minhash_band_keys(corpus, n_hashes, bands, k, text_col, id_col, seed),
+        minhash_band_keys(eval_set, n_hashes, bands, k, text_col, id_col, seed),
+        id_col,
+        max_broadcast_rows,
     )
-    eb = minhash_band_keys(
-        eval_set, n_hashes, bands, k, text_col, id_col, seed
-    ).withColumnRenamed(id_col, "_eval_id")
-    if max_broadcast_rows is not None:
-        eb = count_guarded_broadcast(eb, max_broadcast_rows)
-    hits = cb.join(eb, ["band_idx", "band_hash"])
     return hits.groupBy(id_col).agg(
         F.countDistinct("_eval_id").cast("long").alias("n_eval_matches"),
         F.min("_eval_id").alias("first_eval_id"),
     )
+
+
+def _band_collisions(
+    corpus_bands: DataFrame,
+    eval_bands: DataFrame,
+    id_col: str,
+    max_broadcast_rows: int | None = DEFAULT_MAX_BROADCAST_ROWS,
+) -> DataFrame:
+    """Corpus band keys joined to an eval set's band keys on
+    (band_idx, band_hash): one row per (corpus row, colliding eval
+    row, shared band), with the eval id renamed `_eval_id`. The eval
+    side is small by construction, so it goes through
+    count_guarded_broadcast; None skips the count and leaves the
+    strategy to the planner."""
+    eb = eval_bands.withColumnRenamed(id_col, "_eval_id")
+    if max_broadcast_rows is not None:
+        eb = count_guarded_broadcast(eb, max_broadcast_rows)
+    return corpus_bands.join(eb, ["band_idx", "band_hash"])
 
 
 def duplicate_spans(

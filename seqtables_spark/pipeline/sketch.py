@@ -32,6 +32,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..session import boundary
+from .dedup import _drop_hot_keys, _key_pairs
 from .hashing import HASH_PRIME, minhash_params, portable_string_hash
 
 
@@ -307,8 +308,10 @@ def kmv_pairwise_jaccard_banded(
          HOF, no Python) entirely JVM-side.
 
     ``max_groups_per_hash`` (opt-in) drops hash values hotter than
-    the cap BEFORE pairing — the classic stop-shingle guard against
-    a boilerplate hash shared by tens of thousands of groups turning
+    the cap BEFORE pairing through dedup._drop_hot_keys (an anti-join
+    with no broadcast hint: the hot list is bounded only by
+    G*k/(cap+1)) — the classic stop-shingle guard against a
+    boilerplate hash shared by tens of thousands of groups turning
     step 2 quadratic. It trades RECALL: a pair whose only shared
     sketch values are hot loses its candidacy. Leave None unless the
     group count makes the candidate bound bite; pick the cap from the
@@ -333,21 +336,11 @@ def kmv_pairwise_jaccard_banded(
     elems = narrow.select(
         F.col("__g__"), F.explode("__kmv__").alias("__h__")
     )
-    if max_groups_per_hash is not None:
-        hot = (
-            elems.groupBy("__h__")
-            .agg(F.count(F.lit(1)).alias("__m__"))
-            .filter(F.col("__m__") > int(max_groups_per_hash))
-            .select("__h__")
-        )
-        elems = elems.join(F.broadcast(hot), "__h__", "left_anti")
-    a = elems.select(F.col("__g__").alias("src_a"), "__h__")
-    b = elems.select(F.col("__g__").alias("src_b"), "__h__")
+    elems = _drop_hot_keys(elems, "__h__", max_groups_per_hash)
     cand = (
-        a.join(b, "__h__")
-        .filter(F.col("src_a") < F.col("src_b"))
-        .select("src_a", "src_b")
-        .dropDuplicates(["src_a", "src_b"])
+        _key_pairs(elems, ("__h__",), "__g__")
+        .select(F.col("id_a").alias("src_a"), F.col("id_b").alias("src_b"))
+        .distinct()
     )
     ska = narrow.select(
         F.col("__g__").alias("src_a"), F.col("__kmv__").alias("__kmv_a__")

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from seqtables_spark.pipeline.dedup import (
     exact_dedup,
+    minhash_band_keys,
     minhash_candidate_pairs,
     minhash_signatures,
     ngram_jaccard_pairs,
@@ -65,11 +66,67 @@ def test_minhash_identical_docs_same_signature(docs):
 
 
 def test_minhash_lsh_finds_dups(docs):
-    pairs = {
+    got = [
         (r["id_a"], r["id_b"])
         for r in minhash_candidate_pairs(docs, n_hashes=8, bands=4, k=5).collect()
-    }
+    ]
+    pairs = set(got)
     assert (1, 2) in pairs  # identical docs always collide
+    # exactly the a < b pairs sharing a (band_idx, band_hash), once each
+    keys = {}
+    for r in minhash_band_keys(docs, n_hashes=8, bands=4, k=5).collect():
+        keys.setdefault(r["doc_id"], set()).add((r["band_idx"], r["band_hash"]))
+    brute = {(a, b) for a in keys for b in keys if a < b and keys[a] & keys[b]}
+    assert len(got) == len(pairs) and pairs == brute
+
+
+def test_key_pairs_and_hot_key_cap_match_bruteforce(spark):
+    """The shared bucket self-join and hot-key cap: pairs are oriented
+    id_a < id_b, there is one row per shared key (no self-pairs),
+    carried columns ride both sides, and the cap drops every key with
+    more than max_rows rows (None leaves the relation unchanged)."""
+    import collections
+    import itertools
+
+    from seqtables_spark.pipeline.dedup import _drop_hot_keys, _key_pairs
+
+    rows = [  # (id, key, payload); key "h" is hot (4 rows)
+        (5, "h", 50), (1, "h", 10), (3, "h", 30), (2, "h", 20),
+        (1, "x", 10), (3, "x", 30), (2, "y", 20), (4, "y", 40),
+        (1, "z", 10), (3, "z", 30), (6, "w", 60),
+    ]
+    rel = spark.createDataFrame(rows, "id long, k string, p long")
+
+    def brute(rs):
+        by_key = collections.defaultdict(list)
+        for i, k, p in rs:
+            by_key[k].append((i, p))
+        out = []
+        for members in by_key.values():
+            for (i, pi), (j, pj) in itertools.combinations(members, 2):
+                (a, pa), (b, pb) = sorted([(i, pi), (j, pj)])
+                out.append((a, b, pa, pb))
+        return sorted(out)
+
+    def pairs(df):
+        return sorted(
+            (r["id_a"], r["id_b"], r["p_a"], r["p_b"])
+            for r in _key_pairs(df, ("k",), "id", ("p",)).collect()
+        )
+
+    uncapped = _drop_hot_keys(rel, "k", None)
+    assert uncapped is rel
+    got = pairs(uncapped)
+    assert got == brute(rows)
+    assert all(a < b for a, b, _, _ in got)
+    assert got.count((1, 3, 10, 30)) == 3  # shared via h, x and z
+    counts = collections.Counter(k for _, k, _ in rows)
+    for cap in (1, 2, 3):
+        kept = [r for r in rows if counts[r[1]] <= cap]
+        capped = _drop_hot_keys(rel, "k", cap)
+        got_rows = capped.select("id", "k", "p").collect()
+        assert sorted(map(tuple, got_rows)) == sorted(kept)
+        assert pairs(capped) == brute(kept)
 
 
 def test_simhash_near_dups(docs):
@@ -1021,25 +1078,6 @@ def test_gopher_defaults_are_paper_values(spark):
 
     assert e.GOPHER_FIXTURE_PARAMS["min_tokens"] == 20
     assert e.GOPHER_FIXTURE_PARAMS["min_alpha_ratio"] == 0.7
-
-
-def test_lsh_design():
-    from seqtables_spark.pipeline.dedup import lsh_design
-
-    d = lsh_design(16, 4)
-    assert d["rows_per_band"] == 4
-    assert abs(d["threshold"] - 0.25**0.25) < 1e-12
-    p = d["p_collide"]
-    # S-curve: monotone, anchored at 0 and 1
-    assert p(0.0) == 0.0 and abs(p(1.0) - 1.0) < 1e-12
-    xs = [i / 20 for i in range(21)]
-    assert all(p(a) <= p(b) + 1e-12 for a, b in zip(xs, xs[1:]))
-    # the engine's default banding (8 hashes, 2 bands) targets ~0.7
-    assert abs(lsh_design(8, 2)["threshold"] - 0.5**0.25) < 1e-12
-    with pytest.raises(ValueError):
-        lsh_design(10, 4)
-    with pytest.raises(ValueError):
-        p(1.5)
 
 
 def test_dedup_survivors_prefer_policy(spark):
