@@ -816,7 +816,10 @@ def _lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Banded-LSH candidate pairs over the planted corpus,
     checkpointed once per (session, sf_dir): q_minhash_lsh_pairs and
     q_ngram_jaccard share this exact pipeline (the md5 shingle hashing
-    is the whole cost), so one materialization serves both."""
+    is the whole cost), so one materialization serves both. Eager,
+    because the verify reads the candidates twice (its id list and its
+    join): lazily, two concurrent stages computed the same checkpoint
+    partition."""
     from seqtables_spark.pipeline.dedup import minhash_candidate_pairs
 
     return boundary(minhash_candidate_pairs(
@@ -824,7 +827,7 @@ def _lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_hashes=MINHASH_N,
         bands=LSH_BANDS,
         k=LSH_K,
-    ))
+    ), eager=True)
 
 
 def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -839,7 +842,9 @@ def _verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf_dir): the verified pair list feeds THREE queries
     (ngram_jaccard, dedup_clusters, dedup_survivors), and the verify
     re-shingles the candidate docs each time - one materialization
-    serves all."""
+    serves all. Eager, because connected_components reads the pairs
+    from concurrent stages: lazily, two of them computed the same
+    checkpoint partition."""
     from seqtables_spark.pipeline.dedup import ngram_jaccard_pairs
 
     return boundary(ngram_jaccard_pairs(
@@ -847,7 +852,7 @@ def _verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=12,
         min_jaccard=0.4,
         candidates=_lsh_candidates(spark, sf_dir),
-    ))
+    ), eager=True)
 
 
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -973,7 +978,7 @@ AUDIO_RT_SAMPLES = 192  # 3 windows of 64 (power-of-2: float32-exact means)
 
 def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal audio through the REAL container decode
-    (pipeline/multimodal.decode_audio_features(real_decode=True) ->
+    (pipeline/multimodal.decode_audio_features ->
     decode_wav): spec-conforming RIFF/WAVE PCM-8 fixtures are built at
     plan time (each doc's printable bytes, space-padded to exactly
     192 samples, under a canonical 44-byte header with rate=128), so
@@ -1034,7 +1039,7 @@ def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         path,
     )
     media = spark.read.parquet(path)
-    feats = decode_audio_features(media, real_decode=True, window_s=0.5)
+    feats = decode_audio_features(media, window_s=0.5)
     return feats.select(
         "media_id",
         "n_bytes",
@@ -4264,7 +4269,9 @@ _PLAN_CACHE_EXCLUDE = {
 _SAMPLE_HEAD = (
     # changed since the last attestation
     "cigar_insertions", "seq_dist", "ngram_jaccard", "dedup_clusters_star",
-    "cosine_topk", "ann_pq", "ann_ivf", "jsonl_roundtrip",
+    "cosine_topk", "ann_pq", "ann_ivf", "jsonl_roundtrip", "audio_features",
+    "multimodal_features", "video_frames", "minhash_lsh_pairs",
+    "dedup_clusters_auto",
     # the previous sample's head
     "session_overlap", "curate_funnel", "curate_llm", "token_freq_cms",
     "curate_full", "perplexity_scores", "streaming_events",
@@ -4273,11 +4280,10 @@ _SAMPLE_HEAD = (
     "partitioned_prune", "bucketed_join", "streaming_quality_gate",
     "kmv_users", "event_quantiles", "value_quantiles_sketch",
     "streaming_token_cms", "hamming", "mutation_profile", "ts_tv",
-    "hamming_norm", "compare_matches", "mutation_by_position",
-    "hamming_setdiff", "kmers_contiguous", "fastq_roundtrip", "sam_roundtrip",
+    "kmers_contiguous", "fastq_roundtrip", "sam_roundtrip",
     "bam_region", "bam_region_bai", "bam_region_csi", "bam_roundtrip",
     "bam_region_sharded", "quality_dist", "quality_dist_fastqc",
-    "contamination", "fuzzy_contamination", "curate_corpus", "corpus_stats",
+    "contamination", "fuzzy_contamination", "curate_corpus",
 )
 
 

@@ -140,14 +140,19 @@ def _accept_batch(
     return accepted
 
 
+# Merges accepted per distributed round: SCALING.md "Batched BPE
+# merges" (50k-word Zipf vocab, 64 merges) measured 24 driver rounds
+# instead of 64 and 17.2 s against 29.5-33.1 s at m=16; the average
+# accepted batch saturates at ~2.7, so a larger m buys nothing.
+_BATCH_MERGES = 16
+
+
 def train_bpe(
     df: DataFrame,
     num_merges: int = 8,
     text_col: str = "text",
     max_local_vocab: int | None = 1_000_000,
     fold_every: int = 16,
-    on_round=None,
-    batch_merges: int = 1,
 ) -> list[dict]:
     """Learn `num_merges` BPE merge rules from a corpus.
 
@@ -166,9 +171,7 @@ def train_bpe(
     algorithm with ties on pair count broken by (lhs, rhs) ascending
     — fully deterministic, oracle-replayable, and pinned equal to
     each other in tests. Pass max_local_vocab=None/0 to force the
-    distributed rounds. `on_round(rank, seconds)` (distributed path
-    only) reports per-round wall time — the measurement hook the
-    SCALING.md replace-chain sweep uses.
+    distributed rounds.
 
     `fold_every` (distributed rounds only): round r naively applies r
     accumulated literal replaces over the cached base relation —
@@ -181,9 +184,9 @@ def train_bpe(
     small-relation materialization per fold (measured at 20k-word
     vocab / 64 merges in SCALING.md "BPE replace-chain fold").
 
-    `batch_merges` (round 8, distributed rounds only): accept up to
-    m merges per Spark round instead of one, EXACTLY — the batch is
-    the maximal prefix of the count-sorted pair list such that
+    Batched rounds (distributed path): each Spark round accepts up to
+    _BATCH_MERGES merges instead of one, EXACTLY — the batch is the
+    maximal prefix of the count-sorted pair list such that
     (a) accepted pairs are pairwise token-disjoint (so applying one
         cannot change another's count: a merge never deletes or
         reorders unrelated cells, only fuses its own two), and
@@ -198,14 +201,11 @@ def train_bpe(
         existing pair (else its counts would coalesce with created
         occurrences and (b)'s bound no longer holds).
     The batch stops at the FIRST candidate failing any test
-    (contiguity — skipping would reorder ranks), so the resulting
-    merge table is bit-identical to batch_merges=1 (pinned in
-    tests). Each batch round costs 2 jobs (top-m collect + the
-    per-token bound aggregation) instead of 1, so the job count
-    drops whenever the average accepted batch exceeds 2 — Zipf-ish
-    real vocabularies interleave their hottest pairs through shared
-    tokens ('th' then 'he'), so measure before enabling
-    (tools/bpe_realistic_scaling.py reports rounds and wall).
+    (contiguity — skipping would reorder ranks), so the merge table
+    is bit-identical to one merge per round (_accept_batch, pinned
+    against the sequential reference in tests/test_bpe_properties.py).
+    A batch round costs 2 jobs (top-m collect + the per-token bound
+    aggregation) instead of 1.
     """
     base = word_vocab(df, text_col).withColumn(
         "cells", _char_cells(F.col("word"))
@@ -223,14 +223,9 @@ def train_bpe(
             return _train_local(local, num_merges)
     try:
         cells = F.col("cells")
-        import time as _time
-
         last_fold = 0
         while len(rules) < num_merges:
-            _t0 = _time.perf_counter()
-            want = min(
-                max(int(batch_merges or 1), 1), num_merges - len(rules)
-            )
+            want = min(_BATCH_MERGES, num_merges - len(rules))
             ts = F.split(F.btrim(F.col("cells"), F.lit("<>")), "><")
             pair_rel = (
                 vocab.select(
@@ -322,8 +317,6 @@ def train_bpe(
                 # and the plan lineage (iterative-loop rule)
                 vocab = vocab.localCheckpoint(eager=True)
                 last_fold = len(rules)
-            if on_round is not None:
-                on_round(len(rules), _time.perf_counter() - _t0)
     finally:
         # unpersist the BASE relation (the loop's vocab is a child
         # plan over it, so every round reused the cached scan)

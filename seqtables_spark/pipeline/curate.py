@@ -34,7 +34,6 @@ def curate_documents(
     drop_undetermined: bool = True,
     text_col: str = "text",
     id_col: str = "doc_id",
-    skew_immune: bool = False,
 ) -> DataFrame:
     """Curated corpus view: rows that pass the quality gate and the
     language check, minus exact duplicates (deterministic min-id
@@ -50,19 +49,10 @@ def curate_documents(
     the single digest shuffle the dedup needs anyway (2.7 s -> ~1.4 s
     at sf0.1). Same deterministic min-id-per-digest survivors.
 
-    SKEW LIMIT of the default: a window group cannot be split, so a
-    digest duplicated millions of times (boilerplate pages, empty-ish
-    templates) serializes ALL its copies through one task with no
-    map-side collapse. ``skew_immune=True`` is the dial for that
-    corpus shape: it derives keep = groupBy(digest).min(id) from the
-    cheaply re-gated input (partial_min collapses duplicates
-    map-side, so no reducer sees more than its share) and inner-joins
-    back on the COMPOUND key (digest, id) - unique per row, so even
-    the hottest digest spreads across reducers. Costs: the gate
-    regexes evaluate twice (two scans of the raw input; language
-    scoring still runs ONCE, only on the survivors' branch) and one
-    extra exchange of the per-digest keep relation. Same survivors,
-    value-identical (pinned in tests)."""
+    SKEW LIMIT: a window group cannot be split, so a digest duplicated
+    millions of times (boilerplate pages, empty-ish templates)
+    serializes ALL its copies through one task with no map-side
+    collapse."""
     from pyspark.sql import Window
 
     t = F.col(text_col)
@@ -74,26 +64,6 @@ def curate_documents(
         & (n_tokens <= max_tokens)
         & (alpha_ratio >= min_alpha_ratio)
     ).withColumn("n_tokens", n_tokens.cast("long"))
-    if skew_immune:
-        keep = (
-            gated.select(
-                F.md5(F.col(text_col)).alias("__digest__"),
-                F.col(id_col).alias("__keep_id__"),
-            )
-            .groupBy("__digest__")
-            .agg(F.min("__keep_id__").alias("__keep_id__"))
-        )
-        survivors = gated.join(
-            keep,
-            (F.md5(F.col(text_col)) == F.col("__digest__"))
-            & (F.col(id_col) == F.col("__keep_id__")),
-        ).drop("__digest__", "__keep_id__")
-        # language scoring runs once, on survivors only - strictly
-        # fewer rows than the window form scores
-        langed = language_id(survivors, text_col=text_col, id_col=id_col)
-        if drop_undetermined:
-            langed = langed.filter(F.col("pred_lang") != "und")
-        return langed
     # Score language BELOW the digest window, drop 'und' ABOVE it
     # (round 8). Identical text implies identical pred_lang, so the
     # survivors are order-independent — but the FILTER PLACEMENT is

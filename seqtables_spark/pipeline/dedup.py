@@ -930,17 +930,8 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     candidates: DataFrame | None = None,
     max_doc_freq: int | None = 256,
-    with_containment: bool = False,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity for candidate pairs.
-
-    ``with_containment=True`` (candidates path only) adds
-    `containment_a` = |A∩B|/|A| and `containment_b` = |A∩B|/|B| -
-    the asymmetric scores that catch a document EMBEDDED in another
-    (quote-expansion, boilerplate wrapping), which symmetric Jaccard
-    under-scores: a 100-gram doc fully contained in a 10000-gram doc
-    has J≈0.01 but containment_a = 1.0. Rows pass the filter when
-    jaccard OR either containment clears `min_jaccard`.
 
     Without `candidates`: inverted-index join - docs sharing an n-gram
     meet in that n-gram's posting list; |intersection| falls out of a
@@ -1000,14 +991,6 @@ def ngram_jaccard_pairs(
             F.col("n_common")
             / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
         ).alias("jaccard")
-        if with_containment:
-            ca = (F.col("n_common") / F.col("n_a")).alias("containment_a")
-            cb = (F.col("n_common") / F.col("n_b")).alias("containment_b")
-            return inter.select("id_a", "id_b", jac, ca, cb).filter(
-                (F.col("jaccard") >= min_jaccard)
-                | (F.col("containment_a") >= min_jaccard)
-                | (F.col("containment_b") >= min_jaccard)
-            )
         return inter.select(
             "id_a",
             "id_b",
@@ -1216,8 +1199,8 @@ def duplicate_spans(
     still chosen because it halves the span-generation work (the
     dominant cost) and the hot-span ceiling is bounded by docs
     containing the SAME 15-token string - if your corpus has that,
-    run curate_documents(skew_immune=True)-style exact dedup first;
-    the boilerplate collapses to one doc before spans are sampled.
+    run exact_dedup (a groupBy, which collapses map-side) first; the
+    boilerplate collapses to one doc before spans are sampled.
     """
     toks = F.regexp_extract_all(F.col(text_col), F.lit(r"\S+"), 0)
     n = F.size(toks)

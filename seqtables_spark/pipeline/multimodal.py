@@ -2,10 +2,10 @@
 columns with typed metadata.
 
 The Spark-side plumbing (schemas, Arrow-batched mapInPandas decode
-operators, partition sizing) is REAL and tested; the pixel/sample
-decode itself is STUBBED deterministically because media codecs are
-not in this container - swap `_fake_decode_image` for PIL/ffmpeg in
-production, the operator shape is unchanged.
+operators, partition sizing) is REAL and tested. Audio (RIFF/WAVE PCM)
+and video (RAWV) decode for real; image feature extraction is a
+deterministic sha256-derived stand-in - swap it for a codec + model
+call in production, the operator shape is unchanged.
 
 Design for 100 TB of media: binary payloads stay in parquet (or are
 pointed to via (uri, offset, length) for >2 GB objects); decode runs
@@ -24,60 +24,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
-MEDIA_SCHEMA = (
-    "media_id long, payload binary, media_type string, "
-    "width int, height int, n_frames int, sample_rate int"
-)
-
 IMAGE_FEATURES_SCHEMA = "media_id long, n_bytes long, sha256 string, features array<float>"
-
-
-def attach_media_metadata(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Typed metadata columns every media table carries: byte length
-    and content digest - pure built-ins, no decode needed."""
-    return df.withColumn("n_bytes", F.length(F.col(payload_col)).cast("long")).withColumn(
-        "sha256", F.sha2(F.col(payload_col), 256)
-    )
-
-
-def _fake_decode_image(payload: bytes, n_features: int = 8) -> list[float]:
-    """Deterministic stand-in for image decode + feature extraction.
-
-    Real implementation: PIL.Image.open -> resize -> model embed.
-    The fake derives `n_features` floats from the sha256 digest so
-    tests are stable and the batch shape matches production.
-    """
-    digest = hashlib.sha256(payload).digest()
-    out = []
-    for i in range(n_features):
-        (v,) = struct.unpack(">I", digest[4 * i : 4 * i + 4])
-        out.append((v % 10_000) / 10_000.0)
-    return out
-
-
-MEDIA_MAGIC = {
-    b"\x89PNG\r\n\x1a\n": "png",
-    b"\xff\xd8\xff": "jpeg",
-    b"GIF8": "gif",
-    b"P6": "ppm",
-    b"P5": "pgm",
-    b"RIFF": "riff",  # wav/avi/webp container; bytes 8-11 disambiguate
-    b"fLaC": "flac",
-    b"OggS": "ogg",
-}
-
-
-def detect_media_type(payload_col: str = "payload"):
-    """Column expr: media type from MAGIC BYTES (no decode, pure
-    built-ins) - the first triage step over an opaque binary column
-    at corpus scale. Unknown signatures -> 'unknown'."""
-    c = F.col(payload_col)
-    expr = F.lit("unknown")
-    for magic, name in reversed(list(MEDIA_MAGIC.items())):
-        expr = F.when(
-            F.substring(c, 1, len(magic)) == F.lit(magic), F.lit(name)
-        ).otherwise(expr)
-    return expr
 
 
 def decode_ppm(payload: bytes) -> "tuple":
@@ -119,77 +66,18 @@ def decode_ppm(payload: bytes) -> "tuple":
     return w, h, ch, raw.reshape(h, w, ch).astype(np.float32) / float(maxval)
 
 
-def _pil_decode(payload: bytes) -> "tuple | None":
-    """Compressed-codec splice point: decode PNG/JPEG/GIF/... via PIL
-    when it is installed (guarded import - the engine container does
-    not ship it; production clusters do). Returns the same
-    (w, h, ch, float32 [0,1] pixel matrix) shape as decode_ppm, or
-    None when PIL is absent or cannot parse the payload."""
-    try:
-        import io
-
-        from PIL import Image  # optional dependency
-    except ImportError:
-        return None
-    import numpy as np
-
-    try:
-        with Image.open(io.BytesIO(payload)) as im:
-            im = im.convert("RGB")
-            px = np.asarray(im, np.float32) / 255.0
-    except Exception:
-        return None
-    h, w = px.shape[:2]
-    return w, h, 3, px
-
-
-def _real_image_features(payload: bytes) -> "list | None":
-    """8 real features for decodable payloads (PPM/PGM natively; any
-    PIL-supported format when PIL is installed): width/1e4,
-    height/1e4, aspect, per-channel means (gray replicated), gray
-    std, fill=0. None when the format needs an absent codec."""
-    import numpy as np
-
-    payload = bytes(payload)
-    try:
-        w, h, ch, px = decode_ppm(payload)
-    except ValueError:
-        decoded = _pil_decode(payload)
-        if decoded is None:
-            return None
-        w, h, ch, px = decoded
-    means = px.mean(axis=(0, 1))
-    if ch == 1:
-        means = np.repeat(means, 3)
-    gray = px.mean(axis=2)
-    return [
-        w / 10_000.0,
-        h / 10_000.0,
-        w / float(h),
-        float(means[0]),
-        float(means[1]),
-        float(means[2]),
-        float(gray.std()),
-        0.0,
-    ]
-
-
 def decode_image_features(
     df: DataFrame,
     payload_col: str = "payload",
     id_col: str = "media_id",
     n_features: int = 8,
-    real_decode: bool = False,
 ) -> DataFrame:
     """mapInPandas decode operator: binary -> feature vector.
 
     Arrow moves each batch of blobs to python once; the UDF is the
-    only python in the pipeline. real_decode=True REALLY decodes the
-    formats that need no codec library (binary PPM/PGM, via
-    decode_ppm) and raises NotImplementedError for compressed formats
-    (PNG/JPEG need PIL - plug it into _real_image_features, nothing
-    else changes). The default keeps the deterministic sha256-derived
-    stand-in for every payload, which is what the value oracle pins."""
+    only python in the pipeline. The features are a deterministic
+    sha256-derived stand-in for every payload, which is what the value
+    oracle pins."""
     if n_features > 8:
         # the sha256-derived stand-in has exactly 8 four-byte words;
         # fail at call time, not as a struct.error inside every task
@@ -207,28 +95,14 @@ def decode_image_features(
             blobs = [bytes(p) for p in pdf[payload_col]]
             n = len(blobs)
             digests = b"".join(hashlib.sha256(b).digest() for b in blobs)
-            if real_decode:
-                feats = []
-                for b in blobs:
-                    f8 = _real_image_features(b)
-                    if f8 is None:
-                        raise NotImplementedError(
-                            "compressed image codecs (PNG/JPEG) need PIL, "
-                            "which is not installed here - with pillow on "
-                            "the executors _real_image_features decodes "
-                            "them automatically; PPM/PGM decode natively"
-                        )
-                    feats.append(f8)
-                feats_mat = np.asarray(feats, np.float32)
-            else:
-                # ---- SPLICE POINT for a real codec -----------------
-                # digest reuse = decode stand-in; production replaces
-                # it with a batched codec/model call ((n,H,W,C) stack
-                # -> batched embed). Everything around it stays.
-                dg = np.frombuffer(digests, dtype=">u4").reshape(n, 8)
-                feats_mat = ((dg[:, :n_features] % 10_000) / 10_000.0).astype(
-                    np.float32
-                )
+            # ---- SPLICE POINT for a real codec -----------------
+            # digest reuse = decode stand-in; production replaces it
+            # with a batched codec/model call ((n,H,W,C) stack ->
+            # batched embed). Everything around it stays.
+            dg = np.frombuffer(digests, dtype=">u4").reshape(n, 8)
+            feats_mat = ((dg[:, :n_features] % 10_000) / 10_000.0).astype(
+                np.float32
+            )
             hex_all = binascii.hexlify(digests).decode("ascii")
             yield pd.DataFrame(
                 {
@@ -296,12 +170,12 @@ def decode_wav(payload: bytes) -> "tuple":
 
 
 def _soundfile_decode(payload: bytes) -> "tuple | None":
-    """Compressed-audio splice point, the audio twin of _pil_decode:
-    decode FLAC/OGG/... via the soundfile library when it is
-    installed (guarded import - the engine container does not ship
-    it; production clusters do). Returns the same (sample_rate, mono
-    float32 samples in [-1, 1]) shape as decode_wav, or None when
-    soundfile is absent or cannot parse the payload."""
+    """Compressed-audio splice point: decode FLAC/OGG/... via the
+    soundfile library when it is installed (guarded import - the
+    engine container does not ship it; production clusters do).
+    Returns the same (sample_rate, mono float32 samples in [-1, 1])
+    shape as decode_wav, or None when soundfile is absent or cannot
+    parse the payload."""
     try:
         import io
 
@@ -324,110 +198,55 @@ def decode_audio_features(
     df: DataFrame,
     payload_col: str = "payload",
     id_col: str = "media_id",
-    sample_rate: int = 16_000,
     window_s: float = 1.0,
-    real_decode: bool = False,
 ) -> DataFrame:
     """mapInPandas audio decode operator: binary -> per-window energy
     features + duration (the audio twin of decode_image_features).
 
-    Default path: the decode is STUBBED deterministically — payload
-    bytes stand in for PCM samples (1 byte = 1 sample at the given
-    sample_rate), window energy = mean |byte| per window normalized
-    to [0,1] — which is what the value oracle pins. real_decode=True
-    REALLY decodes the container that needs no codec library
-    (RIFF/WAVE PCM 8/16-bit via decode_wav, honoring each file's OWN
-    sample rate and down-mixing channels); compressed audio
-    (flac/ogg/...) goes through the _soundfile_decode splice when the
-    optional soundfile library is installed - the audio twin of the
-    image path's _pil_decode - and raises NotImplementedError
-    otherwise. The window fold is identical for all three sources."""
-    win = max(1, int(sample_rate * window_s))
+    RIFF/WAVE PCM 8/16-bit decodes natively via decode_wav, honoring
+    each file's OWN sample rate and down-mixing channels; compressed
+    audio (flac/ogg/...) goes through the _soundfile_decode splice when
+    the optional soundfile library is installed and raises
+    NotImplementedError otherwise. Window energy = mean |sample| per
+    `window_s` window; an empty stream yields one zero window."""
 
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
         for pdf in batches:
-            blobs = [bytes(p) for p in pdf[payload_col]]
-            n = len(blobs)
-            lens = np.fromiter((len(b) for b in blobs), np.int64, n)
-            if real_decode:
-                n_bytes, durs, n_wins, energies = [], [], [], []
-                for b in blobs:
-                    try:
-                        rate, x = decode_wav(b)
-                    except ValueError as exc:
-                        decoded = _soundfile_decode(b)
-                        if decoded is None:
-                            raise NotImplementedError(
-                                "compressed audio codecs need the optional "
-                                "soundfile library (absent or could not "
-                                "parse this payload); PCM WAV decodes "
-                                f"natively ({exc})"
-                            ) from exc
-                        rate, x = decoded
-                    w = max(1, int(rate * window_s))
-                    n_bytes.append(len(b))
-                    durs.append(x.size / float(rate))
-                    if x.size == 0:
-                        n_wins.append(1)
-                        energies.append(np.zeros(1, np.float32))
-                        continue
-                    starts = np.arange(0, x.size, w)
-                    sums = np.add.reduceat(np.abs(x), starts)
-                    wl = np.minimum(x.size - starts, w)
-                    n_wins.append(starts.size)
-                    energies.append((sums / wl).astype(np.float32))
-                yield pd.DataFrame(
-                    {
-                        "media_id": pdf[id_col].astype("int64"),
-                        "n_bytes": pd.Series(n_bytes, dtype="int64"),
-                        "duration_s": pd.Series(durs, dtype="float64"),
-                        "n_windows": pd.Series(n_wins, dtype="int32"),
-                        "window_energy": energies,
-                    }
-                )
-                continue
-            # ---- SPLICE POINT for a real codec ---------------------
-            # bytes-as-PCM is the decode stand-in; a production build
-            # replaces this concat with soundfile/ffmpeg decoding each
-            # blob into one concatenated float PCM buffer. The window
-            # fold below is already batch array ops and is exactly
-            # what real PCM would flow through.
-            samples = np.frombuffer(b"".join(blobs), np.uint8)
-            # --------------------------------------------------------
-            # per-row window starts, all rows at once: reduceat over
-            # the concatenated buffer (rows are adjacent, so each
-            # row's last window ends where the next row starts)
-            n_wins = np.maximum((lens + win - 1) // win, 1).astype(np.int64)
-            row_off = np.zeros(n + 1, np.int64)
-            np.cumsum(lens, out=row_off[1:])
-            nonempty = lens > 0
-            starts_per_row = [
-                np.arange(row_off[i], row_off[i + 1], win)
-                for i in np.flatnonzero(nonempty)
-            ]
-            energies: list = [[0.0] for _ in range(n)]
-            if starts_per_row:
-                starts = np.concatenate(starts_per_row)
-                sums = np.add.reduceat(samples.astype(np.int64), starts)
-                # window lengths: win except each row's last remainder
-                wlens = np.minimum(
-                    np.repeat(row_off[1:][nonempty], n_wins[nonempty]) - starts,
-                    win,
-                )
-                flat_e = sums / (255.0 * wlens)
-                k = 0
-                for i in np.flatnonzero(nonempty):
-                    m = int(n_wins[i])
-                    energies[i] = flat_e[k : k + m].astype(np.float32)
-                    k += m
+            n_bytes, durs, n_wins, energies = [], [], [], []
+            for p in pdf[payload_col]:
+                b = bytes(p)
+                try:
+                    rate, x = decode_wav(b)
+                except ValueError as exc:
+                    decoded = _soundfile_decode(b)
+                    if decoded is None:
+                        raise NotImplementedError(
+                            "compressed audio codecs need the optional "
+                            "soundfile library (absent or could not "
+                            "parse this payload); PCM WAV decodes "
+                            f"natively ({exc})"
+                        ) from exc
+                    rate, x = decoded
+                w = max(1, int(rate * window_s))
+                n_bytes.append(len(b))
+                durs.append(x.size / float(rate))
+                if x.size == 0:
+                    n_wins.append(1)
+                    energies.append(np.zeros(1, np.float32))
+                    continue
+                starts = np.arange(0, x.size, w)
+                sums = np.add.reduceat(np.abs(x), starts)
+                wl = np.minimum(x.size - starts, w)
+                n_wins.append(starts.size)
+                energies.append((sums / wl).astype(np.float32))
             yield pd.DataFrame(
                 {
                     "media_id": pdf[id_col].astype("int64"),
-                    "n_bytes": lens,
-                    "duration_s": lens / float(sample_rate),
-                    "n_windows": n_wins.astype(np.int32),
+                    "n_bytes": pd.Series(n_bytes, dtype="int64"),
+                    "duration_s": pd.Series(durs, dtype="float64"),
+                    "n_windows": pd.Series(n_wins, dtype="int32"),
                     "window_energy": energies,
                 }
             )
@@ -462,8 +281,7 @@ def frame_sample_plan(
 # the image (PPM) and audio (WAV) halves, one container decodes with
 # no codec library — RAWV, a trivial uncompressed grayscale container
 # (header + n_frames*(w*h) bytes) — so the full blob->frames->features
-# path is real and value-tested; compressed video splices in via the
-# optional imageio/av guard exactly like _pil_decode/_soundfile_decode.
+# path is real and value-tested.
 # ---------------------------------------------------------------------
 
 RAWV_MAGIC = b"RAWV"
@@ -515,45 +333,6 @@ def decode_rawv(payload: bytes) -> "tuple":
     return w, h, n, fps, raw[:need].reshape(n, h, w)
 
 
-def _codec_video_frames(payload: bytes) -> "tuple | None":
-    """Compressed-codec splice point, the video twin of _pil_decode /
-    _soundfile_decode: decode mp4/webm/... into grayscale frames via
-    the optional imageio(+ffmpeg) or av libraries when installed
-    (neither ships in the engine container; production clusters add
-    one). Returns (w, h, n_frames, fps, frames (n,h,w) uint8) or None
-    when no codec library is present or the payload cannot be parsed."""
-    import io
-
-    try:
-        import numpy as np
-
-        try:
-            import av  # type: ignore
-
-            with av.open(io.BytesIO(payload)) as container:
-                stream = container.streams.video[0]
-                fps = int(float(stream.average_rate or 30))
-                frames = [
-                    np.asarray(f.to_ndarray(format="gray"), np.uint8)
-                    for f in container.decode(stream)
-                ]
-        except ImportError:
-            import imageio.v3 as iio  # type: ignore
-
-            arr = iio.imread(io.BytesIO(payload), index=None)
-            if arr.ndim == 4:  # (n, h, w, c) -> luma
-                arr = arr.mean(axis=3)
-            frames = [np.asarray(f, np.uint8) for f in arr]
-            fps = 30
-        if not frames:
-            return None
-        stack = np.stack(frames)
-        n, h, w = stack.shape
-        return w, h, n, fps, stack
-    except Exception:
-        return None
-
-
 def video_frame_features(
     df: DataFrame,
     payload_col: str = "payload",
@@ -561,22 +340,19 @@ def video_frame_features(
     every_n: int = 30,
     width_col: str | None = None,
     height_col: str | None = None,
-    real_decode: bool = False,
 ) -> DataFrame:
     """mapInPandas video decode operator: binary -> one row per
     SAMPLED frame (every `every_n`-th) with mean intensity and a
     motion score (mean |frame - previous sampled frame|, 0 for the
     first), both normalized to [0,1].
 
-    Three payload sources, mirroring the image/audio operators:
+    Two payload sources:
 
     - metadata-typed raw frames (`width_col`/`height_col` given): the
       blob is n_frames*(w*h) grayscale bytes, n_frames = len // (w*h)
       — the "opaque binary + typed metadata" shape the pipeline brief
       mandates, and what the value oracle pins;
-    - RAWV container (self-describing header) — decode_rawv;
-    - real_decode=True: compressed video through _codec_video_frames,
-      raising NotImplementedError when no codec library is installed.
+    - RAWV container (self-describing header) — decode_rawv.
 
     Scale shape: one task holds one Arrow batch of blobs; per row the
     sampled frames form one (k, w*h) matrix so intensity/motion are
@@ -616,21 +392,10 @@ def video_frame_features(
                     arr = np.frombuffer(
                         payload, np.uint8, count=n * w * h
                     ).reshape(n, h, w)
-                elif real_decode:
-                    decoded = _codec_video_frames(payload)
-                    if decoded is None:
-                        raise NotImplementedError(
-                            "compressed video codecs need the optional "
-                            "imageio/av libraries (absent or could not "
-                            "parse this payload); RAWV and raw+metadata "
-                            "payloads decode natively"
-                        )
-                    w, h, n, _fps, arr = decoded
                 else:
                     raise ValueError(
                         "payload is not RAWV and no width_col/height_col "
-                        "metadata was given (pass real_decode=True for "
-                        "compressed containers)"
+                        "metadata was given"
                     )
                 if n < 1:
                     continue

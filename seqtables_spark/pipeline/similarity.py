@@ -726,12 +726,6 @@ def save_ivf_index(assigned: DataFrame, path: str, mode: str = "overwrite") -> N
     )
 
 
-def load_ivf_cells(spark, path: str, probes: list[int]) -> DataFrame:
-    """Read only the probed IVF cells: the `_c` filter lands in the
-    scan's PartitionFilters, so non-probed cells are never opened."""
-    return spark.read.parquet(path).filter(F.col("_c").isin(probes))
-
-
 def semantic_dedup(
     assigned: DataFrame,
     tau: float = 0.2,

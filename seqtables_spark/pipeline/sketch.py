@@ -85,28 +85,6 @@ def kmv_sketch(
     return _kmv_top_k(hashes, k, gb)
 
 
-# back-compat alias: the ranked formulation IS the default now
-kmv_sketch_ranked = kmv_sketch
-
-
-def kmv_sketch_collect(
-    df: DataFrame,
-    col: str,
-    k: int = 64,
-    group_by: Sequence[str] = (),
-) -> DataFrame:
-    """Small-cardinality variant: one agg, no window sort - but the
-    collect_set buffer holds ALL distinct hashes of a group before
-    slicing to k, so use ONLY when per-group distinct counts are known
-    to be modest (e.g. already-sketched shards). Same output."""
-    gb = list(group_by)
-    h = portable_string_hash(F.col(col).cast("string"))
-    hashes = df.select(*gb, h.alias("__h__")).dropDuplicates([*gb, "__h__"])
-    return hashes.groupBy(*gb).agg(
-        F.slice(F.array_sort(F.collect_set("__h__")), 1, int(k)).alias("kmv")
-    )
-
-
 def kmv_merge(sketches: DataFrame, k: int, group_by: Sequence[str] = ()) -> DataFrame:
     """Merge KMV sketches (column `kmv`) across rows into one sketch
     per `group_by` (global when empty) WITHOUT revisiting raw data:

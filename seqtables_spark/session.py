@@ -78,10 +78,16 @@ def boundary(df: DataFrame, eager: bool = False) -> DataFrame:
     the ContextCleaner reclaims its blocks when that DataFrame is
     garbage-collected.
 
-    Why lazy by default: ``eager=False`` runs no job here, so plan
-    build stays action-free and the first action of the consumer
-    materializes the relation on its own clock. Sites that must
-    materialize before a driver-side decision pass ``eager=True``.
+    What lazy defers: ``eager=False`` defers only the relation's final
+    stage. Under AQE, ``localCheckpoint`` builds the relation's RDD at
+    the call, and that runs every shuffle stage below the final one
+    there; a relation without a shuffle runs no job. The final stage
+    runs in whichever consumer stage reads it first, so two stages
+    that read one lazy boundary at once can each compute the same
+    partition (Spark logs ``Block rdd_<n>_<p> already exists``). Pass
+    ``eager=True`` for a memoized fixture whose consumers read it
+    that way, and for sites that must materialize before a
+    driver-side decision.
 
     The trade-off: a checkpoint lives in executor-local storage with
     its lineage cut, so losing an executor (or a dynamic-allocation

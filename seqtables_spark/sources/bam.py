@@ -619,10 +619,10 @@ def bam_region_manifest(
 ) -> DataFrame:
     """Build the region-chunk manifest for BAM file(s): one indexing
     task per file emits (path, comp_off, uoff, n_records, rname,
-    min_pos, max_end) — the relational .bai analog. Build it ONCE at
-    write/land time and persist as parquet (partitionBy('rname') for
-    partition-pruned probes); every later region fetch is then a
-    manifest filter + targeted chunk decode with no indexing pass."""
+    min_pos, max_end) — the relational .bai analog. read_bam_region
+    builds it inline; it persists as parquet (partitionBy('rname') for
+    partition-pruned probes). For a fetch with no indexing pass, write
+    a .bai/.csi and use read_bam_region_bai / read_bam_region_csi."""
     files = spark.read.format("binaryFile").load(path).select("path")
     return _index_files(
         files, index_bam_region_chunks, records_per_chunk,
@@ -658,7 +658,6 @@ def read_bam_region(
     start: int,
     end: int,
     records_per_chunk: int = 4096,
-    manifest: DataFrame | str | None = None,
     min_mapping_quality: int | None = None,
 ) -> DataFrame:
     """Indexed region fetch — pysam ``fetch(contig, start, end)``
@@ -675,19 +674,11 @@ def read_bam_region(
     window touches. On a coordinate-sorted BAM — the shape every
     indexed BAM has — chunk bounds are tight and disjoint, so the
     pruning ratio is window/file. The exact per-read overlap
-    predicate then trims chunk-boundary stragglers.
-
-    `manifest`: pass the persisted manifest (DataFrame or parquet
-    path) from bam_region_manifest to skip the indexing pass
-    entirely; default builds it inline (one light pass per file)."""
-    if manifest is None:
-        chunks = bam_region_manifest(spark, path, records_per_chunk)
-    elif isinstance(manifest, str):
-        chunks = spark.read.parquet(manifest)
-    else:
-        chunks = manifest
-
+    predicate then trims chunk-boundary stragglers. The manifest is
+    built inline (one light pass per file)."""
     from pyspark.sql import functions as F
+
+    chunks = bam_region_manifest(spark, path, records_per_chunk)
 
     hit = (
         (F.col("rname") == contig)
@@ -1163,7 +1154,6 @@ def _sharded_region_plan(
     contig: str,
     start: int,
     end: int,
-    index: str | None = None,
 ) -> tuple[list[tuple[str, int, int]], list[str], dict]:
     """Pure (no-Spark) planning half of read_bam_region_sharded:
     manifest -> (fetch triples, refs, stats). Two-level pruning:
@@ -1177,7 +1167,8 @@ def _sharded_region_plan(
     2. INDEX prune: each surviving shard's own .bai/.csi yields its
        candidate virtual-offset ranges (bai_candidate_ranges /
        csi_candidate_ranges); a shard whose index has no candidates
-       contributes nothing.
+       contributes nothing. The index is the manifest's `index` entry
+       when that file exists, else the first sibling .bai/.csi.
 
     The returned triples are the ONLY byte ranges the fetch stage
     will open - the task-level "untouched shards are never read" pin
@@ -1218,32 +1209,13 @@ def _sharded_region_plan(
     scanned = 0
     for e in survivors:
         shard = os.path.join(base_dir, e["path"])
-        idx_kind = index
-        idx_path = None
+        idx_kind = idx_path = None
         if "index" in e:
-            man_kind = e["index"].rsplit(".", 1)[-1]
-            if index is not None and man_kind != index:
-                # the caller asked for a specific index kind but the
-                # manifest points at the other: prefer a sibling file
-                # of the requested kind; never parse CSI bytes with
-                # the BAI parser (or vice versa)
-                cand = shard + "." + index
-                if os.path.exists(cand):
-                    idx_path = cand
-                else:
-                    raise FileNotFoundError(
-                        f"index={index!r} requested but shard "
-                        f"{shard!r} only has a {man_kind!r} index "
-                        f"({e['index']!r}); pass index={man_kind!r} "
-                        "or index=None to use it"
-                    )
-            else:
-                cand = os.path.join(base_dir, e["index"])
-                if os.path.exists(cand):
-                    idx_path = cand
-                    idx_kind = man_kind
+            cand = os.path.join(base_dir, e["index"])
+            if os.path.exists(cand):
+                idx_path, idx_kind = cand, e["index"].rsplit(".", 1)[-1]
         if idx_path is None:
-            for kind in ([index] if index else _index_kinds()):
+            for kind in _index_kinds():
                 cand = shard + "." + kind
                 if os.path.exists(cand):
                     idx_path, idx_kind = cand, kind
@@ -1272,7 +1244,6 @@ def read_bam_region_sharded(
     contig: str,
     start: int,
     end: int,
-    index: str | None = None,
 ) -> DataFrame:
     """Region fetch over a SHARDED write_bam output directory (the
     scale path's answer to pysam fetch, reference from_pysam at
@@ -1284,9 +1255,7 @@ def read_bam_region_sharded(
     files. Same result contract as read_bam_region /
     read_bam_region_bai / read_bam_region_csi on the assembled
     equivalent (pinned in tests/test_round11_ops.py)."""
-    triples, refs, _ = _sharded_region_plan(
-        path, contig, int(start), int(end), index
-    )
+    triples, refs, _ = _sharded_region_plan(path, contig, int(start), int(end))
     return fetch_voffset_triples(
         spark, triples, refs, contig, int(start), int(end)
     )

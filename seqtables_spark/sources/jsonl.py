@@ -35,26 +35,19 @@ def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     df.select(line.alias("value")).write.mode(mode).text(path)
 
 
-def read_jsonl(
-    spark: SparkSession,
-    path: str,
-    schema,
-    keep_corrupt: bool = True,
-) -> DataFrame:
+def read_jsonl(spark: SparkSession, path: str, schema) -> DataFrame:
     """Schema-pinned JSONL reader (see module docstring for why the
-    schema is mandatory). keep_corrupt=True (default) appends a
-    `_corrupt_record` string column: NULL for clean rows, the raw
-    line for malformed ones — PERMISSIVE quarantine semantics.
-    keep_corrupt=False drops malformed lines outright (DROPMALFORMED)
-    for pipelines that have already counted them."""
+    schema is mandatory). Appends a `_corrupt_record` string column:
+    NULL for clean rows, the raw line for malformed ones — PERMISSIVE
+    quarantine semantics."""
     if schema is None:
         raise ValueError(
             "read_jsonl requires an explicit schema: schema inference "
             "is a full extra pass over the data"
         )
-    if isinstance(schema, str) and keep_corrupt:
+    if isinstance(schema, str):
         schema = f"{schema}, {CORRUPT_COL} string"
-    elif keep_corrupt:  # StructType
+    else:  # StructType
         from pyspark.sql.types import StringType, StructField, StructType
 
         # Build a NEW StructType: StructType.add mutates self, so using it
@@ -63,13 +56,12 @@ def read_jsonl(
         schema = StructType(
             list(schema.fields) + [StructField(CORRUPT_COL, StringType())]
         )
-    reader = (
+    return (
         spark.read.schema(schema)
-        .option("mode", "PERMISSIVE" if keep_corrupt else "DROPMALFORMED")
+        .option("mode", "PERMISSIVE")
+        .option("columnNameOfCorruptRecord", CORRUPT_COL)
+        .json(path)
     )
-    if keep_corrupt:
-        reader = reader.option("columnNameOfCorruptRecord", CORRUPT_COL)
-    return reader.json(path)
 
 
 def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -85,7 +77,7 @@ def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     file select the column AFTER materializing to their sink."""
     if CORRUPT_COL not in df.columns:
         raise ValueError(
-            f"no {CORRUPT_COL} column - read with keep_corrupt=True"
+            f"no {CORRUPT_COL} column - read it with read_jsonl"
         )
     clean = df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
     bad = df.filter(F.col(CORRUPT_COL).isNotNull())

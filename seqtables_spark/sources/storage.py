@@ -1,18 +1,13 @@
-"""Parquet storage layout helpers: partitioning + bucketing.
+"""Parquet storage layout helpers: bucketing.
 
 The reference is in-memory only; at 100 TB the storage layout IS the
-query plan. Two levers:
-
-  - partitionBy(ref / position-range): partition pruning turns
-    per-amplicon or position-window queries into file skips
-    (reference hand-codes this as min_pos/max_pos slicing inside its
-    Cython kernel, sam_to_arr.pyx:114-143 - here the filter prunes
-    whole files before a byte is read).
-  - bucketBy(read_id): co-locates every table sharing the key, so
-    reads-insertions joins, cells self-joins, and groupBy(read_id)
-    aggregations run with NO exchange - the sort-merge join reads
-    bucket i of both sides on the same executor. This is the batch
-    analog of co-partitioned state in a streaming job.
+query plan. bucketBy(read_id) co-locates every table sharing the key,
+so reads-insertions joins, cells self-joins, and groupBy(read_id)
+aggregations run with NO exchange - the sort-merge join reads bucket
+i of both sides on the same executor. This is the batch analog of
+co-partitioned state in a streaming job. (Partition-pruned layouts
+live with the index that owns them: similarity.save_ivf_index and
+dedup.save_minhash_index.)
 
 Bucketed tables must go through the session catalog (saveAsTable) -
 plain parquet paths carry no bucket metadata.
@@ -20,26 +15,7 @@ plain parquet paths carry no bucket metadata.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-
-
-def position_band(position_col: str = "position", band_width: int = 100) -> str:
-    """Partition expression: fixed-width position bands. SQL string so
-    it can be used in partitionBy via a generated column."""
-    return f"CAST(floor({position_col} / {band_width}) AS INT)"
-
-
-def write_cells_banded(
-    cells: DataFrame,
-    path: str,
-    band_width: int = 100,
-) -> None:
-    """Cells partitioned by position band: per-position aggregations
-    over a window [a, b] prune to ceil((b-a)/band_width)+1 dirs."""
-    banded = cells.withColumn(
-        "pos_band", F.expr(position_band("position", band_width))
-    )
-    banded.write.mode("overwrite").partitionBy("pos_band").parquet(path)
+from pyspark.sql import DataFrame, SparkSession
 
 
 def save_bucketed(

@@ -3,63 +3,18 @@ pattern (from_sam/from_pysam yielding one SeqTable per chunk,
 /root/reference/seqtables/core/seqtables.py:214-283) re-expressed as
 a file-source stream + foreachBatch.
 
-The domain has no event time (SURVEY 2.8), so the sequence
-aggregations stream without watermarks: per-position letter counts
-are a classic incremental groupBy whose state is |positions| x
-|alphabet| rows. For event-shaped data (the events table) the module
-also provides the standard late-data machinery - watermarked
-event-time windows - and a custom stateful operator
-(applyInPandasWithState) for the one aggregation Spark's built-ins
-cannot maintain incrementally in update mode: running consensus
-(argmax is not an algebraic aggregate).
+For event-shaped data (the events table) the module provides the
+standard late-data machinery - watermarked event-time windows and
+sessions - plus streaming exact and near-duplicate detection over a
+document stream.
 """
 
 from __future__ import annotations
 
-import json
 from collections.abc import Sequence
-from typing import Iterator
 
-import pandas as pd
-
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-from ..model import explode_chars
-
-
-def stream_reads(
-    spark: SparkSession,
-    path: str,
-    schema: str = "read_id string, seq string, qual string, pos_start long",
-    max_files_per_trigger: int = 10,
-) -> DataFrame:
-    """Incrementally ingest parquet read batches dropped into `path`
-    (the streaming analog of the chunked SAM reader)."""
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(path)
-    )
-
-
-def streaming_seq_dist(
-    reads_stream: DataFrame,
-    query_name: str = "seq_dist_stream",
-) -> StreamingQuery:
-    """Continuously maintained per-position letter counts over the
-    read stream, exposed as an in-memory table `query_name` (complete
-    mode: the aggregate is tiny). Tests drive it synchronously with
-    processAllAvailable()."""
-    cells = explode_chars(reads_stream)
-    dist = cells.groupBy("position", "base").agg(F.count(F.lit(1)).alias("cnt"))
-    return (
-        dist.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
 
 
 def stream_to_parquet(
@@ -350,72 +305,3 @@ def streaming_near_dup_with_index(
     if available_now:  # drain-everything-then-stop (backfills, tests)
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-CONSENSUS_OUTPUT_SCHEMA = (
-    "ref string, position int, consensus_base string, n_reads long"
-)
-CONSENSUS_STATE_SCHEMA = "counts_json string"
-
-
-def _consensus_update_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Stateful kernel: state = {'pos:base': count}; each micro-batch
-    folds its cells in and re-emits the per-position argmax (ties to
-    the smallest letter - the reference's first-argmax, consensus
-    semantics of seqtables.py:1534-1536)."""
-    (ref,) = key
-    counts: dict[str, int] = (
-        json.loads(state.get[0]) if state.exists else {}
-    )
-    for pdf in pdfs:
-        # reference coordinates: position = pos_start + offset, the
-        # same frame explode_chars (model.py) uses batch-side - reads
-        # mapping at different offsets must stack on the REF axis,
-        # not all at read-local position 1
-        starts = (
-            pdf["pos_start"]
-            if "pos_start" in pdf.columns
-            else pd.Series([1] * len(pdf))
-        )
-        for seq, start in zip(pdf["seq"], starts):
-            s = 1 if pd.isna(start) else int(start)
-            for off, base in enumerate(seq):
-                k = f"{s + off}:{base}"
-                counts[k] = counts.get(k, 0) + 1
-    state.update((json.dumps(counts),))
-    per_pos: dict[int, dict[str, int]] = {}
-    for k, c in counts.items():
-        pos_s, base = k.split(":", 1)
-        per_pos.setdefault(int(pos_s), {})[base] = c
-    rows = []
-    for pos in sorted(per_pos):
-        dist = per_pos[pos]
-        # highest count wins; ties break to the smallest letter
-        best = min(dist, key=lambda b: (-dist[b], b))
-        rows.append((ref, pos, best, sum(dist.values())))
-    yield pd.DataFrame(
-        rows, columns=["ref", "position", "consensus_base", "n_reads"]
-    )
-
-
-def streaming_running_consensus(
-    reads_stream: DataFrame,
-    group_col: str = "ref",
-) -> DataFrame:
-    """Running consensus per reference group, maintained across
-    micro-batches with applyInPandasWithState. Consensus (argmax of
-    the letter distribution) is not an algebraic aggregate, so
-    update-mode emission needs custom state: the per-(position,
-    letter) count map - exactly the reference's distribution matrix,
-    kept as operator state instead of an in-memory array
-    (seqtables.py:1512-1553). Each batch emits the refreshed
-    consensus for every group it touched."""
-    return reads_stream.groupBy(group_col).applyInPandasWithState(
-        _consensus_update_fn,
-        outputStructType=CONSENSUS_OUTPUT_SCHEMA,
-        stateStructType=CONSENSUS_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )

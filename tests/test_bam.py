@@ -344,9 +344,10 @@ def test_region_fetch_reads_fewer_bytes_than_full_scan(tmp_path):
 
 
 def test_bam_region_manifest_persist_and_reuse(spark, tmp_path):
-    """bam_region_manifest persists as parquet (the .bai analog);
-    read_bam_region(manifest=path) skips the indexing pass and the
-    filtered manifest is a strict subset of the chunk relation."""
+    """bam_region_manifest persists as parquet (the .bai analog); the
+    filtered manifest is a strict subset of the chunk relation, and
+    read_bam_region, which builds the same manifest inline, returns
+    exactly the overlapping reads."""
     from seqtables_spark.sources.bam import (
         bam_region_manifest, read_bam_region,
     )
@@ -367,7 +368,7 @@ def test_bam_region_manifest_persist_and_reuse(spark, tmp_path):
     ).count()
     assert 0 < hit < total
 
-    out = read_bam_region(spark, p, "ref1", 100, 300, manifest=mpath)
+    out = read_bam_region(spark, p, "ref1", 100, 300, records_per_chunk=64)
     assert out.count() == sum(
         1 for r in recs
         if r[2] == "ref1" and r[3] - 1 < 300 and r[3] - 1 + 24 > 100

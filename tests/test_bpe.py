@@ -169,6 +169,19 @@ def test_property_random_corpora(spark):
         }
         for i, t in enumerate(texts):
             assert got[i] == _ref_encode_count(t, ref), (trial, i, t)
+    # the batched distributed rounds on corpora built to stress the
+    # exact-batch rule: 'th'/'he' interleave through the shared 'h',
+    # disjoint hot pairs batch, and merging (a, b) collides with an
+    # existing 'ab'
+    for texts in (
+        ["the the the then there he she heather", "that this those the"],
+        ["abab abab cdcd cdcd efef", "ababab cdcdcd efefef ghgh"],
+        ["ab ab ab a b a b aab bab", "abc abd"],
+    ):
+        rows = ", ".join(f"({i}, '{t}')" for i, t in enumerate(texts))
+        docs = spark.sql(f"SELECT * FROM VALUES {rows} AS t(doc_id, text)")
+        got = train_bpe(docs, num_merges=10, max_local_vocab=0, fold_every=4)
+        assert got == _ref_train(texts, 10), texts
 
 
 def test_encode_plan_is_shuffle_free(spark):

@@ -18,7 +18,6 @@ from seqtables_spark.pipeline.dedup import (
     simhash_near_dups,
 )
 from seqtables_spark.pipeline.multimodal import (
-    attach_media_metadata,
     decode_image_features,
     frame_sample_plan,
 )
@@ -317,13 +316,6 @@ def test_language_id(spark):
 
 # ------------------------------------------------------------- multimodal
 
-def test_attach_media_metadata(spark):
-    df = spark.createDataFrame([(1, bytearray(b"abc"))], "media_id long, payload binary")
-    r = attach_media_metadata(df).first()
-    assert r["n_bytes"] == 3
-    assert r["sha256"] == hashlib.sha256(b"abc").hexdigest()
-
-
 def test_decode_image_features_deterministic(spark):
     df = spark.createDataFrame(
         [(1, bytearray(b"abc")), (2, bytearray(b"abc"))], "media_id long, payload binary"
@@ -332,16 +324,8 @@ def test_decode_image_features_deterministic(spark):
     feats = {r["media_id"]: list(r["features"]) for r in rows}
     assert feats[1] == feats[2] and len(feats[1]) == 8
     assert all(0.0 <= v < 1.0 for v in feats[1])
-
-
-def test_decode_real_raises_for_codec_formats(spark):
-    """real_decode now genuinely decodes PPM/PGM (see
-    test_decode_ppm_real_decode); a payload needing an absent codec
-    still raises the documented error - lazily, inside the task,
-    since decodability is per-payload."""
-    df = spark.createDataFrame([(1, bytearray(b"x"))], "media_id long, payload binary")
-    with pytest.raises(Exception, match="PIL|NotImplemented"):
-        decode_image_features(df, real_decode=True).collect()
+    assert rows[0]["n_bytes"] == 3
+    assert rows[0]["sha256"] == hashlib.sha256(b"abc").hexdigest()
 
 
 def test_frame_sample_plan(spark):
@@ -768,86 +752,27 @@ def test_curate_documents_full_every_stage_fires(spark):
         assert r.logw is not None
 
 
-def test_ngram_jaccard_containment_catches_embedded_doc(spark):
-    """A short doc fully embedded in a long one: symmetric Jaccard is
-    tiny, containment_a is 1.0 - the asymmetric mode must surface the
-    pair the symmetric filter misses."""
-    short = "abcdefghij"
-    filler = " ".join(f"word{i}token" for i in range(60))
-    long_ = "zz " + short + " " + filler
-    d = spark.createDataFrame(
-        [(1, short), (2, long_)], "doc_id long, text string"
-    )
-    cand = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-    sym = ngram_jaccard_pairs(
-        d, k=3, min_jaccard=0.5, candidates=cand
-    ).collect()
-    assert sym == []  # symmetric jaccard misses it
-    rows = ngram_jaccard_pairs(
-        d, k=3, min_jaccard=0.5, candidates=cand, with_containment=True
-    ).collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert r["containment_a"] == 1.0  # every short-doc gram is in long
-    assert r["jaccard"] < 0.5 and r["containment_b"] < 0.5
-
-
-def _ppm_p6(w, h, rgb_bytes, comment=False):
-    hdr = b"P6\n"
-    if comment:
-        hdr += b"# test comment\n"
-    hdr += f"{w} {h}\n255\n".encode()
-    return hdr + rgb_bytes
-
-
-def test_decode_ppm_real_decode(spark):
-    """real_decode=True REALLY decodes binary PPM/PGM - features
-    checked against numpy ground truth, comments in the header
-    handled, compressed formats raise the documented error."""
-    import numpy as np
-
-    from seqtables_spark.pipeline.multimodal import decode_image_features
-
-    rng = np.random.RandomState(5)
-    w, h = 6, 4
-    px = rng.randint(0, 256, (h, w, 3), dtype=np.uint8)
-    ppm = _ppm_p6(w, h, px.tobytes(), comment=True)
-    pgm = b"P5\n3 2\n255\n" + bytes(range(6))
-    df = spark.createDataFrame(
-        [(1, bytearray(ppm)), (2, bytearray(pgm))],
-        "media_id long, payload binary",
-    )
-    got = {
-        r.media_id: list(r.features)
-        for r in decode_image_features(df, real_decode=True).collect()
-    }
-    pxf = px.astype(np.float32) / 255.0
-    want1 = [
-        w / 1e4, h / 1e4, w / h,
-        float(pxf[:, :, 0].mean()), float(pxf[:, :, 1].mean()),
-        float(pxf[:, :, 2].mean()), float(pxf.mean(axis=2).std()), 0.0,
-    ]
-    for a, b in zip(got[1], want1):
-        assert abs(a - b) < 1e-6, (a, b)
-    g = (np.arange(6, dtype=np.float32) / 255.0).reshape(2, 3)
-    assert abs(got[2][3] - float(g.mean())) < 1e-6  # gray mean in all chans
-    assert got[2][3] == got[2][4] == got[2][5]
-
-    # compressed format -> documented NotImplementedError in the task
-    png = spark.createDataFrame(
-        [(3, bytearray(b"\x89PNG\r\n\x1a\nrest"))], "media_id long, payload binary"
-    )
-    with pytest.raises(Exception, match="PIL|NotImplemented"):
-        decode_image_features(png, real_decode=True).collect()
-
-
 def test_decode_ppm_16bit_maxval(spark):
-    """maxval > 255 means 2-byte BIG-ENDIAN samples per the PPM spec;
-    previously those payloads were silently read as 1 byte/sample
-    (round-4 advice item). Also: absurd maxval -> ValueError."""
+    """decode_ppm against numpy: an 8-bit P6 with a header comment, an
+    8-bit P5, and maxval > 255, which means 2-byte BIG-ENDIAN samples
+    per the PPM spec (previously those payloads were silently read as
+    1 byte/sample, round-4 advice item). Also: absurd maxval ->
+    ValueError."""
     import numpy as np
 
     from seqtables_spark.pipeline.multimodal import decode_ppm
+
+    px = np.random.RandomState(5).randint(0, 256, (4, 6, 3), dtype=np.uint8)
+    w, h, ch, mat = decode_ppm(
+        b"P6\n# test comment\n6 4\n255\n" + px.tobytes()
+    )
+    assert (w, h, ch) == (6, 4, 3)
+    assert np.array_equal(mat, px.astype(np.float32) / 255.0)
+    w, h, ch, mat = decode_ppm(b"P5\n3 2\n255\n" + bytes(range(6)))
+    assert (w, h, ch) == (3, 2, 1)
+    assert np.array_equal(
+        mat[:, :, 0], np.arange(6, dtype=np.float32).reshape(2, 3) / 255.0
+    )
 
     px16 = np.array([[[65535, 0, 32768]]], dtype=">u2")  # 1x1 RGB
     payload = b"P6\n1 1\n65535\n" + px16.tobytes()
@@ -861,31 +786,8 @@ def test_decode_ppm_16bit_maxval(spark):
         decode_ppm(b"P5\n1 1\n70000\n" + b"\x00\x00")
 
 
-def test_pil_codec_splice():
-    """When pillow is installed, _real_image_features decodes
-    compressed formats through the PIL splice point; skips cleanly in
-    codec-free environments (this container has no PIL)."""
-    import io
-
-    pytest.importorskip("PIL")
-    import numpy as np
-    from PIL import Image
-
-    from seqtables_spark.pipeline.multimodal import _real_image_features
-
-    im = Image.fromarray(
-        np.full((4, 8, 3), [255, 0, 128], dtype=np.uint8), "RGB"
-    )
-    buf = io.BytesIO()
-    im.save(buf, format="PNG")
-    feats = _real_image_features(buf.getvalue())
-    assert feats is not None
-    assert feats[0] == 8 / 1e4 and feats[1] == 4 / 1e4 and feats[2] == 2.0
-    assert abs(feats[3] - 1.0) < 1e-6 and abs(feats[4]) < 1e-6
-
-
 def test_soundfile_codec_splice(spark):
-    """When soundfile is installed, real_decode=True decodes
+    """When soundfile is installed, decode_audio_features decodes
     compressed audio (FLAC here) through the _soundfile_decode splice
     point; skips cleanly in codec-free environments (this container
     has no soundfile). The WAV/PCM path stays the value oracle."""
@@ -903,9 +805,7 @@ def test_soundfile_codec_splice(spark):
     df = spark.createDataFrame(
         [(1, bytearray(buf.getvalue()))], "media_id long, payload binary"
     )
-    row = decode_audio_features(
-        df, real_decode=True, window_s=0.25
-    ).collect()[0]
+    row = decode_audio_features(df, window_s=0.25).collect()[0]
     assert abs(row["duration_s"] - 1.0) < 1e-3
     assert row["n_windows"] == 4
     # mean |0.5 sin| per window ~ 0.5 * 2/pi
@@ -926,24 +826,6 @@ def test_soundfile_splice_returns_none_without_library():
     from seqtables_spark.pipeline.multimodal import _soundfile_decode
 
     assert _soundfile_decode(b"fLaC not really a flac stream") is None
-
-
-def test_detect_media_type_magic_bytes(spark):
-    from seqtables_spark.pipeline.multimodal import detect_media_type
-
-    rows = [
-        (1, bytearray(b"\x89PNG\r\n\x1a\nxxxx")),
-        (2, bytearray(b"\xff\xd8\xff\xe0yyyy")),
-        (3, bytearray(b"P6\n1 1\n255\nabc")),
-        (4, bytearray(b"RIFF....WAVE")),
-        (5, bytearray(b"who knows")),
-    ]
-    df = spark.createDataFrame(rows, "media_id long, payload binary")
-    got = {
-        r.media_id: r.mt
-        for r in df.select("media_id", detect_media_type().alias("mt")).collect()
-    }
-    assert got == {1: "png", 2: "jpeg", 3: "ppm", 4: "riff", 5: "unknown"}
 
 
 def test_near_dup_contamination(spark):

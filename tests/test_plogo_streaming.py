@@ -1,11 +1,9 @@
-"""pLogo statistic (numpy binomial tails) and Structured Streaming
-ingest parity with the batch aggregation."""
+"""pLogo statistic (numpy binomial tails)."""
 
 import math
 
 import pytest
 
-from pyspark.sql import functions as F
 
 from seqtables_spark import from_list
 from seqtables_spark.operators.plogo import _binom_log_tails, get_plogo
@@ -39,31 +37,3 @@ def test_plogo_end_to_end(spark):
     expect = -4 * math.log10(0.25)
     assert abs(a1["plogo"] - expect) < 1e-9
     assert a1["significance"] < 0
-
-
-def test_streaming_matches_batch(spark, tmp_path):
-    from seqtables_spark.streaming.ingest import stream_reads, streaming_seq_dist
-
-    reads = from_list(spark, ["ACGT", "ACGA", "TTTT"]).reads
-    path = str(tmp_path / "reads")
-    reads.write.parquet(path)
-
-    stream = stream_reads(spark, path)
-    q = streaming_seq_dist(stream, query_name="t_stream_dist")
-    try:
-        q.processAllAvailable()
-        got = {
-            (r["position"], r["base"]): r["cnt"]
-            for r in spark.table("t_stream_dist").collect()
-        }
-    finally:
-        q.stop()
-    batch = {
-        (r["position"], r["base"]): r["cnt"]
-        for r in from_list(spark, ["ACGT", "ACGA", "TTTT"])
-        .cells(with_qual=False)
-        .groupBy("position", "base")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    }
-    assert got == batch

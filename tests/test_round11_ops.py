@@ -123,6 +123,16 @@ def test_untouched_shards_are_never_read(spark, tmp_path):
     assert got.count() == sum(
         1 for i in range(400) if 3 * i < 400 and 3 * i + 24 > 150
     )
+    # without the manifest's index entry the planner takes the
+    # sibling .bai; with no index at all it fails loudly
+    for e in entries:
+        del e["index"]
+    with open(os.path.join(path, "_manifest.json"), "w") as fh:
+        json.dump(entries, fh)
+    assert _sharded_region_plan(path, "ref1", 150, 400)[0] == triples
+    os.remove(os.path.join(path, "shard-00000.bam.bai"))
+    with pytest.raises(FileNotFoundError, match="no .bai/.csi index"):
+        _sharded_region_plan(path, "ref1", 150, 400)
 
 
 def test_sharded_region_unknown_contig_is_empty(spark, tmp_path):

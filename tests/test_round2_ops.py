@@ -219,20 +219,6 @@ def test_consensus_with_insertions(spark):
     assert got == {(1, 0): "A", (2, 0): "C", (2, -1): "T"}
 
 
-def test_decode_audio_features(spark):
-    from seqtables_spark.pipeline.multimodal import decode_audio_features
-
-    media = spark.createDataFrame(
-        [(1, bytearray(b"\xff" * 32000)), (2, bytearray(b"\x00" * 8000))],
-        "media_id long, payload binary",
-    )
-    got = {r["media_id"]: r for r in decode_audio_features(media).collect()}
-    assert got[1]["duration_s"] == 2.0 and got[1]["n_windows"] == 2
-    assert got[1]["window_energy"] == [1.0, 1.0]
-    assert got[2]["duration_s"] == 0.5 and got[2]["n_windows"] == 1
-    assert got[2]["window_energy"] == [0.0]
-
-
 def test_repetition_features(spark):
     from seqtables_spark.pipeline.text import repetition_features
 
@@ -554,21 +540,25 @@ def test_cells_honors_phred_adjust(spark):
 
 
 def test_decode_audio_real_wav(spark):
-    """real_decode=True really parses RIFF/WAVE PCM: 16-bit mono with
-    a known constant amplitude gives exact window energies at the
-    file's OWN sample rate; stereo down-mixes by mean; compressed
-    formats raise the documented error."""
+    """decode_audio_features really parses RIFF/WAVE PCM: 16-bit mono
+    and 8-bit mono (unsigned, centred at 128) with a known constant
+    amplitude give exact window energies at the file's OWN sample
+    rate; stereo down-mixes by mean; an empty data chunk gives one
+    zero window; compressed formats raise the documented error."""
     import numpy as np
 
     from seqtables_spark.pipeline.multimodal import decode_audio_features
 
-    def wav(rate, samples_i16, n_ch=1):
-        data = np.asarray(samples_i16, "<i2").tobytes()
+    def wav(rate, samples, n_ch=1, bits=16):
+        dt = "<i2" if bits == 16 else np.uint8
+        data = np.asarray(samples, dt).tobytes()
+        width = bits // 8
         fmt = (
             (1).to_bytes(2, "little") + n_ch.to_bytes(2, "little")
             + rate.to_bytes(4, "little")
-            + (rate * n_ch * 2).to_bytes(4, "little")
-            + (n_ch * 2).to_bytes(2, "little") + (16).to_bytes(2, "little")
+            + (rate * n_ch * width).to_bytes(4, "little")
+            + (n_ch * width).to_bytes(2, "little")
+            + bits.to_bytes(2, "little")
         )
         body = b"fmt " + len(fmt).to_bytes(4, "little") + fmt
         body += b"data" + len(data).to_bytes(4, "little") + data
@@ -579,18 +569,22 @@ def test_decode_audio_real_wav(spark):
     mono = wav(rate, [16384] * 12)
     # stereo: L=+16384, R=-16384 -> mean 0 everywhere
     stereo = wav(rate, [16384, -16384] * 8, n_ch=2)
+    # 8-bit: 192 and 64 are +-0.5 around the 128 midpoint
+    pcm8 = wav(rate, [192, 64] * 10, bits=8)
+    empty = wav(rate, [], bits=8)
     df = spark.createDataFrame(
-        [(1, bytearray(mono)), (2, bytearray(stereo))],
+        [(1, bytearray(mono)), (2, bytearray(stereo)), (3, bytearray(pcm8)),
+         (4, bytearray(empty))],
         "media_id long, payload binary",
     )
-    got = {
-        r.media_id: r
-        for r in decode_audio_features(df, real_decode=True).collect()
-    }
+    got = {r.media_id: r for r in decode_audio_features(df).collect()}
     assert abs(got[1].duration_s - 12 / 8) < 1e-12
     assert got[1].n_windows == 2
     assert all(abs(e - 0.5) < 1e-6 for e in got[1].window_energy)
     assert got[2].n_windows == 1 and abs(got[2].window_energy[0]) < 1e-6
+    assert got[3].duration_s == 20 / 8 and got[3].n_windows == 3
+    assert got[3].window_energy == [0.5, 0.5, 0.5]
+    assert got[4].duration_s == 0.0 and got[4].window_energy == [0.0]
 
     import pytest as _pytest
 
@@ -598,4 +592,4 @@ def test_decode_audio_real_wav(spark):
         [(3, bytearray(b"fLaC....."))], "media_id long, payload binary"
     )
     with _pytest.raises(Exception, match="soundfile|NotImplemented"):
-        decode_audio_features(flac, real_decode=True).collect()
+        decode_audio_features(flac).collect()

@@ -192,21 +192,15 @@ def _phash(s: str) -> int:
     return int(hashlib.md5(s.encode()).hexdigest()[:15], 16) % (2**31 - 1)
 
 
-@pytest.mark.parametrize("variant", ["ranked", "collect"])
-def test_kmv_sketch_and_estimate(spark, variant):
-    from seqtables_spark.pipeline.sketch import (
-        kmv_estimate, kmv_sketch, kmv_sketch_collect,
-    )
+def test_kmv_sketch_and_estimate(spark):
+    from seqtables_spark.pipeline.sketch import kmv_estimate, kmv_sketch
 
     rng = random.Random(3)
     rows = [("g1", str(rng.randint(0, 5000))) for _ in range(4000)]
     rows += [("g2", str(v)) for v in range(10)]  # sub-k group: exact
     df = spark.createDataFrame(rows, "g string, v string")
-    # default (bounded window-rank) and the explicit small-cardinality
-    # collect variant must agree value-for-value
-    fn = kmv_sketch if variant == "ranked" else kmv_sketch_collect
     k = 32
-    got = {r.g: r.kmv for r in fn(df, "v", k=k, group_by=["g"]).collect()}
+    got = {r.g: r.kmv for r in kmv_sketch(df, "v", k=k, group_by=["g"]).collect()}
 
     for g in ("g1", "g2"):
         vals = sorted({_phash(v) for gg, v in rows if gg == g})
@@ -214,7 +208,7 @@ def test_kmv_sketch_and_estimate(spark, variant):
 
     est = {
         r.g: r.est
-        for r in fn(df, "v", k=k, group_by=["g"])
+        for r in kmv_sketch(df, "v", k=k, group_by=["g"])
         .select("g", kmv_estimate("kmv", k).alias("est"))
         .collect()
     }

@@ -269,33 +269,6 @@ def test_parse_sam_lines_batches_equal_one_shot():
     assert want["pos"] == list(range(1, 8))
 
 
-def test_curate_documents_skew_immune_parity(spark):
-    """ADVICE r5 (low): the min-id survivor window serializes a
-    mega-duplicated digest through one task; skew_immune=True must
-    produce IDENTICAL survivors via groupBy(digest).min(id) +
-    compound-key join (language outcomes per digest are identical
-    across copies - same text - so filtering after dedup is safe),
-    and its plan must carry a map-side partial_min with NO Window."""
-    from seqtables_spark.pipeline.curate import curate_documents
-
-    good = ("This is a perfectly reasonable english document with "
-            "enough alphabetic tokens to pass the quality gate easily "
-            "and some more words to be safe")
-    rows = [(i, good) for i in range(200)]  # the hot digest
-    rows += [(1000 + i, good + f" unique tail {i}") for i in range(5)]
-    rows += [(2000, "x1 2 3 4 5 6 7 8 9 10 11 !!")]  # fails alpha gate
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-
-    want = sorted(r["doc_id"] for r in curate_documents(df).collect())
-    got_df = curate_documents(df, skew_immune=True)
-    got = sorted(r["doc_id"] for r in got_df.collect())
-    assert got == want and 0 in got and len(got) == 6
-
-    plan = got_df._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan
-    assert "partial_min" in plan  # duplicates collapse map-side
-
-
 def test_band_bucket_long_and_validated(spark):
     """ADVICE r5 (low): band_bucket must survive bucket_bits up to 28
     (an int32 cast overflows to NULL at >= 29, silently matching
@@ -382,7 +355,7 @@ def test_save_ivf_index_one_file_per_cell_and_compaction(spark, tmp_path):
 
     from seqtables_spark.pipeline.dedup import compact_partitioned_parquet
     from seqtables_spark.pipeline.similarity import (
-        ivf_assign, ivf_centroids, ivf_topk, load_ivf_cells, save_ivf_index,
+        ivf_assign, ivf_centroids, ivf_topk, save_ivf_index,
     )
 
     rng = random.Random(7)
@@ -408,7 +381,8 @@ def test_save_ivf_index_one_file_per_cell_and_compaction(spark, tmp_path):
     want = [
         (r["vec_id"], round(r["sim"], 9))
         for r in ivf_topk(
-            load_ivf_cells(spark, path, [0, 1, 2, 3]), q, cents, k=5
+            spark.read.parquet(path).filter(F.col("_c").isin([0, 1, 2, 3])),
+            q, cents, k=5,
         ).collect()
     ]
 
@@ -424,7 +398,8 @@ def test_save_ivf_index_one_file_per_cell_and_compaction(spark, tmp_path):
     got_ids = {
         r["vec_id"]
         for r in ivf_topk(
-            load_ivf_cells(spark, path, [0, 1, 2, 3]), q, cents, k=5
+            spark.read.parquet(path).filter(F.col("_c").isin([0, 1, 2, 3])),
+            q, cents, k=5,
         ).collect()
     }
     # original top-5 unless displaced by an identical duplicate vector
@@ -460,7 +435,7 @@ def test_incremental_index_roundtrip_wide_buckets(spark, tmp_path):
 
 # ---------------------------------------------------------------------
 # Video decode (round-6 scope-edge closure): RAWV codec + the
-# video_frame_features operator over all three payload sources.
+# video_frame_features operator over both payload sources.
 # ---------------------------------------------------------------------
 
 
@@ -560,38 +535,6 @@ def test_video_frame_features_raw_metadata_path(spark):
         assert rows[1]["mean_intensity"] == pytest.approx(b.mean() / 255.0)
         assert rows[0]["motion"] == 0.0
         assert rows[1]["motion"] == pytest.approx(12 / 255.0)
-
-
-def test_video_codec_splice_returns_none_without_library():
-    """Without imageio/av the splice returns None (and the operator
-    raises the documented NotImplementedError for compressed
-    payloads) - never a silent wrong decode."""
-    for mod in ("av", "imageio"):
-        try:
-            __import__(mod)
-            pytest.skip(f"{mod} installed - splice would really decode")
-        except ImportError:
-            pass
-    from seqtables_spark.pipeline.multimodal import _codec_video_frames
-
-    assert _codec_video_frames(b"\x00\x00\x00 ftypmp42 junk") is None
-
-
-def test_video_frame_features_compressed_raises_without_codec(spark):
-    from seqtables_spark.pipeline.multimodal import video_frame_features
-
-    for mod in ("av", "imageio"):
-        try:
-            __import__(mod)
-            pytest.skip(f"{mod} installed - would really decode")
-        except ImportError:
-            pass
-    df = spark.createDataFrame(
-        [(1, bytearray(b"\x00\x00\x00 ftypmp42 junk"))],
-        "media_id long, payload binary",
-    )
-    with pytest.raises(Exception, match="NotImplementedError|imageio/av"):
-        video_frame_features(df, real_decode=True).collect()
 
 
 def test_video_frame_features_requires_metadata_or_rawv(spark):
@@ -971,8 +914,8 @@ def test_jsonl_roundtrip_preserves_newlines_and_types(spark, tmp_path):
 
 def test_jsonl_quarantine_and_drop_modes(spark, tmp_path):
     """Malformed lines land in _corrupt_record (never silently lost);
-    split_corrupt separates them; DROPMALFORMED drops them; a missing
-    schema raises."""
+    split_corrupt separates them and rejects a frame without the
+    quarantine column; a missing schema raises."""
     from seqtables_spark.sources.jsonl import (
         read_jsonl, split_corrupt, write_jsonl,
     )
@@ -989,12 +932,10 @@ def test_jsonl_quarantine_and_drop_modes(spark, tmp_path):
     bad_rows = bad.collect()
     assert [r["_corrupt_record"] for r in bad_rows] == ["{broken json"]
     assert all(r["id"] is None and r["text"] is None for r in bad_rows)
-    dropped = read_jsonl(spark, path, "id long, text string", keep_corrupt=False)
-    assert sorted(r["id"] for r in dropped.collect()) == [1, 3]
     with pytest.raises(ValueError, match="schema"):
         read_jsonl(spark, path, None)
     with pytest.raises(ValueError, match="_corrupt_record"):
-        split_corrupt(dropped)
+        split_corrupt(clean)
 
 
 def test_jsonl_structtype_schema_quarantine(spark, tmp_path):

@@ -112,37 +112,6 @@ def test_read_bam_region_bai_quoted_path(spark, tmp_path):
     assert [r["header"] for r in got] == ["r1"]
 
 
-def test_train_bpe_batch_merges_exact(spark):
-    """batch_merges>1 must produce a BIT-IDENTICAL merge table to the
-    sequential top-1 path (the safety prefix stops at any pair whose
-    rank could be perturbed): pinned on corpora chosen to exercise
-    token-sharing hot pairs ('th'/'he'), symbol collisions, and a
-    genuinely batchable disjoint tail."""
-    from seqtables_spark.pipeline.bpe import train_bpe
-
-    corpora = [
-        # English-ish: 'th'/'he' interleave through the shared 'h'
-        ["the the the then there he she heather", "that this those the"],
-        # disjoint hot pairs: ab, cd, ef families never share tokens
-        ["abab abab cdcd cdcd efef", "ababab cdcdcd efefef ghgh"],
-        # symbol collision: merging (a,b) creates 'ab' which exists
-        ["ab ab ab a b a b aab bab", "abc abd"],
-    ]
-    for texts in corpora:
-        df = spark.createDataFrame(
-            [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-        )
-        seq = train_bpe(df, num_merges=10, max_local_vocab=0, fold_every=4)
-        for m in (2, 4, 8):
-            got = train_bpe(
-                df, num_merges=10, max_local_vocab=0, fold_every=4,
-                batch_merges=m,
-            )
-            assert got == seq, (texts[0][:20], m)
-        # and the local driver path agrees too
-        assert train_bpe(df, num_merges=10) == seq
-
-
 def test_resize_images_randomized_edges(spark):
     """Seeded randomized torture for the grouped fast path: 40-image
     batches mixing raw/PGM/RAWV sources, extreme dims (1x1, 1xN, Nx1),

@@ -1,15 +1,12 @@
-"""Watermarked event-time windows + the applyInPandasWithState
-running-consensus operator (SURVEY 2.8 scale extensions)."""
+"""Watermarked event-time windows and streaming near-duplicate
+detection (SURVEY 2.8 scale extensions)."""
 
 import datetime
 
 import pytest
 from pyspark.sql import functions as F
 
-from seqtables_spark.streaming.ingest import (
-    streaming_running_consensus,
-    windowed_event_counts,
-)
+from seqtables_spark.streaming.ingest import windowed_event_counts
 
 
 def _drain(q):
@@ -125,85 +122,6 @@ def test_windowed_event_counts_drops_late_rows(spark, tmp_path):
     types = {r["event_type"] for r in spark.table("t_late_events").collect()}
     assert "click" in types
     assert "late" not in types
-
-
-def test_streaming_running_consensus_accumulates_state(spark, tmp_path):
-    path = str(tmp_path / "consensus_reads")
-    schema = "ref string, read_id string, seq string"
-    batch1 = [("amp1", "r1", "ACGT"), ("amp1", "r2", "ACGA"), ("amp2", "r3", "TTTT")]
-    spark.createDataFrame(batch1, schema).coalesce(1).write.parquet(path)
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
-    out = streaming_running_consensus(stream, group_col="ref")
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("t_run_consensus")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        # second micro-batch flips amp1's consensus at position 4: two
-        # more 'C' reads beat the earlier T/A split
-        batch2 = [("amp1", "r4", "ACGC"), ("amp1", "r5", "ACGC")]
-        spark.createDataFrame(batch2, schema).coalesce(1).write.mode("append").parquet(path)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    rows = spark.table("t_run_consensus").collect()
-    # take the freshest emission per (ref, position)
-    latest = {}
-    for r in rows:
-        key = (r["ref"], r["position"])
-        if key not in latest or r["n_reads"] > latest[key][1]:
-            latest[key] = (r["consensus_base"], r["n_reads"])
-    # amp1 over all 4 reads: A C G {T,A,C,C} -> C wins position 4
-    assert latest[("amp1", 1)] == ("A", 4)
-    assert latest[("amp1", 2)] == ("C", 4)
-    assert latest[("amp1", 3)] == ("G", 4)
-    assert latest[("amp1", 4)] == ("C", 4)
-    # amp2 untouched by batch 2 keeps its batch-1 state
-    assert latest[("amp2", 1)] == ("T", 1)
-    # ties break to the smallest letter: amp1 pos4 after batch1 was
-    # {T:1, A:1} -> 'A' (visible in the batch-1 emission)
-    b1 = [r for r in rows if r["ref"] == "amp1" and r["position"] == 4 and r["n_reads"] == 2]
-    assert b1 and b1[0]["consensus_base"] == "A"
-
-
-def test_streaming_running_consensus_honors_pos_start(spark, tmp_path):
-    """Reads mapping at different offsets stack on the REFERENCE
-    axis (pos_start + offset), matching explode_chars' frame - not
-    all at read-local position 1 (reviewed failure mode)."""
-    path = str(tmp_path / "consensus_offset_reads")
-    schema = "ref string, read_id string, seq string, pos_start long"
-    rows = [
-        ("amp", "r1", "ACG", 1),   # covers ref 1-3
-        ("amp", "r2", "CGT", 2),   # covers ref 2-4
-    ]
-    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(path)
-    stream = spark.readStream.schema(schema).parquet(path)
-    out = streaming_running_consensus(stream, group_col="ref")
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("t_run_consensus_off")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {
-        r["position"]: (r["consensus_base"], r["n_reads"])
-        for r in spark.table("t_run_consensus_off").collect()
-    }
-    # ref coords: pos1 {A}, pos2 {C,C}, pos3 {G,G}, pos4 {T}
-    assert got == {1: ("A", 1), 2: ("C", 2), 3: ("G", 2), 4: ("T", 1)}
 
 
 def test_streaming_near_dup_buckets_matches_batch(spark, tmp_path):

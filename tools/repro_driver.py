@@ -12,6 +12,8 @@ TZ=America/New_York env to simulate a non-UTC driver host), driver
 rotation order, and optionally the TIMESTAMP(NANOS) events fixture
 (tools/make_nanos_fixture.py).
 
+Kept as the only local replay of the vanilla-session verify protocol.
+
 Usage:
   TZ=America/New_York python tools/repro_driver.py <sf_dir> [n_queries]
 """

@@ -46,8 +46,8 @@ QUERIES = [
     "zipf_slope", "source_overlap", "temperature_mix",
     # round-6 continuation: row-local intra-doc dedup, rule filter,
     # banded A-vs-B decontamination, BPE encode (train runs eagerly
-    # off-clock - its corpus-size scaling is measured separately in
-    # tools/bpe_scaling.py), WARC write+parse roundtrip
+    # off-clock - its corpus-size scaling is in SCALING.md "BPE
+    # **training**"), WARC write+parse roundtrip
     "intra_doc_dedup", "gopher_filter", "fuzzy_contamination",
     "bpe_tokens", "warc_roundtrip",
     # composed curation (train/checkpoint run eagerly at plan build;
