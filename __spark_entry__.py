@@ -2147,14 +2147,14 @@ def _write_sorted_bam(spark: SparkSession, sf_dir: str, prefix: str) -> str:
 
 
 def q_bam_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S4 through a REAL file: encode the doc-derived alignments as
-    BGZF/BAM bytes (the pure-Python codec; encoding is the test-grade
-    sink and runs driver-side like the reference's pysam writer),
-    then decode DISTRIBUTED via read_bam's virtual-offset chunk
-    splitting - one BAM, many tasks - and value-check against the
-    direct SQL derivation. Makes the BAM source's full path (BGZF
-    framing, chunk index, range decode) oracle-checked, not
-    tests-only."""
+    """S4 through REAL files: write the doc-derived alignments as a
+    sharded BAM directory (write_bam, one BGZF-encoded shard per
+    partition), then decode it DISTRIBUTED through read_bam's
+    whole-file path - one stream decode per shard - and value-check
+    against the direct SQL derivation. Makes the BAM sink and the
+    whole-file source (BGZF framing, header, record decode, EOF
+    check) oracle-checked, not tests-only; the range decode is
+    oracle-checked through the bam_region* queries."""
     from seqtables_spark.sources.bam import read_bam, write_bam
 
     reads = _doc_reads(spark, sf_dir)

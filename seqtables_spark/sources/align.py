@@ -317,97 +317,6 @@ def _align_core(
     return out_sm, out_qm, ins
 
 
-def align_batch_np(
-    seqs: list,
-    quals: list,
-    poss: np.ndarray,
-    cigars: list,
-    min_pos: int,
-    max_pos: int,
-    edge_gap: str = "-",
-    null_qual: str = "!",
-) -> tuple[list, list, list]:
-    """List-in/list-out wrapper over _align_core: same outputs as
-    align_read for a whole batch. Non-ASCII payloads (possible for
-    document-derived fixtures, never for spec SAM) drop to the exact
-    per-read python path - bytes != chars there, so the byte-matrix
-    kernel would mis-slice multi-byte text. Quals must already be
-    seq-length (callers replace SAM's '*' sentinel).
-
-    Returns (aligned_seqs, aligned_quals, ins_lists) with ins_lists
-    per read as [(position, loc_ins, base, qual_char), ...] in
-    align_read's (reversed-cigar) record order."""
-    n = len(seqs)
-    ins_out: list[list] = [[] for _ in range(n)]
-    if n == 0:
-        return [], [], ins_out
-
-    cat_seq = "".join(seqs)
-    cat_qual = "".join(quals)
-    cat_cig = "".join(cigars)
-    if not (cat_seq.isascii() and cat_qual.isascii() and cat_cig.isascii()):
-        out_s, out_q = [], []
-        for i in range(n):
-            s, q, ins = align_read(
-                seqs[i], quals[i], int(poss[i]), cigars[i],
-                int(min_pos), int(max_pos), edge_gap, null_qual,
-            )
-            out_s.append(s)
-            out_q.append(q)
-            ins_out[i] = ins
-        return out_s, out_q, ins_out
-
-    seq_off = np.zeros(n + 1, np.int64)
-    np.cumsum(np.fromiter((len(s) for s in seqs), np.int64, n), out=seq_off[1:])
-    qual_off = np.zeros(n + 1, np.int64)
-    np.cumsum(np.fromiter((len(q) for q in quals), np.int64, n), out=qual_off[1:])
-    cig_off = np.zeros(n + 1, np.int64)
-    np.cumsum(np.fromiter((len(c) for c in cigars), np.int64, n), out=cig_off[1:])
-
-    out_sm, out_qm, (ri, rp, loc, b_u8, q_u8) = _align_core(
-        np.frombuffer(cat_seq.encode("ascii"), np.uint8),
-        seq_off[:-1],
-        np.frombuffer(cat_qual.encode("ascii"), np.uint8),
-        qual_off[:-1],
-        np.frombuffer(cat_cig.encode("ascii"), np.uint8),
-        cig_off,
-        np.asarray(poss, np.int64),
-        min_pos,
-        max_pos,
-        edge_gap,
-        null_qual,
-    )
-
-    if ri.size:
-        b_str = bytes(b_u8).decode("ascii")
-        q_str = bytes(q_u8).decode("ascii")
-        pos_l = rp.tolist()
-        loc_l = loc.tolist()
-        counts = np.bincount(ri, minlength=n)
-        k = 0
-        for i in np.flatnonzero(counts):
-            m = int(counts[i])
-            # align_read emits records in REVERSED cigar order (it
-            # builds while walking the run list backwards); match it
-            # exactly so both kernels are interchangeable
-            ins_out[i] = [
-                (pos_l[k + t], loc_l[k + t], b_str[k + t], q_str[k + t])
-                for t in range(m - 1, -1, -1)
-            ]
-            k += m
-
-    width = int(max_pos) - int(min_pos) + 1
-    row_bytes = out_sm.tobytes()
-    qrow_bytes = out_qm.tobytes()
-    out_s = [
-        row_bytes[i * width : (i + 1) * width].decode("ascii") for i in range(n)
-    ]
-    out_q = [
-        qrow_bytes[i * width : (i + 1) * width].decode("ascii") for i in range(n)
-    ]
-    return out_s, out_q, ins_out
-
-
 _PA_INS_TYPE = None  # built lazily: pyarrow import stays off the driver path
 
 
@@ -564,9 +473,9 @@ def _align_record_batch(rb, mn: int, mx: int, edge_gap: str):
     )
     m = ri.size
     if m:
-        # canonical record order is align_read's REVERSED-cigar order
-        # (align_batch_np matches it too); _align_core returns forward
-        # order, so reverse within each read's run. ri is grouped and
+        # canonical record order is align_read's REVERSED-cigar order;
+        # _align_core returns forward order, so reverse within each
+        # read's run. ri is grouped and
         # non-decreasing, so a per-group index flip is a permutation.
         counts_i = np.bincount(ri, minlength=n)
         starts_i = np.cumsum(counts_i) - counts_i

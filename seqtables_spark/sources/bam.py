@@ -20,11 +20,17 @@ formats and binning schemes):
   length, ref_id and 0-based half-open reference span, from the fixed
   fields and CIGAR ops. ``build_bai``, ``build_csi`` and
   ``index_bam_region_chunks`` are built on it.
-* the region-fetch back half - ``decode_bam_voffset_range``,
-  ``fetch_voffset_triples`` and ``_overlap_filter`` (pysam fetch
-  semantics) - behind the manifest, .bai, .csi and sharded fetches,
-  and the ``_index_kinds`` table that maps "bai"/"csi" to their build
-  and candidate-range functions.
+* ``decode_bam_voffset_range`` - the one range decode: the records
+  whose start virtual offset lies in [v_beg, v_end), failing loudly
+  when the stream ends mid-record or before v_end.
+* ``_decode_ranges`` - the one decode task: any (path, v_beg, v_end)
+  relation becomes decoded rows, each path's header read once per
+  task. Three callers feed it: ``read_bam_region`` (the pruned
+  region manifest), ``fetch_voffset_triples`` (the .bai, .csi and
+  sharded candidate ranges) and ``read_bam(records_per_chunk=N)``
+  (the unpruned manifest). ``_overlap_filter`` applies pysam fetch
+  semantics after the region fetches, and ``_index_kinds`` maps
+  "bai"/"csi" to their build and candidate-range functions.
 
 ``decode_bam`` stays an independent whole-stream decoder: it is the
 brute-force reference the fetch tests compare against.
@@ -34,17 +40,16 @@ Scale design. Decoding distributes at TWO grains:
 * across files (default): binaryFile source -> mapInPandas, one
   stream decode per file, zero shuffle. Saturates executors whenever
   files >> cores.
-* within a file (``records_per_chunk``): a cheap indexing stage walks
-  each file once — BGZF member boundaries from the BC subfields plus
-  a record-length chain over the inflated stream (struct reads only,
-  no string materialization) — and emits (comp_off, uoff, n_records)
-  virtual-offset chunk specs, exactly the coordinates a .bai stores.
-  The expensive decode (nibble->base and qual string building, the
-  actual CPU cost) then runs one task per chunk, each task seek()ing
-  to its compressed offset and inflating only its own members. With a
-  real .bai the indexing stage would be replaced by reading the
-  index; without one this is the honest equivalent, and the heavy
-  stage parallelizes either way.
+* within a file (``records_per_chunk``): one light indexing task per
+  file (``bam_region_manifest``) walks the record spans - BGZF member
+  boundaries from the BC subfields plus each record's fixed fields
+  and CIGAR, none of the per-base string work - and emits
+  (v_beg, v_end) virtual-offset chunks, the coordinates a .bai
+  stores. The expensive decode (nibble->base and qual string
+  building, the actual CPU cost) then runs one task per chunk, each
+  task seeking to its compressed offset and inflating only its own
+  members. With a real .bai the indexing stage is replaced by
+  reading the index; the decode stage is the same either way.
 
 The decoded frame feeds the same from_df/align pipeline as SAM text.
 """
@@ -53,7 +58,6 @@ from __future__ import annotations
 
 import bisect
 import gzip
-import itertools
 import os
 import struct
 import zlib
@@ -70,7 +74,6 @@ BAM_SCHEMA = (
     "header string, flag int, rname string, pos long, mapq int, "
     "cigar string, seq string, qual string"
 )
-_CHUNK_SCHEMA = "path string, comp_off long, uoff long, n_records long"
 
 # the fixed 28-byte BGZF EOF marker block (SAM spec 4.1.2)
 BGZF_EOF = bytes.fromhex(
@@ -332,7 +335,9 @@ def _record_spans(
     and None for unmapped (ref_id < 0) records. Struct reads of the
     fixed fields + CIGAR ops only - none of the per-base string work.
     Each record is fully buffered when yielded, so st.voffset/vpack
-    of its start and end are valid; the caller trims between yields."""
+    of its start and end are valid; the caller trims between yields.
+    A stream that ends inside a record length or without the empty
+    BGZF EOF member raises, as decode_bam does."""
     while st.fill(o + 4):
         (block_size,) = struct.unpack_from("<i", st.buf, o - st.base_u)
         if not st.fill(o + 4 + block_size):
@@ -352,141 +357,110 @@ def _record_spans(
             end0 = pos0 + max(ref_len, 1)
         yield o, block_size, ref_id, pos0, end0
         o += 4 + block_size
+    if o != st.total_u or st.members[-1][0] != st.total_u:
+        raise ValueError(
+            "truncated BAM: stream ends inside a record length or lacks "
+            f"the BGZF EOF marker (uncompressed offset {o})"
+        )
 
 
-# --------------------------------------------------- sub-file splitting
-
-def index_bam_chunks(
-    data, records_per_chunk: int
-) -> list[tuple[int, int, int]]:
-    """One light pass over a BAM file (bytes or a seekable binary
-    file) -> virtual-offset chunk specs [(comp_off, uoff, n_records)]:
-    every chunk starts at a BGZF member boundary (comp_off) plus an
-    uncompressed skip (uoff) to its first record, i.e. the same
-    (coffset, uoffset) pair a .bai virtual offset encodes.
-
-    Streams member-by-member with a ROLLING inflate buffer
-    (_BgzfIndexStream): peak memory is O(max member + spanned
-    record), never the whole uncompressed stream — a 50 GB BAM
-    indexes in constant memory. Records are touched only with 4-byte
-    length reads (deliberately not _record_spans, which also reads
-    each record's fixed fields and CIGAR)."""
-    st = _BgzfIndexStream(data)
-    _, off = st.read_header()
-
-    specs: list[tuple[int, int, int]] = []
-    o = off  # absolute uncompressed offset
-    count = 0
-    chunk_start = o
-    while st.fill(o + 4):
-        if count == records_per_chunk:
-            specs.append((*st.voffset(chunk_start), count))
-            chunk_start, count = o, 0
-        (block_size,) = struct.unpack_from("<i", st.buf, o - st.base_u)
-        o += 4 + block_size
-        count += 1
-        st.trim(chunk_start)
-    if count:
-        specs.append((*st.voffset(chunk_start), count))
-    return specs
-
+# ------------------------------------------------ range decode
 
 _REGION_CHUNK_SCHEMA = (
-    "path string, comp_off long, uoff long, n_records long, "
-    "rname string, min_pos long, max_end long"
+    "path string, v_beg long, v_end long, rname string, min_pos long, "
+    "max_end long"
 )
 
 
 def index_bam_region_chunks(
     data, records_per_chunk: int
-) -> list[tuple[int, int, int, str, int | None, int | None]]:
-    """index_bam_chunks + per-chunk COORDINATE BOUNDS — the engine's
-    .bai analog (reference from_pysam fetch_args,
-    /root/reference/seqtables/core/seqtables.py:226-283): one light
-    pass emits [(comp_off, uoff, n_records, rname, min_pos0,
-    max_end0)], where min/max bound the reference span of every
-    record in the chunk (from _record_spans). A region fetch
-    then decodes ONLY chunks whose bounds intersect the query window
-    — the same pruning a .bai's binning index drives, stored as a
-    relational manifest instead of the binary bin tree so Spark can
-    partition-prune it like any other table.
+) -> list[tuple[int, int, str, int | None, int | None]]:
+    """One light pass over a BAM file (bytes or a seekable binary
+    file) -> virtual-offset chunks with COORDINATE BOUNDS, the
+    engine's .bai analog (reference from_pysam fetch_args,
+    /root/reference/seqtables/core/seqtables.py:226-283):
+    [(v_beg, v_end, rname, min_pos0, max_end0)], where [v_beg, v_end)
+    holds the start voffsets of the chunk's records and min/max bound
+    the reference span of every record in it (from _record_spans). A
+    region fetch then decodes ONLY chunks whose bounds intersect the
+    query window - the same pruning a .bai's binning index drives,
+    stored as a relational manifest instead of the binary bin tree so
+    Spark can partition-prune it like any other table.
 
-    Chunks additionally SPLIT on contig change, so each spec covers
-    one rname and bounds stay tight; unmapped records (ref_id -1)
-    land in rname='*' chunks with NULL bounds (a region fetch never
-    touches them, matching pysam fetch(contig,...) semantics).
+    Each chunk's v_end is the next chunk's v_beg; the last chunk's is
+    the end-of-records voffset, taken after the walk has read the EOF
+    member. Chunks hold at most `records_per_chunk` records and SPLIT
+    on contig change, so each covers one rname and bounds stay tight;
+    unmapped records (ref_id -1) land in rname='*' chunks with NULL
+    bounds (a region fetch never touches them, matching pysam
+    fetch(contig,...) semantics).
 
-    Same rolling-buffer memory contract as index_bam_chunks."""
+    Streams member-by-member with a ROLLING inflate buffer
+    (_BgzfIndexStream): peak memory is O(max member + spanned
+    record), never the whole uncompressed stream - a 50 GB BAM
+    indexes in constant memory."""
     st = _BgzfIndexStream(data)
     refs, off = st.read_header()
 
     specs: list[tuple] = []
     count = 0
-    chunk_start = off
+    chunk_start = o_end = off
     cur_ref: int | None = None
     lo: int | None = None
     hi: int | None = None
 
-    def _close() -> None:
+    def _close(o: int) -> None:
         nonlocal count, lo, hi
-        c, uo = st.voffset(chunk_start)
         name = refs[cur_ref] if 0 <= cur_ref < len(refs) else "*"
-        specs.append((c, uo, count, name, lo, hi))
+        specs.append((st.vpack(chunk_start), st.vpack(o), name, lo, hi))
         count, lo, hi = 0, None, None
 
-    for o, _, ref_id, pos0, end0 in _record_spans(st, off):
+    for o, block_size, ref_id, pos0, end0 in _record_spans(st, off):
         if cur_ref is not None and (
             ref_id != cur_ref or count == records_per_chunk
         ):
-            _close()
+            _close(o)
             chunk_start = o
         cur_ref = ref_id
         if end0 is not None:
             lo = pos0 if lo is None else min(lo, pos0)
             hi = end0 if hi is None else max(hi, end0)
         count += 1
+        o_end = o + 4 + block_size
         st.trim(chunk_start)
     if count:
-        _close()
+        _close(o_end)
     return specs
-
-
-def _decode_records(
-    st: _BgzfIndexStream, o: int, refs: list[str], v_end: int | None = None
-) -> Iterator[tuple]:
-    """Decode records from offset `o` of an untrimmed stream until it
-    ends or (with v_end) the next record starts at voffset >= v_end."""
-    while st.fill(o + 4) and (v_end is None or st.vpack(o) < v_end):
-        (block_size,) = struct.unpack_from("<i", st.buf, o)
-        if not st.fill(o + 4 + block_size):
-            return
-        # parse straight from the bytearray: a bytes(buf) copy here is
-        # O(records x chunk_bytes) of memcpy (struct.unpack_from and
-        # slicing both read bytearrays directly)
-        row, o = _parse_record(st.buf, o, refs)
-        yield row
-
-
-def decode_bam_range(
-    f, comp_off: int, uoff: int, n_records: int, refs: list[str]
-) -> list[tuple]:
-    """Decode `n_records` records starting at virtual offset
-    (comp_off, uoff) from the seekable binary file `f`, inflating only
-    the members the records span (reads forward past the chunk's last
-    member boundary only when its final record straddles it)."""
-    st = _BgzfIndexStream(f, comp_off)
-    return list(itertools.islice(_decode_records(st, uoff, refs), n_records))
 
 
 def decode_bam_voffset_range(
     f, v_beg: int, v_end: int, refs: list[str]
 ) -> list[tuple]:
-    """Decode records whose START virtual offset lies in
-    [v_beg, v_end): seek to the range's member, inflate forward,
-    track each record's voffset via the member table, stop at v_end.
-    The granularity a .bai/.csi chunk prescribes."""
+    """Decode the records whose START virtual offset lies in
+    [v_beg, v_end) from the seekable binary file `f`: seek to the
+    range's member, inflate forward, track each record's voffset via
+    the member table, stop at v_end. The granularity a .bai/.csi
+    chunk prescribes. A stream that ends mid-record, or ends before
+    v_end, raises ValueError("truncated BAM: ...")."""
     st = _BgzfIndexStream(f, v_beg >> 16)
-    return list(_decode_records(st, v_beg & 0xFFFF, refs, v_end))
+    o, rows = v_beg & 0xFFFF, []
+    while st.fill(o + 4):
+        if st.vpack(o) >= v_end:
+            return rows
+        (block_size,) = struct.unpack_from("<i", st.buf, o)
+        if not st.fill(o + 4 + block_size):
+            break
+        # parse straight from the bytearray: a bytes(buf) copy here is
+        # O(records x chunk_bytes) of memcpy (struct.unpack_from and
+        # slicing both read bytearrays directly)
+        row, o = _parse_record(st.buf, o, refs)
+        rows.append(row)
+    if o == st.total_u and st.members and st.vpack(o) >= v_end:
+        return rows
+    raise ValueError(
+        f"truncated BAM: stream ends at compressed offset {st.comp_off}, "
+        f"inside the voffset range [{v_beg}, {v_end})"
+    )
 
 
 def _local_path(uri: str) -> str:
@@ -496,61 +470,46 @@ def _local_path(uri: str) -> str:
         return unquote(urlparse(uri).path)
     if "://" in uri:
         raise NotImplementedError(
-            f"records_per_chunk BAM splitting needs a seekable LOCAL file, "
-            f"got {uri!r}; on distributed storage use records_per_chunk=None "
-            "(binaryFile decode, one stream per file) or localize the file "
-            "first"
+            f"BAM range decoding needs a seekable LOCAL file, got {uri!r}; "
+            "on distributed storage use read_bam with records_per_chunk="
+            "None (binaryFile decode, one stream per file) or localize the "
+            "file first"
         )
     return uri
 
 
-def _index_files(files: DataFrame, index_fn, records_per_chunk: int,
-                 schema: str) -> DataFrame:
-    """One indexing task per file: rows (path, *spec) for every spec
-    index_fn(f, records_per_chunk) emits, streamed from the open file
-    (constant memory even for one huge BAM)."""
+def _decode_ranges(ranges: DataFrame) -> DataFrame:
+    """The one range-decode task: a (path, v_beg, v_end) relation ->
+    BAM_SCHEMA rows, one decode_bam_voffset_range per row; each task
+    reads a path's header once."""
     import pandas as pd
 
-    columns = [c.split()[0] for c in schema.split(", ")]
-
-    def _index(batches):
+    def _decode(batches):
+        refs: dict[str, list[str]] = {}
         for pdf in batches:
-            rows = []
-            for uri in pdf["path"]:
-                with open(_local_path(uri), "rb") as f:
-                    rows.extend(
-                        (uri, *spec) for spec in index_fn(f, records_per_chunk)
-                    )
-            yield pd.DataFrame(rows, columns=columns)
-
-    return files.mapInPandas(_index, schema)
-
-
-def _decode_chunk_specs(
-    chunks: DataFrame, min_mapping_quality: int | None
-) -> DataFrame:
-    """Decode (path, comp_off, uoff, n_records) chunk specs, one
-    decode_bam_range per spec; each task reads a file's header once."""
-    import pandas as pd
-
-    def _decode_chunks(batches):
-        refs_cache: dict[str, list[str]] = {}
-        for pdf in batches:
-            for uri, comp_off, uoff, n in zip(
-                pdf["path"], pdf["comp_off"], pdf["uoff"], pdf["n_records"]
-            ):
+            for uri, vb, ve in zip(pdf["path"], pdf["v_beg"], pdf["v_end"]):
                 p = _local_path(uri)
-                if p not in refs_cache:
-                    refs_cache[p] = read_bam_refs(p)
+                if p not in refs:
+                    refs[p] = read_bam_refs(p)
                 with open(p, "rb") as f:
-                    rows = decode_bam_range(
-                        f, int(comp_off), int(uoff), int(n), refs_cache[p]
-                    )
-                if min_mapping_quality is not None:
-                    rows = [r for r in rows if r[4] >= min_mapping_quality]
+                    rows = decode_bam_voffset_range(f, int(vb), int(ve), refs[p])
                 yield pd.DataFrame(rows, columns=BAM_COLUMNS)
 
-    return chunks.mapInPandas(_decode_chunks, BAM_SCHEMA)
+    return ranges.mapInPandas(_decode, BAM_SCHEMA)
+
+
+def _bam_files(spark: SparkSession, path: str) -> DataFrame:
+    """binaryFile over `path`. A directory (a sharded write_bam
+    output) is read for its `*.bam` entries only: an indexed sharded
+    directory also holds per-shard `.bai`/`.csi` files, which are not
+    BGZF streams."""
+    reader = spark.read.format("binaryFile")
+    try:
+        if os.path.isdir(_local_path(path)):
+            reader = reader.option("pathGlobFilter", "*.bam")
+    except NotImplementedError:
+        pass  # non-local URI: caller controls the glob in `path`
+    return reader.load(path)
 
 
 def read_bam(
@@ -563,48 +522,37 @@ def read_bam(
     (pos 1-based, qual phred+33 chars) that from_df/align consume.
 
     Default: binaryFile source, one stream decode per file (zero
-    shuffle; right when files >> cores). With ``records_per_chunk``:
-    a per-file indexing task emits BGZF virtual-offset chunk specs,
-    then the decode fans out one task per chunk — one large BAM no
-    longer serializes on a single core.
-
-    When `path` is a directory (a sharded write_bam output), only
-    `*.bam` entries are scanned — an indexed sharded directory also
-    holds per-shard `.bai`/`.csi` files, which are not BGZF streams
-    (round 11)."""
-    import pandas as pd
-
-    reader = spark.read.format("binaryFile")
-    try:
-        if os.path.isdir(_local_path(path)):
-            reader = reader.option("pathGlobFilter", "*.bam")
-    except NotImplementedError:
-        pass  # non-local URI: caller controls the glob in `path`
+    shuffle; right when files >> cores; the only path for non-local
+    URIs). With ``records_per_chunk``: the region manifest's indexing
+    task emits (v_beg, v_end) chunks per file, then the decode fans
+    out one task per chunk - one large BAM no longer serializes on a
+    single core. ``min_mapping_quality`` is one relational filter
+    after either path."""
+    from pyspark.sql import functions as F
 
     if records_per_chunk is None:
-        files = reader.load(path)
+        import pandas as pd
 
         def _decode(batches):
             for pdf in batches:
                 for content in pdf["content"]:
                     _, recs = decode_bam(bytes(content))
-                    rows = [
-                        r
-                        for r in recs
-                        if min_mapping_quality is None or r[4] >= min_mapping_quality
-                    ]
-                    yield pd.DataFrame(rows, columns=BAM_COLUMNS)
+                    yield pd.DataFrame(list(recs), columns=BAM_COLUMNS)
 
-        return files.select("content").mapInPandas(_decode, BAM_SCHEMA)
-
-    # sub-file path: index (per file) -> decode (per chunk)
-    chunks = _index_files(
-        reader.load(path).select("path"), index_bam_chunks,
-        records_per_chunk, _CHUNK_SCHEMA,
-    )
-    # one task per chunk: the decode stage is the CPU cost, spread it
-    chunks = chunks.repartition(spark.sparkContext.defaultParallelism)
-    return _decode_chunk_specs(chunks, min_mapping_quality)
+        df = _bam_files(spark, path).select("content").mapInPandas(
+            _decode, BAM_SCHEMA
+        )
+    else:
+        chunks = bam_region_manifest(spark, path, records_per_chunk)
+        # one task per chunk: the decode stage is the CPU cost, spread it
+        df = _decode_ranges(
+            chunks.select("path", "v_beg", "v_end").repartition(
+                spark.sparkContext.defaultParallelism
+            )
+        )
+    if min_mapping_quality is not None:
+        df = df.filter(F.col("mapq") >= min_mapping_quality)
+    return df
 
 
 BAM_COLUMNS = [
@@ -618,15 +566,30 @@ def bam_region_manifest(
     records_per_chunk: int = 4096,
 ) -> DataFrame:
     """Build the region-chunk manifest for BAM file(s): one indexing
-    task per file emits (path, comp_off, uoff, n_records, rname,
-    min_pos, max_end) — the relational .bai analog. read_bam_region
-    builds it inline; it persists as parquet (partitionBy('rname') for
+    task per file emits (path, v_beg, v_end, rname, min_pos, max_end)
+    from index_bam_region_chunks, streamed from the open file
+    (constant memory even for one huge BAM) - the relational .bai
+    analog. read_bam_region and read_bam(records_per_chunk=N) build it
+    inline; it persists as parquet (partitionBy('rname') for
     partition-pruned probes). For a fetch with no indexing pass, write
     a .bai/.csi and use read_bam_region_bai / read_bam_region_csi."""
-    files = spark.read.format("binaryFile").load(path).select("path")
-    return _index_files(
-        files, index_bam_region_chunks, records_per_chunk,
-        _REGION_CHUNK_SCHEMA,
+    import pandas as pd
+
+    columns = [c.split()[0] for c in _REGION_CHUNK_SCHEMA.split(", ")]
+
+    def _index(batches):
+        for pdf in batches:
+            rows = []
+            for uri in pdf["path"]:
+                with open(_local_path(uri), "rb") as f:
+                    rows.extend(
+                        (uri, *spec)
+                        for spec in index_bam_region_chunks(f, records_per_chunk)
+                    )
+            yield pd.DataFrame(rows, columns=columns)
+
+    return _bam_files(spark, path).select("path").mapInPandas(
+        _index, _REGION_CHUNK_SCHEMA
     )
 
 
@@ -658,9 +621,8 @@ def read_bam_region(
     start: int,
     end: int,
     records_per_chunk: int = 4096,
-    min_mapping_quality: int | None = None,
 ) -> DataFrame:
-    """Indexed region fetch — pysam ``fetch(contig, start, end)``
+    """Indexed region fetch - pysam ``fetch(contig, start, end)``
     semantics (reference from_pysam fetch_args,
     /root/reference/seqtables/core/seqtables.py:226-283): mapped
     reads whose reference span [pos0, pos0 + ref_len) overlaps the
@@ -671,8 +633,8 @@ def read_bam_region(
     the chunk manifest (coordinate-bounded virtual offsets, the .bai
     analog) is filtered to intersecting chunks BEFORE any decode, so
     the decode stage seeks straight to the few BGZF members the
-    window touches. On a coordinate-sorted BAM — the shape every
-    indexed BAM has — chunk bounds are tight and disjoint, so the
+    window touches. On a coordinate-sorted BAM - the shape every
+    indexed BAM has - chunk bounds are tight and disjoint, so the
     pruning ratio is window/file. The exact per-read overlap
     predicate then trims chunk-boundary stragglers. The manifest is
     built inline (one light pass per file)."""
@@ -685,18 +647,14 @@ def read_bam_region(
         & (F.col("min_pos") < int(end))
         & (F.col("max_end") > int(start))
     )
-    pruned = chunks.filter(hit).select(
-        "path", "comp_off", "uoff", "n_records"
-    )
+    pruned = chunks.filter(hit).select("path", "v_beg", "v_end")
     pruned = pruned.repartition(spark.sparkContext.defaultParallelism)
-    decoded = _decode_chunk_specs(pruned, min_mapping_quality)
-    return _overlap_filter(decoded, contig, start, end)
+    return _overlap_filter(_decode_ranges(pruned), contig, start, end)
 
 
 def fetch_voffset_triples(
     spark: SparkSession,
     triples: list[tuple[str, int, int]],
-    refs: list[str],
     contig: str,
     start: int,
     end: int,
@@ -704,10 +662,8 @@ def fetch_voffset_triples(
     """The back half of every index-driven region fetch (.bai, .csi,
     sharded): (path, v_beg, v_end) candidate ranges - from one index
     or unioned from many per-shard indexes - become a one-range-per-
-    task relation; each task seeks, inflates only its members,
-    decodes, and _overlap_filter trims stragglers."""
-    import pandas as pd
-
+    task relation for _decode_ranges, and _overlap_filter trims
+    stragglers."""
     if not triples:
         return local_relation(spark, [], BAM_SCHEMA)
     # a JVM-born LocalRelation: createDataFrame was tried and REVERTED,
@@ -718,18 +674,7 @@ def fetch_voffset_triples(
         [(p, int(cb), int(ce)) for p, cb, ce in triples],
         "path string, v_beg long, v_end long",
     ).repartition(min(len(triples), spark.sparkContext.defaultParallelism))
-
-    def _decode(batches):
-        for pdf in batches:
-            for p, vb, ve in zip(pdf["path"], pdf["v_beg"], pdf["v_end"]):
-                with open(_local_path(p), "rb") as f:
-                    rows_ = decode_bam_voffset_range(
-                        f, int(vb), int(ve), refs
-                    )
-                yield pd.DataFrame(rows_, columns=BAM_COLUMNS)
-
-    decoded = rel.mapInPandas(_decode, BAM_SCHEMA)
-    return _overlap_filter(decoded, contig, start, end)
+    return _overlap_filter(_decode_ranges(rel), contig, start, end)
 
 
 # ------------------------------------------------------ index kinds
@@ -795,9 +740,7 @@ def _read_bam_region_indexed(
         kind, path, index_path or f"{path}.{kind}", ref_id, int(start),
         int(end),
     )
-    return fetch_voffset_triples(
-        spark, triples, refs, contig, int(start), int(end)
-    )
+    return fetch_voffset_triples(spark, triples, contig, int(start), int(end))
 
 
 def _bgzf_block(payload: bytes) -> bytes:
@@ -1154,9 +1097,9 @@ def _sharded_region_plan(
     contig: str,
     start: int,
     end: int,
-) -> tuple[list[tuple[str, int, int]], list[str], dict]:
+) -> tuple[list[tuple[str, int, int]], dict]:
     """Pure (no-Spark) planning half of read_bam_region_sharded:
-    manifest -> (fetch triples, refs, stats). Two-level pruning:
+    manifest -> (fetch triples, stats). Two-level pruning:
 
     1. MANIFEST prune: a shard whose recorded coordinate extent
        [(first_ref, first_pos), (last_ref, last_end)) does not
@@ -1185,15 +1128,15 @@ def _sharded_region_plan(
     with open(mpath) as mf:
         entries = json.load(mf)
     if not entries:
-        return [], [], {"shards_total": 0, "shards_after_manifest": 0,
-                        "shards_scanned": 0}
+        return [], {"shards_total": 0, "shards_after_manifest": 0,
+                    "shards_scanned": 0}
     base_dir = _local_path(path)
     refs = read_bam_refs(os.path.join(base_dir, entries[0]["path"]))
     try:
         ref_id = refs.index(contig)
     except ValueError:
-        return [], refs, {"shards_total": len(entries),
-                          "shards_after_manifest": 0, "shards_scanned": 0}
+        return [], {"shards_total": len(entries),
+                    "shards_after_manifest": 0, "shards_scanned": 0}
 
     start, end = int(start), int(end)
     survivors = []
@@ -1231,7 +1174,7 @@ def _sharded_region_plan(
         if shard_triples:
             scanned += 1
             triples.extend(shard_triples)
-    return triples, refs, {
+    return triples, {
         "shards_total": len(entries),
         "shards_after_manifest": len(survivors),
         "shards_scanned": scanned,
@@ -1255,7 +1198,5 @@ def read_bam_region_sharded(
     files. Same result contract as read_bam_region /
     read_bam_region_bai / read_bam_region_csi on the assembled
     equivalent (pinned in tests/test_round11_ops.py)."""
-    triples, refs, _ = _sharded_region_plan(path, contig, int(start), int(end))
-    return fetch_voffset_triples(
-        spark, triples, refs, contig, int(start), int(end)
-    )
+    triples, _ = _sharded_region_plan(path, contig, int(start), int(end))
+    return fetch_voffset_triples(spark, triples, contig, int(start), int(end))

@@ -17,33 +17,6 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 
-def stream_to_parquet(
-    reads_stream: DataFrame,
-    out_path: str,
-    checkpoint: str,
-    process_fn=None,
-) -> StreamingQuery:
-    """foreachBatch sink: apply an arbitrary batch transform (any
-    operator in this package) per micro-batch and write to parquet.
-
-    foreachBatch alone is only at-least-once (a crash between the
-    write and the checkpoint commit replays the epoch); writing each
-    epoch to its own partition directory with OVERWRITE makes the
-    replay idempotent - the re-run clobbers the half-written epoch
-    instead of appending it twice. Readers just read out_path (the
-    epoch column is an ordinary partition column)."""
-
-    def _write(batch_df: DataFrame, epoch_id: int) -> None:
-        out = process_fn(batch_df) if process_fn else batch_df
-        out.write.mode("overwrite").parquet(f"{out_path}/epoch={epoch_id}")
-
-    return (
-        reads_stream.writeStream.foreachBatch(_write)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-
-
 def windowed_event_counts(
     events_stream: DataFrame,
     ts_col: str = "ts",
@@ -266,8 +239,8 @@ def streaming_near_dup_with_index(
 
     Per epoch N, DF(id_new, id_corpus) lands at pairs_path/epoch=N
     with OVERWRITE - a crash between write and checkpoint commit
-    replays the epoch idempotently (same contract as
-    stream_to_parquet). The index append is NOT idempotent under
+    replays the epoch idempotently (the re-run clobbers the
+    half-written epoch directory). The index append is NOT idempotent under
     replay: a replayed epoch appends its band keys twice. That is
     deliberate - duplicate index rows cannot create wrong pairs
     (incremental_near_dup_pairs distincts) or miss any, they only

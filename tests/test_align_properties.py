@@ -106,41 +106,54 @@ def read_batches(draw):
 @given(batch=read_batches(), win_lo=st.integers(1, 8), win_width=st.integers(0, 30))
 @settings(max_examples=120, deadline=None)
 def test_align_batch_np_matches_align_read(batch, win_lo, win_width):
-    """The vectorized numpy kernel is value- AND order-identical to
-    align_read on arbitrary batches (including '*' cigars)."""
+    """The vectorized numpy kernel (_align_core over flat byte buffers)
+    is value-identical to align_read on arbitrary batches (including
+    '*' cigars), and its insertion records come back per read in
+    forward cigar order, the reverse of align_read's."""
     import numpy as np
 
-    from seqtables_spark.sources.align import align_batch_np
+    from seqtables_spark.sources.align import _align_core
 
     rows = [(s, q, p, c) for ((s, q, c), p) in batch]
     rows.append(("ACG", "III", 5, "*"))  # unmapped sentinel row
+
+    def flat(strs):
+        off = np.zeros(len(strs) + 1, np.int64)
+        np.cumsum([len(x) for x in strs], out=off[1:])
+        return np.frombuffer("".join(strs).encode("ascii"), np.uint8), off
+
+    seq_buf, seq_off = flat([r[0] for r in rows])
+    qual_buf, qual_off = flat([r[1] for r in rows])
+    cig_buf, cig_off = flat([r[3] for r in rows])
     mn, mx = win_lo, win_lo + win_width
-    gs, gq, gi = align_batch_np(
-        [r[0] for r in rows],
-        [r[1] for r in rows],
-        np.array([r[2] for r in rows]),
-        [r[3] for r in rows],
-        mn,
-        mx,
+    out_sm, out_qm, (ri, rp, loc, b_u8, q_u8) = _align_core(
+        seq_buf, seq_off[:-1], qual_buf, qual_off[:-1], cig_buf, cig_off,
+        np.array([r[2] for r in rows], np.int64), mn, mx, "-", "!",
     )
+    assert list(ri) == sorted(ri)  # grouped by read
     for i, (s, q, p, c) in enumerate(rows):
         es, eq, ei = align_read(s, q, p, c, mn, mx)
-        assert (gs[i], gq[i]) == (es, eq)
-        assert list(map(tuple, gi[i])) == list(map(tuple, ei))
+        assert (out_sm[i].tobytes().decode(), out_qm[i].tobytes().decode()) == (es, eq)
+        got = [
+            (int(rp[k]), int(loc[k]), chr(b_u8[k]), chr(q_u8[k]))
+            for k in np.flatnonzero(ri == i)
+        ]
+        assert got[::-1] == list(map(tuple, ei))
 
 
 @given(batch=read_batches(), win_lo=st.integers(1, 8), win_width=st.integers(0, 30))
-@settings(max_examples=60, deadline=None)
+@settings(max_examples=120, deadline=None)
 def test_align_record_batch_matches_align_read(batch, win_lo, win_width):
     """The Arrow operator path (zero-copy buffers in and out, the one
     mapInArrow kernel) matches align_read value-for-value, including
-    the '*' qual sentinel and a sliced RecordBatch."""
+    the '*' qual sentinel, a '*' cigar and a sliced RecordBatch."""
     import pyarrow as pa
 
     from seqtables_spark.sources.align import _align_record_batch
 
     rows = [(s, q, p, c) for ((s, q, c), p) in batch]
     rows.append((rows[0][0], "*", 3, rows[0][3]))  # '*' qual sentinel
+    rows.append(("ACG", "III", 5, "*"))  # unmapped sentinel row
     rb = pa.RecordBatch.from_arrays(
         [
             pa.array([str(i) for i in range(len(rows))]),

@@ -113,38 +113,52 @@ def _many_records(n=400):
 
 
 def test_index_bam_chunks_covers_all_records():
-    from seqtables_spark.sources.bam import index_bam_chunks, scan_bgzf_blocks
+    """Every chunk starts on a BGZF member boundary, each chunk's v_end
+    is the next chunk's v_beg, and the chunks hold every record."""
+    import io
+
+    from seqtables_spark.sources.bam import (
+        decode_bam_voffset_range,
+        index_bam_region_chunks,
+        scan_bgzf_blocks,
+    )
 
     data = encode_bam(_many_records(), REFS)
     assert len(scan_bgzf_blocks(data)) > 2  # multi-block file
-    specs = index_bam_chunks(data, records_per_chunk=64)
-    assert sum(n for _, _, n in specs) == 400
+    specs = index_bam_region_chunks(data, records_per_chunk=64)
     assert len(specs) >= 4
     # chunk starts are valid member boundaries
     offs = {o for o, _, _ in scan_bgzf_blocks(data)}
-    assert all(c in offs for c, _, _ in specs)
+    assert all(vb >> 16 in offs for vb, *_ in specs)
+    assert all(a[1] == b[0] for a, b in zip(specs, specs[1:]))
+    refs = [name for name, _ in REFS]
+    f = io.BytesIO(data)
+    counts = [len(decode_bam_voffset_range(f, vb, ve, refs)) for vb, ve, *_ in specs]
+    assert sum(counts) == 400 and max(counts) <= 64
 
 
 def test_decode_bam_range_matches_full_decode(tmp_path):
-    from seqtables_spark.sources.bam import decode_bam_range, index_bam_chunks
+    """Decoding the chunks in order from the file on disk is the full
+    decode."""
+    from seqtables_spark.sources.bam import (
+        decode_bam_voffset_range,
+        index_bam_region_chunks,
+    )
 
-    recs = _many_records()
-    data = encode_bam(recs, REFS)
+    data = encode_bam(_many_records(), REFS)
     p = tmp_path / "big.bam"
     p.write_bytes(data)
     refs, full = decode_bam(data)
     want = list(full)
     got = []
     with open(p, "rb") as f:
-        for comp_off, uoff, n in index_bam_chunks(data, records_per_chunk=64):
-            got.extend(decode_bam_range(f, comp_off, uoff, n, refs))
+        for vb, ve, *_ in index_bam_region_chunks(data, records_per_chunk=64):
+            got.extend(decode_bam_voffset_range(f, vb, ve, refs))
     assert got == want
 
 
 def test_read_bam_split_identical_to_single_task(spark, tmp_path):
     """One large BAM decoded across >=4 tasks == the per-file path."""
-    from seqtables_spark.sources.bam import _CHUNK_SCHEMA  # noqa: F401
-
     recs = _many_records()
     (tmp_path / "big.bam").write_bytes(encode_bam(recs, REFS))
     single = read_bam(spark, str(tmp_path / "big.bam"))
@@ -176,12 +190,16 @@ def test_index_bam_chunks_file_and_bytes_paths_agree(tmp_path):
     specs as the in-memory bytes path."""
     import io
 
-    from seqtables_spark.sources.bam import index_bam_chunks
+    from seqtables_spark.sources.bam import index_bam_region_chunks
 
     data = encode_bam(_many_records(), REFS)
-    want = index_bam_chunks(data, records_per_chunk=64)
-    got = index_bam_chunks(io.BytesIO(data), records_per_chunk=64)
+    want = index_bam_region_chunks(data, records_per_chunk=64)
+    got = index_bam_region_chunks(io.BytesIO(data), records_per_chunk=64)
     assert got == want and len(want) >= 2
+    p = tmp_path / "big.bam"
+    p.write_bytes(data)
+    with open(p, "rb") as f:
+        assert index_bam_region_chunks(f, records_per_chunk=64) == want
 
 
 # ------------------------------------------------ region fetch (round 7)
@@ -202,7 +220,12 @@ def _region_refs(n=3000, stride=3):
 
 
 def test_index_bam_region_chunks_bounds_and_contig_split():
-    from seqtables_spark.sources.bam import index_bam_region_chunks
+    import io
+
+    from seqtables_spark.sources.bam import (
+        decode_bam_voffset_range,
+        index_bam_region_chunks,
+    )
 
     recs = (
         _sorted_records(100, "ref1")
@@ -218,21 +241,25 @@ def test_index_bam_region_chunks_bounds_and_contig_split():
     )
     data = encode_bam(recs, _region_refs(100))
     specs = index_bam_region_chunks(data, records_per_chunk=32)
-    assert sum(s[2] for s in specs) == len(recs)
+    refs = [name for name, _ in _region_refs(100)]
+    f = io.BytesIO(data)
+    decoded = [decode_bam_voffset_range(f, s[0], s[1], refs) for s in specs]
+    assert sum(map(len, decoded)) == len(recs)
     # chunks never span contigs; bounds are 0-based half-open spans
-    for comp_off, uoff, n, rname, lo, hi in specs:
-        assert n <= 32
+    for (v_beg, v_end, rname, lo, hi), rows in zip(specs, decoded):
+        assert v_beg < v_end and len(rows) <= 32
+        assert {r[2] for r in rows} == {rname}
         if rname == "*":
             assert lo is None and hi is None
         else:
             assert lo is not None and hi == hi and lo < hi
-    names = [s[3] for s in specs]
+    names = [s[2] for s in specs]
     assert names == sorted(names, key=lambda x: (x == "*", x))  # grouped
-    r1 = [s for s in specs if s[3] == "ref1"]
-    assert r1[0][4] == 0 and r1[-1][5] == (99 * 3) + 24  # pos0 .. end0
+    r1 = [s for s in specs if s[2] == "ref1"]
+    assert r1[0][3] == 0 and r1[-1][4] == (99 * 3) + 24  # pos0 .. end0
     # bounds of consecutive chunks on a sorted file are disjoint
     for a, b in zip(r1, r1[1:]):
-        assert a[5] <= b[4] + 24  # near-disjoint given stride < read len
+        assert a[4] <= b[3] + 24  # near-disjoint given stride < read len
 
 
 def test_read_bam_region_matches_full_scan_filter(spark, tmp_path):
@@ -296,7 +323,7 @@ def test_region_fetch_reads_fewer_bytes_than_full_scan(tmp_path):
     proportionally) fewer compressed bytes than the full scan,
     because pruned chunks' BGZF members are never touched."""
     from seqtables_spark.sources.bam import (
-        decode_bam_range,
+        decode_bam_voffset_range,
         index_bam_region_chunks,
         _parse_header,
     )
@@ -319,21 +346,21 @@ def test_region_fetch_reads_fewer_bytes_than_full_scan(tmp_path):
     start, end = 900, 1200  # ~100 of 6000 reads
     hit = [
         s for s in specs
-        if s[3] == "ref1" and s[4] < end and s[5] > start
+        if s[2] == "ref1" and s[3] < end and s[4] > start
     ]
     assert 0 < len(hit) < len(specs) // 4  # manifest pruned hard
 
     f = _CountingFile(p)
     rows = []
-    for comp_off, uoff, n, *_ in hit:
-        rows.extend(decode_bam_range(f, comp_off, uoff, n, refs))
+    for v_beg, v_end, *_ in hit:
+        rows.extend(decode_bam_voffset_range(f, v_beg, v_end, refs))
     pruned_bytes = f.bytes_read
     f.close()
 
     f = _CountingFile(p)
     all_rows = []
-    for comp_off, uoff, n, *_ in specs:
-        all_rows.extend(decode_bam_range(f, comp_off, uoff, n, refs))
+    for v_beg, v_end, *_ in specs:
+        all_rows.extend(decode_bam_voffset_range(f, v_beg, v_end, refs))
     full_bytes = f.bytes_read
     f.close()
 
@@ -375,6 +402,27 @@ def test_bam_region_manifest_persist_and_reuse(spark, tmp_path):
     )
 
 
+def test_region_fetches_on_truncated_bam_are_loud(spark, tmp_path):
+    """A BAM cut at a BGZF member boundary (here also a record
+    boundary, so inflation sees nothing wrong) must fail both the
+    .bai fetch, whose index was built before the cut, and the manifest
+    fetch, whose index pass walks the cut file - never return fewer
+    rows."""
+    from seqtables_spark.sources.bai import read_bam_region_bai, write_bai
+    from seqtables_spark.sources.bam import read_bam_region, scan_bgzf_blocks
+
+    p = tmp_path / "cut.bam"
+    data = encode_bam(_sorted_records(6000), _region_refs(6000))
+    blocks = scan_bgzf_blocks(data)
+    assert len(blocks) == 10
+    p.write_bytes(data)
+    write_bai(str(p))
+    p.write_bytes(data[: blocks[5][0]])
+    for fetch in (read_bam_region_bai, read_bam_region):
+        with pytest.raises(Exception, match="truncated BAM"):
+            fetch(spark, str(p), "ref1", 0, 10**6).collect()
+
+
 def test_region_fetch_property_random_cigars_and_windows():
     """Property (codec-level, no Spark): for random coordinate-sorted
     records with mixed CIGARs (I/S consume no reference; M/D/N/=/X
@@ -386,7 +434,7 @@ def test_region_fetch_property_random_cigars_and_windows():
     import re as _re
 
     from seqtables_spark.sources.bam import (
-        decode_bam_range,
+        decode_bam_voffset_range,
         index_bam_region_chunks,
         _parse_header,
     )
@@ -431,10 +479,16 @@ def test_region_fetch_property_random_cigars_and_windows():
         )
 
     specs = index_bam_region_chunks(data, records_per_chunk=37)
-    assert sum(s[2] for s in specs) == len(recs)
     refs = _parse_header(_gz.decompress(data))[0]
 
     import io
+
+    # every record is decoded exactly once
+    f = io.BytesIO(data)
+    assert [
+        r[0] for vb, ve, *_ in specs
+        for r in decode_bam_voffset_range(f, vb, ve, refs)
+    ] == [r[0] for r in recs]
 
     for _ in range(25):
         contig = rng.choice(contigs)
@@ -442,12 +496,12 @@ def test_region_fetch_property_random_cigars_and_windows():
         end = start + rng.randint(1, 800)
         hit = [
             s for s in specs
-            if s[3] == contig and s[4] < end and s[5] > start
+            if s[2] == contig and s[3] < end and s[4] > start
         ]
         f = io.BytesIO(data)
         got = []
-        for comp_off, uoff, n, *_ in hit:
-            for r in decode_bam_range(f, comp_off, uoff, n, refs):
+        for v_beg, v_end, *_ in hit:
+            for r in decode_bam_voffset_range(f, v_beg, v_end, refs):
                 pos0 = r[3] - 1
                 end0 = pos0 + max(ref_len(r[5]), 1)
                 if r[2] == contig and pos0 < end and end0 > start:

@@ -97,6 +97,8 @@ def test_planaudit_artifact_invariants():
     art = json.load(open(path))
     assert art["violations"] == []
     assert art["n_queries"] >= 154
+    # the digest selfcheck.py compares to tell a stale artifact
+    assert len(art["sources_sha256"]) == 64
     t = art["totals"]
     assert t["cartesian"] == 0
     assert t["py_row_udf"] == 0

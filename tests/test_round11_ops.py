@@ -111,8 +111,7 @@ def test_untouched_shards_are_never_read(spark, tmp_path):
     # delete the pruned shards' indexes: planning must not need them
     for p in pruned:
         os.remove(os.path.join(path, p + ".bai"))
-    triples, refs, stats = _sharded_region_plan(path, "ref1", 150, 400)
-    assert refs == ["ref1"]
+    triples, stats = _sharded_region_plan(path, "ref1", 150, 400)
     assert stats == {
         "shards_total": 4, "shards_after_manifest": 2, "shards_scanned": 2
     }
@@ -140,7 +139,7 @@ def test_sharded_region_unknown_contig_is_empty(spark, tmp_path):
     write_bam(_src(spark, n=60), path, REFS, single_file=False, index="bai")
     got = read_bam_region_sharded(spark, path, "refX", 0, 10**6)
     assert got.count() == 0
-    triples, _, stats = _sharded_region_plan(path, "refX", 0, 10**6)
+    triples, stats = _sharded_region_plan(path, "refX", 0, 10**6)
     assert triples == [] and stats["shards_scanned"] == 0
 
 

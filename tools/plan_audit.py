@@ -233,6 +233,28 @@ def strategy_deltas(audits_by_sf: dict) -> list[str]:
     return deltas
 
 
+def sources_sha256(repo_root: str) -> str:
+    """sha256 over the sorted relative paths and bytes of
+    __spark_entry__.py and seqtables_spark/**/*.py - the sources whose
+    plans the artifact records. selfcheck.py recomputes it to tell a
+    stale PLANAUDIT.json from a current one; git keeps no mtimes."""
+    import hashlib
+
+    rels = ["__spark_entry__.py"]
+    for dirpath, _dirs, files in os.walk(os.path.join(repo_root, "seqtables_spark")):
+        rels.extend(
+            os.path.relpath(os.path.join(dirpath, f), repo_root).replace(os.sep, "/")
+            for f in files if f.endswith(".py")
+        )
+    h = hashlib.sha256()
+    for rel in sorted(rels):
+        with open(os.path.join(repo_root, rel), "rb") as fh:
+            data = fh.read()
+        h.update(f"{rel}\0{len(data)}\0".encode())
+        h.update(data)
+    return h.hexdigest()
+
+
 def main() -> int:
     # sf_dir may be a comma-separated list (round 11, verdict #5):
     # the FIRST is the primary audit (back-compat artifact shape),
@@ -242,11 +264,13 @@ def main() -> int:
     # plan build because fixture-writing queries materialize eagerly)
     sf_spec = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     sf_dirs = [s for s in sf_spec.split(",") if s]
+    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     out_path = sys.argv[2] if len(sys.argv) > 2 else os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANAUDIT.json"
+        repo_root, "PLANAUDIT.json"
     )
     from seqtables_spark import get_spark
 
+    digest = sources_sha256(repo_root)  # the sources this run audits
     spark = get_spark(app_name="plan_audit", cores=8, shuffle_partitions=8)
     audits_by_sf = {d: build_audit(spark, d) for d in sf_dirs}
     audit = audits_by_sf[sf_dirs[0]]
@@ -270,6 +294,7 @@ def main() -> int:
         "strategy_deltas": deltas,
         "bnlj_allowed": sorted(BNLJ_ALLOWED),
         "single_part_window_bounded": sorted(SINGLE_PART_WINDOW_BOUNDED),
+        "sources_sha256": digest,
         "queries": audit,
         "queries_by_sf": {
             d: {

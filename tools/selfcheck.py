@@ -393,37 +393,24 @@ def main():
         if ledger_bad:
             return 1
 
-    # round 11 (ADVICE): PLANAUDIT.json can go stale relative to the
-    # code — a new plan violation then passes CI until someone
-    # regenerates it. A FULL selfcheck (the round gate) fails when any
-    # query source is newer than the committed artifact; filtered runs
+    # PLANAUDIT.json can go stale relative to the code - a new plan
+    # violation then passes CI until someone regenerates it. The
+    # artifact records a digest of the sources it audited
+    # (plan_audit.sources_sha256); a FULL selfcheck (the round gate)
+    # fails when the current sources hash differently, filtered runs
     # only warn (regenerating mid-iteration would be churn).
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     pa_path = os.path.join(repo_root, "PLANAUDIT.json")
     if os.path.exists(pa_path):
-        pa_mtime = os.path.getmtime(pa_path)
-        newest, newest_path = 0.0, None
-        srcs = [os.path.join(repo_root, "__spark_entry__.py")]
-        for dirpath, _dirs, files in os.walk(
-            os.path.join(repo_root, "seqtables_spark")
-        ):
-            srcs.extend(
-                os.path.join(dirpath, f) for f in files if f.endswith(".py")
-            )
-        for p in srcs:
-            m = os.path.getmtime(p)
-            if m > newest:
-                newest, newest_path = m, p
-        # 60 s slack: a git clone/checkout writes every file within a
-        # couple of seconds, in arbitrary order, so a committed-fresh
-        # PLANAUDIT.json can land an instant BEFORE a source file and
-        # false-fail the gate on a pristine tree. Genuine staleness
-        # (editing a query after the last regenerate) is minutes+.
-        if newest > pa_mtime + 60:
+        from plan_audit import sources_sha256
+
+        with open(pa_path) as fh:
+            recorded = json.load(fh).get("sources_sha256")
+        if recorded != sources_sha256(repo_root):
             msg = (
-                "PLANAUDIT.json is STALE: "
-                f"{os.path.relpath(newest_path, repo_root)} is newer — "
-                "regenerate with `python tools/plan_audit.py`"
+                "PLANAUDIT.json is STALE: __spark_entry__.py or "
+                "seqtables_spark/ changed since it was built - regenerate "
+                "with `python tools/plan_audit.py`"
             )
             if only:
                 print(f"WARNING: {msg}")
