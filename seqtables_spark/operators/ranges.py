@@ -63,6 +63,9 @@ def point_in_interval_join(
     # empty interval guard: sequence() auto-steps DOWN when hi < lo,
     # which would fabricate bins for a [lo, hi<=lo) interval
     intervals = intervals.filter(F.col(hi_col) > F.col(lo_col))
+    # aliased sides: when points and intervals derive from one table
+    # their key columns are one attribute, and `pt[k] == iv[k]` would
+    # be the trivially true `k == k`
     iv = intervals.select(
         *on,
         F.explode(
@@ -77,11 +80,18 @@ def point_in_interval_join(
             for c in intervals.columns
             if c not in on
         ],
-    )
-    pt = points.withColumn(bin_c, F.floor(F.col(point_col) / w))
-    cond = [pt[bin_c] == iv[bin_c]] + [pt[k] == iv[k] for k in on]
-    contained = (F.col(_out(lo_col)) <= pt[point_col]) & (
-        pt[point_col] < F.col(_out(hi_col))
+    ).alias("iv")
+    pt = points.withColumn(bin_c, F.floor(F.col(point_col) / w)).alias("pt")
+
+    def _pt(c: str):
+        return F.col(f"pt.`{c}`")
+
+    def _iv(c: str):
+        return F.col(f"iv.`{c}`")
+
+    cond = [_pt(k) == _iv(k) for k in [bin_c, *on]]
+    contained = (_iv(_out(lo_col)) <= _pt(point_col)) & (
+        _pt(point_col) < _iv(_out(hi_col))
     )
     if how == "inner":
         joined = pt.join(iv, cond, "inner").filter(contained)
@@ -91,8 +101,8 @@ def point_in_interval_join(
             iv, cond + [contained], "left"
         )
     return joined.select(
-        *[pt[c] for c in points.columns],
-        *[F.col(_out(c)) for c in intervals.columns if c not in on],
+        *[_pt(c) for c in points.columns],
+        *[_iv(_out(c)) for c in intervals.columns if c not in on],
     )
 
 

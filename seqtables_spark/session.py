@@ -11,6 +11,18 @@ At 100 TB the same settings hold conceptually: AQE picks shuffle
 parallelism from runtime statistics, so we do not hand-tune
 ``spark.sql.shuffle.partitions`` per query; we only give a sane
 upper bound for the local harness.
+
+Python tasks run under ``seqtables_spark.worker_daemon``
+(``spark.python.daemon.module``), with the package root prepended to
+``spark.executorEnv.PYTHONPATH`` so the daemon imports from any driver
+cwd. Every Python task calls ``importlib.invalidate_caches()``, and on
+CPython before 3.13 that makes each cached zipimporter re-read its whole
+archive directory: ~15 importers over ``pyspark.zip`` plus one over the
+spark-core jar, about 0.1 s per task before any row moves. The daemon
+runs ``pyspark.daemon`` unchanged after installing a guard that re-reads
+an archive only when its mtime or size changed. An identity
+``mapInArrow`` over 8 partitions fell from 0.48 s to 0.17 s (SCALING.md,
+"Python task fixed cost"). ``extra_conf`` may override either key.
 """
 
 from __future__ import annotations
@@ -18,6 +30,7 @@ from __future__ import annotations
 import os
 from collections.abc import Iterable, Sequence
 
+from pyspark import SparkConf
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -46,6 +59,8 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.python.daemon.module", "seqtables_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _executor_pythonpath())
     )
     if extra_conf:
         for k, v in extra_conf.items():
@@ -53,6 +68,18 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _executor_pythonpath() -> str:
+    """``spark.executorEnv.PYTHONPATH`` with this package's root first,
+    so the worker daemon imports from any driver cwd, then any value
+    the JVM this process already launched carries (an earlier
+    session's, or spark-defaults.conf's). Spark appends the driver's
+    own ``PYTHONPATH`` to the workers' path by itself."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    have = SparkConf().get("spark.executorEnv.PYTHONPATH", "")
+    rest = [p for p in have.split(os.pathsep) if p and p != root]
+    return os.pathsep.join([root, *rest])
 
 
 BOUNDARY_KEY = "spark.seqtables.boundary"

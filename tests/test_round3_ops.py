@@ -184,6 +184,35 @@ def test_point_in_interval_left_join_keeps_unmatched(spark):
     assert res == {1: 7, 2: None}
 
 
+def test_click_attribution_join_keys_compare_distinct_attributes(spark):
+    """Clicks and purchases are both filters of one events relation, so
+    their user_id is one attribute: the range join must tell the sides
+    apart itself, not through Spark's self-join condition rewrite."""
+    import re
+
+    from __spark_entry__ import q_click_attribution
+
+    key = "spark.sql.selfJoinAutoResolveAmbiguity"
+    before = spark.conf.get(key, None)
+    try:
+        for rewrite in ("true", "false"):
+            spark.conf.set(key, rewrite)
+            plan = q_click_attribution(
+                spark, "/root/testdata/sf0.001"
+            )._jdf.queryExecution().analyzed().toString()
+            (join,) = [ln for ln in plan.splitlines() if "Join Inner" in ln]
+            pairs = re.findall(r"(\w+)#(\d+)L? = (\w+)#(\d+)L?", join)
+            assert {(a, c) for a, _, c, _ in pairs} == {
+                ("__range_bin__", "__range_bin__"), ("user_id", "user_id")
+            }, join
+            assert all(x != y for _, x, _, y in pairs), join
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
+
+
 # ------------------------------------------------------------ KMV
 
 def _phash(s: str) -> int:
